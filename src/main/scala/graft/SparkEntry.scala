@@ -1138,7 +1138,7 @@ object SparkEntry {
     "q10_latest_per_key" -> ((s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_type"),
         col("event_id"), col("value"), unix_timestamp(col("ts")).as("ts_epoch"))
-      Upsert.latestPerKey(ev, Seq("user_id", "event_type"), "event_id")
+      Upsert.latestPerKey(ev, Seq("user_id", "event_type"), col("event_id"))
     }),
 
     // F1 — GTFS >24h clock normalization (UTC; tz-full variant in tests).

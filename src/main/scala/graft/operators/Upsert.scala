@@ -14,22 +14,26 @@ import org.apache.spark.sql.functions._
   * S10 (`reference/scripts/historical_extractor.py:85-88`): `ON CONFLICT DO
   * NOTHING` — insert only keys not already present.
   *
-  * Both are pure joins — no driver-side loops — so they scale with the
-  * shuffle: the full-outer / anti join hash-partitions both sides on the
-  * key. At 100 TB the target snapshot rewrite is the standard
-  * parquet-without-ACID pattern (with a table format it would be a MERGE;
-  * the join shape below is exactly what Delta/Iceberg execute underneath).
+  * Neither loops on the driver, so both scale with the shuffle. S9 is
+  * one keyed aggregation over `target ∪ updates`: a single exchange
+  * hash-partitions the union on the key and each group resolves its
+  * target row and newest update row in one pass. S10 is a left-anti join
+  * that hash-partitions both sides on the key. At 100 TB the target
+  * snapshot rewrite is the standard parquet-without-ACID pattern; with a
+  * table format it would be a MERGE.
   */
 object Upsert {
 
   /** Keep the newest row per key (deterministic pre-dedup for S9: the feed
-    * may repeat a key across entities — SURVEY.md §7.4). `orderCol` must be
-    * totally ordered per key (e.g. a monotonically increasing id). */
-  def latestPerKey(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val dataCols = df.columns.filterNot(keys.contains)
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(struct(dataCols.toIndexedSeq.map(col): _*),
-        col(orderCol)).as("__latest"))
+    * may repeat a key across entities — SURVEY.md §7.4). `order` must be
+    * totally ordered per key (e.g. a monotonically increasing id); it is
+    * evaluated in a projection over `df`, so a nondeterministic id works. */
+  def latestPerKey(df: DataFrame, keys: Seq[String], order: Column): DataFrame = {
+    val dataCols = df.columns.filterNot(keys.contains).toSeq
+    df.select(keys.map(col) :+ struct(dataCols.map(col): _*).as("__row") :+
+        order.as("__ord"): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(col("__row"), col("__ord")).as("__latest"))
       .select(keys.map(col) ++ dataCols.map(c => col(s"__latest.$c").as(c)): _*)
   }
 
@@ -38,31 +42,41 @@ object Upsert {
     * preserved from the target for matched keys. Unmatched update keys are
     * inserted; unmatched target keys pass through.
     *
-    * Requires `target` and `updates` to share a schema and each hold at most
-    * one row per key (use [[latestPerKey]] first otherwise).
+    * One aggregation over `target ∪ updates`, grouped by `keys` (grouping
+    * is null-safe, like `<=>`: a key with a NULL part matches its stored
+    * row). Each input row carries two source-tagged orderings, and
+    * `max_by` skips NULL orderings, so per key one `max_by` picks the
+    * target row and another picks the update row ranked highest by
+    * `order`. With `order` set, `updates` may repeat a key and the newest
+    * row wins, so no [[latestPerKey]] pass (and no second shuffle) is
+    * needed. `order` is evaluated in a projection over `updates`.
+    *
+    * Requires `target` and `updates` to share column names, `target` to
+    * hold at most one row per key, and `updates` too when `order` is None.
     */
   def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String],
              compareCols: Seq[String],
-             createdCol: Option[String] = None): DataFrame = {
+             createdCol: Option[String] = None,
+             order: Option[Column] = None): DataFrame = {
     require(target.columns.sameElements(updates.columns),
       "target/updates schemas must match")
     val dataCols = target.columns.filterNot(keys.contains).toSeq
-    val t = target.select(
-      (keys.map(col) ++ dataCols.map(col) :+ lit(true).as("__t")): _*).as("t")
-    val u = updates.select(
-      (keys.map(col) ++ dataCols.map(col) :+ lit(true).as("__u")): _*).as("u")
-    val cond: Column = keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _)
-    val j = t.join(u, cond, "full_outer")
-    val tPresent = col("t.__t").isNotNull
-    val uPresent = col("u.__u").isNotNull
-    val changed = compareCols.map(c => !(col(s"t.$c") <=> col(s"u.$c"))).reduce(_ || _)
+    def tagged(df: DataFrame, tOrd: Column, uOrd: Column): DataFrame =
+      df.select(keys.map(col) :+ struct(dataCols.map(col): _*).as("__row") :+
+        tOrd.as("__t_ord") :+ uOrd.as("__u_ord"): _*)
+    val resolved = tagged(target, lit(0), lit(null))
+      .union(tagged(updates, lit(null).cast("int"), order.getOrElse(lit(0))))
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(col("__row"), col("__t_ord")).as("__t"),
+        max_by(col("__row"), col("__u_ord")).as("__u"))
+    val tPresent = col("__t").isNotNull
+    val uPresent = col("__u").isNotNull
+    val changed = compareCols.map(c => !(col(s"__t.$c") <=> col(s"__u.$c"))).reduce(_ || _)
     val takeUpdate = uPresent && (!tPresent || changed)
-    val out = keys.map(k => coalesce(col(s"t.$k"), col(s"u.$k")).as(k)) ++
-      dataCols.map { c =>
-        if (createdCol.contains(c)) coalesce(col(s"t.$c"), col(s"u.$c")).as(c)
-        else when(takeUpdate, col(s"u.$c")).otherwise(col(s"t.$c")).as(c)
-      }
-    j.select(out: _*)
+    resolved.select(keys.map(col) ++ dataCols.map { c =>
+      if (createdCol.contains(c)) coalesce(col(s"__t.$c"), col(s"__u.$c")).as(c)
+      else when(takeUpdate, col(s"__u.$c")).otherwise(col(s"__t.$c")).as(c)
+    }: _*)
   }
 
   /** Snapshot diff (CDC extract) — the read-side inverse of [[upsert]]:

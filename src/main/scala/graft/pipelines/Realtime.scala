@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * default in the reference, README.md:131-132), attach the single weather
   * observation (S5 — one fetched JSON document per run, broadcast as
   * literal columns after parsing), stamp created/updated with one run-level
-  * instant (F12), dedup repeated keys to the latest entity, and S9-merge
-  * into the keyed snapshot.
+  * instant (F12), and S9-merge into the keyed snapshot, keeping the latest
+  * of repeated keys.
   *
   * The reference does all of this row-at-a-time into Postgres (one
   * statement per row, its acknowledged bottleneck); here the whole batch
@@ -57,26 +57,32 @@ object Realtime {
         stamp.as("updated_at"))
   }
 
-  /** One full micro-batch: observations → latest-per-key dedup (the feed
-    * can repeat a key across entities, SURVEY.md §7.4) → S9 conditional
-    * merge into the existing snapshot (None = first run). Update detection
-    * compares the predicted times, as the reference's ON CONFLICT ... WHERE
-    * clause does (realtime_extractor.py:208-218). */
-  def microBatch(feeds: Dataset[Array[Byte]], weatherJson: Option[String],
-                 target: Option[DataFrame])
-                (implicit s: SparkSession): DataFrame = {
-    val keys = Seq("trip_id", "start_date", "stop_sequence", "stop_id")
-    // Feed order breaks key ties (the reference's row-at-a-time loop makes
-    // the LAST entity win): monotonically_increasing_id preserves the
-    // flatMap's within-feed row order.
-    val obs = observations(feeds, weatherJson)
-      .withColumn("__seq", monotonically_increasing_id())
-    val latest = Upsert.latestPerKey(obs, keys, "__seq").drop("__seq")
+  /** The trip_updates key: the reference's ON CONFLICT target. */
+  val keys: Seq[String] = Seq("trip_id", "start_date", "stop_sequence", "stop_id")
+
+  /** The predicted times: a matched key is updated only when one changed. */
+  val compareCols: Seq[String] = Seq("arrival_time", "departure_time")
+
+  /** S9 conditional merge of one run's [[observations]] into the existing
+    * snapshot (None = first run), in one keyed aggregation. The feed can
+    * repeat a key across entities (SURVEY.md §7.4): feed order breaks the
+    * tie, as the reference's row-at-a-time loop makes the LAST entity win —
+    * monotonically_increasing_id preserves the flatMap's within-feed row
+    * order. Update detection compares the predicted times, as the
+    * reference's ON CONFLICT ... WHERE clause does
+    * (realtime_extractor.py:208-218). */
+  def merge(obs: DataFrame, target: Option[DataFrame]): DataFrame = {
+    val feedOrder = monotonically_increasing_id()
     target match {
-      case Some(tgt) => Upsert.upsert(tgt, latest, keys,
-        compareCols = Seq("arrival_time", "departure_time"),
-        createdCol = Some("created_at"))
-      case None => latest
+      case Some(tgt) => Upsert.upsert(tgt, obs, keys,
+        compareCols, createdCol = Some("created_at"), order = Some(feedOrder))
+      case None => Upsert.latestPerKey(obs, keys, feedOrder)
     }
   }
+
+  /** One full micro-batch: [[observations]] → [[merge]]. */
+  def microBatch(feeds: Dataset[Array[Byte]], weatherJson: Option[String],
+                 target: Option[DataFrame])
+                (implicit s: SparkSession): DataFrame =
+    merge(observations(feeds, weatherJson), target)
 }

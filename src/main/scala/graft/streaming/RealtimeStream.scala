@@ -1,11 +1,15 @@
 package graft.streaming
 
 import graft.operators.Upsert
+import graft.pipelines.Realtime
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** §2.9 — the reference's realtime path as Structured Streaming. The
   * reference hand-rolls a micro-batch stream: cron fires every minute,
@@ -23,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   * while [[mergeBatchPartitioned]] partitions the snapshot by a key
   * column and rewrites only the partitions the batch touches — the
   * 100 TB shape. With a table format (Delta/Iceberg) both collapse to a
-  * MERGE — the join shape is identical.
+  * MERGE.
   */
 object RealtimeStream {
 
@@ -38,6 +42,39 @@ object RealtimeStream {
     if (fs.exists(tgt)) Some(tgt)
     else if (fs.exists(old)) Some(old)
     else None
+  }
+
+  /** Read the snapshot directory `dir` with `schema` pinned, so the read
+    * starts no schema-inference job. A pinned parquet read would turn a
+    * column the files lack into NULLs (and drop one they add), so first
+    * every data file's footer is checked against `schema` on the driver —
+    * no Spark job — and any drift fails the batch, naming the columns. */
+  def readSnapshot(spark: SparkSession, fs: FileSystem, dir: Path,
+                   schema: StructType): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    fs.listStatus(dir).filter(st => st.isFile &&
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      .foreach { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val found = try ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, reader.getFooter), converter)
+        finally reader.close()
+        val have = found.fields.map(f => f.name -> f.dataType).toMap
+        val missing = schema.fieldNames.filterNot(have.contains)
+        val extra = found.fieldNames.filterNot(schema.fieldNames.contains)
+        val retyped = schema.fields.collect { case f if have.get(f.name)
+            .exists(h => !DataType.equalsStructurally(h, f.dataType,
+              ignoreNullability = true)) =>
+          s"${f.name}: ${have(f.name).simpleString} " +
+            s"(expected ${f.dataType.simpleString})" }
+        if (missing.nonEmpty || extra.nonEmpty || retyped.nonEmpty)
+          throw new IllegalStateException(s"snapshot schema drift in " +
+            s"${st.getPath}: missing [${missing.mkString(", ")}], " +
+            s"unexpected [${extra.mkString(", ")}], " +
+            s"retyped [${retyped.mkString(", ")}]")
+      }
+    spark.read.schema(schema).parquet(dir.toString)
   }
 
   /** Crash-atomic promote of the `.next` snapshot: retire the live dir to
@@ -87,20 +124,20 @@ object RealtimeStream {
     }
   }
 
-  /** One micro-batch: dedup the batch to latest-per-key, S9-merge it into
-    * the snapshot at `targetPath`, atomically swap the new snapshot in. */
+  /** One micro-batch: S9-merge the batch into the snapshot at
+    * `targetPath` (the newest `orderCol` row wins among repeated keys),
+    * atomically swap the new snapshot in. */
   def mergeBatch(batch: DataFrame, targetPath: String, keys: Seq[String],
                  compareCols: Seq[String], orderCol: String,
                  createdCol: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val fs = new Path(targetPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val updates = Upsert.latestPerKey(batch, keys, orderCol)
     val merged = snapshotPath(fs, targetPath) match {
       case Some(cur) =>
-        Upsert.upsert(spark.read.parquet(cur.toString), updates, keys,
-          compareCols, createdCol)
-      case None => updates
+        Upsert.upsert(readSnapshot(spark, fs, cur, batch.schema), batch, keys,
+          compareCols, createdCol, order = Some(col(orderCol)))
+      case None => Upsert.latestPerKey(batch, keys, col(orderCol))
     }
     // Writing .next executes the plan (including the read of the current
     // snapshot) before the swap touches the live directory.
@@ -139,13 +176,12 @@ object RealtimeStream {
   /** Partition-scoped S9 merge — the 100 TB shape of [[mergeBatch]]. The
     * snapshot is stored partitioned by `partitionCol` (a KEY column, so a
     * key can never migrate between partitions); each micro-batch
-    *   1. dedups to latest-per-key,
-    *   2. collects the batch's distinct partition values (bounded: a
+    *   1. collects the batch's distinct partition values (bounded: a
     *      1-minute GTFS batch spans a handful of service dates),
-    *   3. reads ONLY those partitions of the snapshot (pruned at the file
+    *   2. reads ONLY those partitions of the snapshot (pruned at the file
     *      listing — [[readTouchedPartitions]]),
-    *   4. merges, and
-    *   5. dynamic-partition-overwrites exactly the touched partitions.
+    *   3. merges, keeping the newest `orderCol` row of repeated keys, and
+    *   4. dynamic-partition-overwrites exactly the touched partitions.
     * Write amplification is O(touched partitions), not O(snapshot): a
     * 1 GB batch against a 100 TB snapshot rewrites ~the partitions the
     * batch touches, where [[mergeBatch]] would rewrite all 100 TB.
@@ -158,24 +194,24 @@ object RealtimeStream {
     * half-committed (the known dynamic-overwrite granularity — a table
     * format's metadata commit is the production fix), and the streaming
     * checkpoint replays the batch, which heals it because the merge is
-    * idempotent (latest-per-key pre-dedup + change-predicated upsert —
+    * idempotent (newest-per-key resolution + change-predicated upsert —
     * RealtimeStreamSpec replays a batch twice and hashes the snapshot).
     */
   def mergeBatchPartitioned(batch: DataFrame, targetPath: String,
                             keys: Seq[String], compareCols: Seq[String],
                             orderCol: String, partitionCol: String,
                             createdCol: Option[String] = None): Unit =
-    mergePartitioned(Upsert.latestPerKey(batch, keys, orderCol), targetPath,
-      keys, compareCols, partitionCol, createdCol)
+    mergePartitioned(batch, targetPath, keys, compareCols, partitionCol,
+      createdCol, col(orderCol))
 
-  /** The partition-scoped merge core over an ALREADY key-deduped updates
-    * frame (at most one row per key) — [[mergeBatchPartitioned]] minus
-    * the latest-per-key pass, for callers that dedup with their own
-    * ordering (the E1 feed path orders by within-feed entity position). */
+  /** The partition-scoped merge core with the tie-break as a column
+    * expression — [[mergeBatchPartitioned]] for callers whose order is not
+    * a stored column (the E1 feed path orders by within-feed entity
+    * position). */
   def mergePartitioned(updates: DataFrame, targetPath: String,
                        keys: Seq[String], compareCols: Seq[String],
-                       partitionCol: String,
-                       createdCol: Option[String] = None): Unit = {
+                       partitionCol: String, createdCol: Option[String],
+                       order: Column): Unit = {
     require(keys.contains(partitionCol),
       s"partitionCol $partitionCol must be a key column — a non-key " +
         "partition column could change under a key, stranding the old row " +
@@ -185,7 +221,8 @@ object RealtimeStream {
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new Path(targetPath))) {
       // bootstrap: first batch becomes the snapshot (idempotent on replay)
-      updates.write.mode("overwrite").partitionBy(partitionCol)
+      Upsert.latestPerKey(updates, keys, order)
+        .write.mode("overwrite").partitionBy(partitionCol)
         .parquet(targetPath)
       return
     }
@@ -194,7 +231,8 @@ object RealtimeStream {
     if (touched.isEmpty) return // empty batch — nothing to merge
     val pruned = readTouchedPartitions(spark, targetPath, updates.schema,
       partitionCol, touched)
-    val merged = Upsert.upsert(pruned, updates, keys, compareCols, createdCol)
+    val merged = Upsert.upsert(pruned, updates, keys, compareCols, createdCol,
+      Some(order))
     val stage = targetPath + ".stage"
     merged.write.mode("overwrite").parquet(stage)
     spark.read.schema(updates.schema).parquet(stage)
@@ -259,39 +297,36 @@ object RealtimeStream {
     fs.delete(new Path(stage), true)
   }
 
-  /** One micro-batch of RAW FEED PAYLOADS: decode + flatten + enrich via
-    * [[graft.pipelines.Realtime.microBatch]] against the current snapshot,
-    * then swap — E1 end to end per batch. */
+  /** One micro-batch of RAW FEED PAYLOADS: decode + flatten + enrich into
+    * [[Realtime.observations]], read the current snapshot with that
+    * frame's schema ([[readSnapshot]]), [[Realtime.merge]] the two, then
+    * swap — E1 end to end per batch, one shuffle and the write. */
   def feedBatch(payloads: Dataset[Array[Byte]], targetPath: String,
                 weatherJson: Option[String]): Unit = {
     implicit val spark: SparkSession = payloads.sparkSession
     val fs = new Path(targetPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
+    val obs = Realtime.observations(payloads, weatherJson)
     val target = snapshotPath(fs, targetPath)
-      .map(p => spark.read.parquet(p.toString))
-    val merged = graft.pipelines.Realtime.microBatch(payloads, weatherJson, target)
-    merged.write.mode("overwrite").parquet(targetPath + ".next")
+      .map(readSnapshot(spark, fs, _, obs.schema))
+    Realtime.merge(obs, target)
+      .write.mode("overwrite").parquet(targetPath + ".next")
     promote(fs, targetPath)
   }
 
   /** E1 micro-batch against a `start_date`-PARTITIONED snapshot — the
-    * 100 TB shape of [[feedBatch]]: decode + flatten + enrich, dedup to
-    * the latest entity per key (feed order), then [[mergePartitioned]]
-    * reads and rewrites ONLY the service dates this batch touches (a
-    * 1-minute GTFS batch spans a handful). Entities whose start_date is
-    * absent land in the NULL partition, which the pruned read covers
-    * with an explicit isNull disjunct. */
+    * 100 TB shape of [[feedBatch]]: decode + flatten + enrich, then
+    * [[mergePartitioned]] (latest entity per key by feed order) reads and
+    * rewrites ONLY the service dates this batch touches (a 1-minute GTFS
+    * batch spans a handful). Entities whose start_date is absent land in
+    * the NULL partition, which the pruned read covers with an explicit
+    * isNull disjunct. */
   def feedBatchPartitioned(payloads: Dataset[Array[Byte]], targetPath: String,
                            weatherJson: Option[String]): Unit = {
     implicit val spark: SparkSession = payloads.sparkSession
-    val keys = Seq("trip_id", "start_date", "stop_sequence", "stop_id")
-    val obs = graft.pipelines.Realtime.observations(payloads, weatherJson)
-      .withColumn("__seq", org.apache.spark.sql.functions
-        .monotonically_increasing_id())
-    val latest = Upsert.latestPerKey(obs, keys, "__seq").drop("__seq")
-    mergePartitioned(latest, targetPath, keys,
-      compareCols = Seq("arrival_time", "departure_time"),
-      partitionCol = "start_date", createdCol = Some("created_at"))
+    mergePartitioned(Realtime.observations(payloads, weatherJson), targetPath,
+      Realtime.keys, Realtime.compareCols, partitionCol = "start_date",
+      createdCol = Some("created_at"), order = monotonically_increasing_id())
   }
 
   /** The reference's cron loop as an actual stream: watch a directory of

@@ -351,6 +351,32 @@ class PlanSpec extends SparkSpec {
       s"partition pruning missing from the scan:\n$plan")
   }
 
+  test("E1 merge: Realtime.microBatch against a parquet snapshot plans " +
+    "exactly ONE shuffle Exchange — repeated-key resolution and the S9 " +
+    "upsert share one keyed aggregation over snapshot ∪ observations") {
+    import graft.gtfs._
+    import spark.implicits._
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    def feed(stops: (Int, Long)*): Array[Byte] =
+      Rt.encode(FeedMessage(FeedHeader("2.0", Some(1717200000L)),
+        Seq(FeedEntity("e", None, Some(TripUpdate(
+          TripDescriptor(Some("T1"), None, Some("20240601"), None),
+          stops.map { case (seq, arr) => StopTimeUpdate(Some(seq),
+            Some(StopTimeEvent(None, Some(arr), None)), None, Some("10"))
+          }, None, None))))))
+    val path = "target/plan_e1_merge"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    pipelines.Realtime.microBatch(spark.createDataset(Seq(feed((1, 100L)))),
+      None, None).write.parquet(path)
+    val merged = pipelines.Realtime.microBatch(
+      spark.createDataset(Seq(feed((1, 150L), (1, 160L), (2, 300L)))), None,
+      Some(spark.read.parquet(path)))
+    val plan = finalPlan(merged)
+    val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).size
+    assert(shuffles === 1, s"expected exactly 1 shuffle:\n$plan")
+    assert(!plan.contains("Join"), s"the merge plans a join:\n$plan")
+  }
+
   test("q01: the fact-fact composite-key join carries NO broadcast hint " +
     "(a hint here OOMs executors at 100 TB; tiny-SF broadcasts are AQE's " +
     "size-based call, which scales), and the W1 global sort is present") {

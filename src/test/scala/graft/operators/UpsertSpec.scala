@@ -67,6 +67,58 @@ class UpsertSpec extends SparkSpec {
     }
   }
 
+  test("S9 upsert: a key with a NULL part (an absent start_date) merges " +
+    "into its stored row instead of duplicating it") {
+    import spark.implicits._
+    def frame(rows: (Long, Option[String], String, Long, Long)*) =
+      rows.toDF("trip", "start_date", "v", "created", "updated")
+    val tgt = frame((1L, None, "a", 10L, 10L), (2L, Some("d"), "b", 10L, 10L))
+    val upd = frame((1L, None, "A", 20L, 20L), (2L, None, "n", 20L, 20L))
+    val out = Upsert.upsert(tgt, upd, Seq("trip", "start_date"), Seq("v"),
+      Some("created")).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2),
+        r.getLong(3), r.getLong(4))).toSet
+    assert(out === Set(
+      (1L, None, "A", 10L, 20L),      // NULL-part key matched and updated
+      (2L, Some("d"), "b", 10L, 10L), // untouched
+      (2L, None, "n", 20L, 20L)))     // NULL part ≠ "d": a new key
+  }
+
+  test("S9 upsert: NULL→NULL compare columns count as unchanged, " +
+    "NULL→value as a change") {
+    import spark.implicits._
+    def frame(rows: (Long, Option[String], Long, Long)*) =
+      rows.toDF("k", "v", "created", "updated")
+    val tgt = frame((1L, None, 10L, 10L), (2L, None, 10L, 10L))
+    val upd = frame((1L, None, 20L, 20L), (2L, Some("x"), 20L, 20L))
+    val out = Upsert.upsert(tgt, upd, Seq("k"), Seq("v"), Some("created"))
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)),
+        r.getLong(2), r.getLong(3))).toSet
+    assert(out === Set(
+      (1L, None, 10L, 10L),        // unchanged: the stored row stays
+      (2L, Some("x"), 10L, 20L)))  // changed: taken, created preserved
+  }
+
+  test("S9 upsert with an order column: repeated update keys resolve to " +
+    "the newest row before the change test") {
+    import spark.implicits._
+    def frame(rows: (Long, String, Long, Long, Long)*) =
+      rows.toDF("k", "v", "seq", "created", "updated")
+    val tgt = frame((1L, "a", 1L, 10L, 10L), (2L, "b", 1L, 10L, 10L))
+    val upd = frame(
+      (1L, "A", 3L, 20L, 20L), (1L, "stale", 2L, 20L, 20L), // newest: "A"
+      (2L, "B", 2L, 20L, 20L), (2L, "b", 4L, 20L, 20L),     // newest = stored
+      (3L, "old", 1L, 20L, 20L), (3L, "c", 5L, 20L, 20L))   // new key
+    val out = Upsert.upsert(tgt, upd, Seq("k"), Seq("v"), Some("created"),
+      order = Some(col("seq"))).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSet
+    assert(out === Set(
+      (1L, "A", 3L, 10L, 20L),
+      (2L, "b", 1L, 10L, 10L),   // newest update unchanged: stored row kept
+      (3L, "c", 5L, 20L, 20L)))
+  }
+
   test("S10 insertIfAbsent: only new keys are appended") {
     val out = collect(Upsert.insertIfAbsent(target, updates, Seq("k")))
     assert(out === Set(
@@ -78,7 +130,7 @@ class UpsertSpec extends SparkSpec {
     import spark.implicits._
     val d = Seq((1L, "old", 1L), (1L, "new", 2L), (2L, "only", 5L))
       .toDF("k", "v", "seq")
-    val out = Upsert.latestPerKey(d, Seq("k"), "seq").collect()
+    val out = Upsert.latestPerKey(d, Seq("k"), col("seq")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(out === Set((1L, "new"), (2L, "only")))
   }

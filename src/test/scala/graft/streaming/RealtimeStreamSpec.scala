@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.Trigger
 
 /** §2.9 — streaming upsert over a file source: two micro-batch rounds
@@ -9,8 +10,17 @@ import org.apache.spark.sql.streaming.Trigger
   * asserting S9 semantics on the keyed snapshot. */
 class RealtimeStreamSpec extends SparkSpec {
 
-  test("feed-file stream runs E1 per micro-batch (binary source → merge)") {
+  private def payload(seq: Int, arr: Long): Array[Byte] = {
     import graft.gtfs._
+    Rt.encode(FeedMessage(FeedHeader("2.0", Some(arr)),
+      Seq(FeedEntity("e", None, Some(TripUpdate(
+        TripDescriptor(Some("T1"), None, Some("20240601"), None),
+        Seq(StopTimeUpdate(Some(seq),
+          Some(StopTimeEvent(None, Some(arr), None)), None, Some("10"))),
+        None, None))))))
+  }
+
+  test("feed-file stream runs E1 per micro-batch (binary source → merge)") {
     val base = Paths.get("target", "test_feedstream")
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     val src = base.resolve("src"); Files.createDirectories(src)
@@ -18,13 +28,7 @@ class RealtimeStreamSpec extends SparkSpec {
     val chk = base.resolve("chk").toString
 
     def feed(name: String, seq: Int, arr: Long): Unit =
-      Files.write(src.resolve(name), Rt.encode(FeedMessage(
-        FeedHeader("2.0", Some(arr)),
-        Seq(FeedEntity("e", None, Some(TripUpdate(
-          TripDescriptor(Some("T1"), None, Some("20240601"), None),
-          Seq(StopTimeUpdate(Some(seq),
-            Some(StopTimeEvent(None, Some(arr), None)), None, Some("10"))),
-          None, None)))))))
+      Files.write(src.resolve(name), payload(seq, arr))
 
     def round(): Unit = {
       val q = RealtimeStream.startFeedStream(spark, src.toString, tgt, chk,
@@ -43,6 +47,79 @@ class RealtimeStreamSpec extends SparkSpec {
     val snap = spark.read.parquet(tgt).collect()
       .map(r => r.getLong(2) -> r.getTimestamp(4).getTime / 1000).toMap
     assert(snap === Map(1L -> 2000L, 2L -> 3000L))
+  }
+
+  test("an E1 feed micro-batch against an existing snapshot runs exactly " +
+    "2 Spark jobs — the one shuffle and the write, no schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Paths.get("target", "test_feedjobs")
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    val src = base.resolve("src"); Files.createDirectories(src)
+    val tgt = base.resolve("tgt").toString
+    val chk = base.resolve("chk").toString
+    // (query id, batch id) of every job a stream thread starts, plus a
+    // sentinel marking that the listener bus has caught up
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("")
+        seen.add(prop("sql.streaming.queryId") -> prop("streaming.sql.batchId"))
+      }
+    }
+    def round(): String = {
+      val q = RealtimeStream.startFeedStream(spark, src.toString, tgt, chk,
+        weatherJson = () => None, trigger = Trigger.AvailableNow())
+      q.awaitTermination()
+      q.id.toString
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Files.write(src.resolve("f1.pb"), payload(1, 1000L))
+      round() // batch 0 bootstraps the snapshot
+      Files.write(src.resolve("f2.pb"), payload(1, 2000L))
+      Files.write(src.resolve("f3.pb"), payload(2, 3000L))
+      val id = round() // batch 1 merges into it
+      spark.sparkContext.setLocalProperty("streaming.sql.batchId", "sentinel")
+      try spark.range(1).count()
+      finally spark.sparkContext.setLocalProperty("streaming.sql.batchId", null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.toArray.exists(_ == ("", "sentinel")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      val jobs = seen.toArray.count(_ == (id, "1"))
+      assert(jobs === 2, s"merge batch ran $jobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("snapshot schema drift fails the next batch loudly: a dropped or " +
+    "retyped column is never read back as NULL") {
+    import spark.implicits._
+    val base = Paths.get("target", "test_drift")
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    val tgt = base.resolve("tgt").toString
+    def batch(arr: Long) = spark.createDataset(Seq(payload(1, arr)))
+    RealtimeStream.feedBatch(batch(1000L), tgt, None)
+    // rewrite the snapshot as an older writer would have left it
+    def rewrite(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Unit = {
+      val tmp = base.resolve("tmp").toString
+      f(spark.read.parquet(tgt)).write.parquet(tmp)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tgt))
+      assert(new java.io.File(tmp).renameTo(new java.io.File(tgt)))
+    }
+    rewrite(_.drop("temperature"))
+    val dropped = intercept[IllegalStateException](
+      RealtimeStream.feedBatch(batch(2000L), tgt, None))
+    assert(dropped.getMessage.contains("missing [temperature]"),
+      dropped.getMessage)
+    rewrite(_.withColumn("temperature", lit(1.5d))
+      .withColumn("stop_sequence", $"stop_sequence".cast("int")))
+    val retyped = intercept[IllegalStateException](
+      RealtimeStream.feedBatch(batch(2000L), tgt, None))
+    assert(retyped.getMessage.contains("retyped [stop_sequence: int"),
+      retyped.getMessage)
+    // the failed batches left the snapshot in place
+    assert(spark.read.parquet(tgt).count() === 1L)
   }
 
   test("snapshot swap is crash-recoverable: a crash between promote's two " +
@@ -121,7 +198,7 @@ class RealtimeStreamSpec extends SparkSpec {
         .toDF("k", "v", "seq", "created", "updated"),
       tgt, Seq("k"), Seq("v"), "seq", createdCol = Some("created"))
     // the batch the checkpoint will replay (key 1 changed, key 3 new,
-    // key 1 also repeated in-batch — latestPerKey must pick seq 3)
+    // key 1 also repeated in-batch — the merge must pick seq 3)
     val batch = Seq((1L, "A0", 2L, 200L, 200L), (1L, "A", 3L, 200L, 200L),
       (3L, "c", 1L, 200L, 200L))
       .toDF("k", "v", "seq", "created", "updated")
