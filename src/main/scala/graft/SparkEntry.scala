@@ -1121,7 +1121,7 @@ object SparkEntry {
           max(col("event_id")).as("updated_id"))
       val target = snap(col("event_id") % 3L < 2L)
       val updates = snap(col("event_id") % 3L === 2L)
-      Upsert.upsert(target, updates, Seq("user_id", "event_type"),
+      Upsert.upsert(Some(target), updates, Seq("user_id", "event_type"),
         compareCols = Seq("value"), createdCol = Some("created_id"))
     }),
 
@@ -1519,7 +1519,7 @@ object SparkEntry {
     // Partition-scoped streaming merge — the 100 TB shape of the S9
     // snapshot: the keyed snapshot lives partitioned by its day column, a
     // multi-date batch arrives touching a THIRD of the days, and
-    // RealtimeStream.mergeBatchPartitioned reads ONLY those partitions
+    // RealtimeStream.merge (partitioned by day) reads ONLY those partitions
     // (pruned at the file listing — PartitionedMergeSpec pins the plan)
     // and dynamic-overwrites exactly them. The oracle computes the FULL
     // logical merge over all days, so the hash match proves the
@@ -1538,16 +1538,16 @@ object SparkEntry {
           max(col("event_id")).as("updated_id"))
       val keys = Seq("day", "user_id", "event_type")
       // bootstrap snapshot: even event ids, every day
-      RealtimeStream.mergeBatchPartitioned(
+      RealtimeStream.merge(
         snap(col("event_id") % 2L === 0L), out, keys,
-        compareCols = Seq("value"), orderCol = "updated_id",
-        partitionCol = "day", createdCol = Some("created_id"))
+        compareCols = Seq("value"), createdCol = Some("created_id"),
+        order = col("updated_id"), partitionCol = Some("day"))
       // the micro-batch: odd event ids on every third day
-      RealtimeStream.mergeBatchPartitioned(
+      RealtimeStream.merge(
         snap(col("event_id") % 2L =!= 0L &&
           pmod(datediff(to_date(col("ts")), lit("2024-01-01")), lit(3)) === 0),
-        out, keys, compareCols = Seq("value"), orderCol = "updated_id",
-        partitionCol = "day", createdCol = Some("created_id"))
+        out, keys, compareCols = Seq("value"), createdCol = Some("created_id"),
+        order = col("updated_id"), partitionCol = Some("day"))
       s.read.parquet(out).select("day", "user_id", "event_type",
         "value", "created_id", "updated_id")
     }),
@@ -2077,7 +2077,7 @@ object SparkEntry {
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2),
-          restartAfterBatch = Some(1))
+          restartAfterBatches = Seq(1))
         .select(col("trip_id"), col("ts"), col("ewma"))
     }),
 
@@ -2215,7 +2215,7 @@ object SparkEntry {
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2),
-          restartAfterBatch = Some(1)) { st =>
+          restartAfterBatches = Seq(1)) { st =>
           val l = st.where(col("event_type") === "click")
             .select(col("event_id").as("l_event_id"), col("user_id"),
               col("ts").as("l_ts"))
@@ -2378,7 +2378,7 @@ object SparkEntry {
           col("event_time") >= cutS && col("event_time") < cutB,
           col("event_time") >= cutB),
           useRocksDb = true,
-          restartAfterBatch = Some(2)) { st =>
+          restartAfterBatches = Seq(2)) { st =>
           graft.streaming.StreamingAnalytics.sessionizeStreamTws(
             st.as[graft.streaming.StreamingAnalytics.SEvent],
             gapSeconds = 21600L).toDF()
@@ -2474,7 +2474,7 @@ object SparkEntry {
           col("ts") >= cutB),
           useRocksDb = true,
           processingTimeDrain = true,
-          restartAfterBatch = Some(2)) { st =>
+          restartAfterBatches = Seq(2)) { st =>
           import s.implicits._
           graft.streaming.StreamingAnalytics.dimAggStream(
             st.select("user_id", "tse", "event_type", "vu")
@@ -2490,15 +2490,15 @@ object SparkEntry {
     // append, documented there as NON-idempotent under batch retry; this
     // row is the production alternative actually exercised: the same
     // funnel's Update-mode emissions land through the IDEMPOTENT
-    // partition-scoped merge (RealtimeStream.mergeBatchPartitioned —
+    // partition-scoped merge (RealtimeStream.merge with a partitionCol —
     // latest-per-key + change-predicated upsert, so a replayed batch is
     // a no-op), and the query is KILLED mid-backlog and resumed from its
     // checkpoint. The sink is now a latest-state SNAPSHOT, not an
     // emission log: per user the row of the LAST stage change (n_seen
-    // strictly increases at each emission, so orderCol=n_seen picks it
+    // strictly increases at each emission, so order = n_seen picks it
     // and the oracle selects the max-k emitted row). `bucket = user_id %
     // 16` joins the key so the snapshot partitions by something bounded
-    // — mergePartitioned requires the partition column to be a key
+    // — the partitioned merge requires the partition column to be a key
     // column, and a derived-from-key bucket can never migrate under its
     // user. Restart + merge: the second run's batches keep merging into
     // the snapshot the first run bootstrapped; a lost emission or a
@@ -2518,13 +2518,13 @@ object SparkEntry {
           col("ts") < cut1,
           col("ts") >= cut1 && col("ts") < cut2,
           col("ts") >= cut2), updateMode = true,
-          restartAfterBatch = Some(1),
+          restartAfterBatches = Seq(1),
           updateSink = Some { (df, _, out) =>
-            graft.streaming.RealtimeStream.mergeBatchPartitioned(
+            graft.streaming.RealtimeStream.merge(
               df.withColumn("bucket", col("user_id") % 16L),
               out, keys = Seq("bucket", "user_id"),
-              compareCols = Seq("stage", "n_seen"), orderCol = "n_seen",
-              partitionCol = "bucket")
+              compareCols = Seq("stage", "n_seen"), createdCol = None,
+              order = col("n_seen"), partitionCol = Some("bucket"))
           }) { st =>
           graft.streaming.StreamingAnalytics.funnelStagesStream(
             st.as[graft.streaming.StreamingAnalytics.FEvent],

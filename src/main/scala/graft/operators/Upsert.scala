@@ -25,22 +25,18 @@ import org.apache.spark.sql.functions._
 object Upsert {
 
   /** Keep the newest row per key (deterministic pre-dedup for S9: the feed
-    * may repeat a key across entities — SURVEY.md §7.4). `order` must be
-    * totally ordered per key (e.g. a monotonically increasing id); it is
-    * evaluated in a projection over `df`, so a nondeterministic id works. */
-  def latestPerKey(df: DataFrame, keys: Seq[String], order: Column): DataFrame = {
-    val dataCols = df.columns.filterNot(keys.contains).toSeq
-    df.select(keys.map(col) :+ struct(dataCols.map(col): _*).as("__row") :+
-        order.as("__ord"): _*)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("__row"), col("__ord")).as("__latest"))
-      .select(keys.map(col) ++ dataCols.map(c => col(s"__latest.$c").as(c)): _*)
-  }
+    * may repeat a key across entities — SURVEY.md §7.4): [[upsert]] into
+    * no target. `order` must be totally ordered per key (e.g. a
+    * monotonically increasing id). */
+  def latestPerKey(df: DataFrame, keys: Seq[String], order: Column): DataFrame =
+    upsert(None, df, keys, Nil, None, Some(order))
 
   /** S9 — conditional merge. Matched keys take the update row only when any
     * of `compareCols` differs; `createdCol` (if present in the schema) is
     * preserved from the target for matched keys. Unmatched update keys are
-    * inserted; unmatched target keys pass through.
+    * inserted; unmatched target keys pass through. With `target` None
+    * (no snapshot yet) every key is unmatched, so the result is the
+    * newest update row per key.
     *
     * One aggregation over `target ∪ updates`, grouped by `keys` (grouping
     * is null-safe, like `<=>`: a key with a NULL part matches its stored
@@ -48,30 +44,32 @@ object Upsert {
     * `max_by` skips NULL orderings, so per key one `max_by` picks the
     * target row and another picks the update row ranked highest by
     * `order`. With `order` set, `updates` may repeat a key and the newest
-    * row wins, so no [[latestPerKey]] pass (and no second shuffle) is
-    * needed. `order` is evaluated in a projection over `updates`.
+    * row wins in the same pass (no second shuffle). `order` is evaluated
+    * in a projection over `updates`, so a nondeterministic id works.
     *
     * Requires `target` and `updates` to share column names, `target` to
     * hold at most one row per key, and `updates` too when `order` is None.
     */
-  def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String],
+  def upsert(target: Option[DataFrame], updates: DataFrame, keys: Seq[String],
              compareCols: Seq[String],
              createdCol: Option[String] = None,
              order: Option[Column] = None): DataFrame = {
-    require(target.columns.sameElements(updates.columns),
+    require(target.forall(_.columns.sameElements(updates.columns)),
       "target/updates schemas must match")
-    val dataCols = target.columns.filterNot(keys.contains).toSeq
+    val dataCols = updates.columns.filterNot(keys.contains).toSeq
     def tagged(df: DataFrame, tOrd: Column, uOrd: Column): DataFrame =
       df.select(keys.map(col) :+ struct(dataCols.map(col): _*).as("__row") :+
         tOrd.as("__t_ord") :+ uOrd.as("__u_ord"): _*)
-    val resolved = tagged(target, lit(0), lit(null))
-      .union(tagged(updates, lit(null).cast("int"), order.getOrElse(lit(0))))
+    val resolved = (target.map(tagged(_, lit(0), lit(null))).toSeq :+
+        tagged(updates, lit(null).cast("int"), order.getOrElse(lit(0))))
+      .reduce(_ union _)
       .groupBy(keys.map(col): _*)
       .agg(max_by(col("__row"), col("__t_ord")).as("__t"),
         max_by(col("__row"), col("__u_ord")).as("__u"))
     val tPresent = col("__t").isNotNull
     val uPresent = col("__u").isNotNull
-    val changed = compareCols.map(c => !(col(s"__t.$c") <=> col(s"__u.$c"))).reduce(_ || _)
+    val changed = compareCols.map(c => !(col(s"__t.$c") <=> col(s"__u.$c")))
+      .reduceOption(_ || _).getOrElse(lit(false))
     val takeUpdate = uPresent && (!tPresent || changed)
     resolved.select(keys.map(col) ++ dataCols.map { c =>
       if (createdCol.contains(c)) coalesce(col(s"__t.$c"), col(s"__u.$c")).as(c)

@@ -63,26 +63,20 @@ object Realtime {
   /** The predicted times: a matched key is updated only when one changed. */
   val compareCols: Seq[String] = Seq("arrival_time", "departure_time")
 
-  /** S9 conditional merge of one run's [[observations]] into the existing
-    * snapshot (None = first run), in one keyed aggregation. The feed can
+  /** Stamped on first insert, kept when a later run updates the key. */
+  val createdCol: Option[String] = Some("created_at")
+
+  /** One full micro-batch: [[observations]] S9-merged into the existing
+    * snapshot (None = first run) in one keyed aggregation. The feed can
     * repeat a key across entities (SURVEY.md §7.4): feed order breaks the
     * tie, as the reference's row-at-a-time loop makes the LAST entity win —
     * monotonically_increasing_id preserves the flatMap's within-feed row
     * order. Update detection compares the predicted times, as the
     * reference's ON CONFLICT ... WHERE clause does
     * (realtime_extractor.py:208-218). */
-  def merge(obs: DataFrame, target: Option[DataFrame]): DataFrame = {
-    val feedOrder = monotonically_increasing_id()
-    target match {
-      case Some(tgt) => Upsert.upsert(tgt, obs, keys,
-        compareCols, createdCol = Some("created_at"), order = Some(feedOrder))
-      case None => Upsert.latestPerKey(obs, keys, feedOrder)
-    }
-  }
-
-  /** One full micro-batch: [[observations]] → [[merge]]. */
   def microBatch(feeds: Dataset[Array[Byte]], weatherJson: Option[String],
                  target: Option[DataFrame])
                 (implicit s: SparkSession): DataFrame =
-    merge(observations(feeds, weatherJson), target)
+    Upsert.upsert(target, observations(feeds, weatherJson), keys, compareCols,
+      createdCol, Some(monotonically_increasing_id()))
 }

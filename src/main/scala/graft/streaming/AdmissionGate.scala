@@ -76,7 +76,7 @@ import org.apache.spark.sql.functions._
   * excluded by the filter, invisible even if present on disk) and
   * overwrites its own subdirs, so replayed batches converge instead of
   * double-admitting. This is the same batchId-keyed discipline as
-  * [[RealtimeStream.mergeBatchPartitioned]], adapted to append-shaped
+  * the partitioned [[RealtimeStream.merge]], adapted to append-shaped
   * state. */
 object AdmissionGate {
 

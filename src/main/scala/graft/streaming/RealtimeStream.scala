@@ -2,14 +2,16 @@ package graft.streaming
 
 import graft.operators.Upsert
 import graft.pipelines.Realtime
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** §2.9 — the reference's realtime path as Structured Streaming. The
   * reference hand-rolls a micro-batch stream: cron fires every minute,
@@ -21,13 +23,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * updates (its upsert has no time bound), and state lives in the keyed
   * snapshot, not in stream memory.
   *
-  * The snapshot is maintained parquet-without-ACID, two ways:
-  * [[mergeBatch]] merges into a `.next` directory and swaps — whole-
-  * snapshot crash-atomic, but O(snapshot) write amplification per batch —
-  * while [[mergeBatchPartitioned]] partitions the snapshot by a key
-  * column and rewrites only the partitions the batch touches — the
-  * 100 TB shape. With a table format (Delta/Iceberg) both collapse to a
-  * MERGE.
+  * One [[merge]] serves both snapshot layouts, parquet-without-ACID.
+  * Whole-snapshot (`partitionCol` None): merge into a `.next` directory
+  * and swap — crash-atomic, but O(snapshot) write amplification per
+  * batch. Partitioned (`Some(keyCol)`): rewrite only the partitions the
+  * batch touches — the 100 TB shape. With a table format (Delta/Iceberg)
+  * both collapse to a MERGE.
   */
 object RealtimeStream {
 
@@ -44,36 +45,47 @@ object RealtimeStream {
     else None
   }
 
-  /** Read the snapshot directory `dir` with `schema` pinned, so the read
-    * starts no schema-inference job. A pinned parquet read would turn a
-    * column the files lack into NULLs (and drop one they add), so first
-    * every data file's footer is checked against `schema` on the driver —
-    * no Spark job — and any drift fails the batch, naming the columns. */
-  def readSnapshot(spark: SparkSession, fs: FileSystem, dir: Path,
-                   schema: StructType): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+  /** The parquet data files directly under `dir` (no `_SUCCESS`, no
+    * hidden `.crc`). */
+  private def dataFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
     fs.listStatus(dir).filter(st => st.isFile &&
       !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-      .foreach { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        val found = try ParquetFileFormat.readSchemaFromFooter(
-          new Footer(st.getPath, reader.getFooter), converter)
-        finally reader.close()
-        val have = found.fields.map(f => f.name -> f.dataType).toMap
-        val missing = schema.fieldNames.filterNot(have.contains)
-        val extra = found.fieldNames.filterNot(schema.fieldNames.contains)
-        val retyped = schema.fields.collect { case f if have.get(f.name)
-            .exists(h => !DataType.equalsStructurally(h, f.dataType,
-              ignoreNullability = true)) =>
-          s"${f.name}: ${have(f.name).simpleString} " +
-            s"(expected ${f.dataType.simpleString})" }
-        if (missing.nonEmpty || extra.nonEmpty || retyped.nonEmpty)
-          throw new IllegalStateException(s"snapshot schema drift in " +
-            s"${st.getPath}: missing [${missing.mkString(", ")}], " +
-            s"unexpected [${extra.mkString(", ")}], " +
-            s"retyped [${retyped.mkString(", ")}]")
-      }
+
+  /** Check every file's parquet footer against `schema` on the driver —
+    * no Spark job. A pinned-schema parquet read would turn a column the
+    * files lack into NULLs (and drop one they add), so any drift fails
+    * the batch here instead, naming the file and the columns. */
+  private def checkFooters(spark: SparkSession, files: Seq[FileStatus],
+                           schema: StructType): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    files.foreach { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val found = try ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, reader.getFooter), converter)
+      finally reader.close()
+      val have = found.fields.map(f => f.name -> f.dataType).toMap
+      val missing = schema.fieldNames.filterNot(have.contains)
+      val extra = found.fieldNames.filterNot(schema.fieldNames.contains)
+      val retyped = schema.fields.collect { case f if have.get(f.name)
+          .exists(h => !DataType.equalsStructurally(h, f.dataType,
+            ignoreNullability = true)) =>
+        s"${f.name}: ${have(f.name).simpleString} " +
+          s"(expected ${f.dataType.simpleString})" }
+      if (missing.nonEmpty || extra.nonEmpty || retyped.nonEmpty)
+        throw new IllegalStateException(s"snapshot schema drift in " +
+          s"${st.getPath}: missing [${missing.mkString(", ")}], " +
+          s"unexpected [${extra.mkString(", ")}], " +
+          s"retyped [${retyped.mkString(", ")}]")
+    }
+  }
+
+  /** Read the snapshot directory `dir` with `schema` pinned, so the read
+    * starts no schema-inference job, after [[checkFooters]] over its
+    * files. */
+  def readSnapshot(spark: SparkSession, fs: FileSystem, dir: Path,
+                   schema: StructType): DataFrame = {
+    checkFooters(spark, dataFiles(fs, dir).toSeq, schema)
     spark.read.schema(schema).parquet(dir.toString)
   }
 
@@ -124,39 +136,33 @@ object RealtimeStream {
     }
   }
 
-  /** One micro-batch: S9-merge the batch into the snapshot at
-    * `targetPath` (the newest `orderCol` row wins among repeated keys),
-    * atomically swap the new snapshot in. */
-  def mergeBatch(batch: DataFrame, targetPath: String, keys: Seq[String],
-                 compareCols: Seq[String], orderCol: String,
-                 createdCol: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(targetPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val merged = snapshotPath(fs, targetPath) match {
-      case Some(cur) =>
-        Upsert.upsert(readSnapshot(spark, fs, cur, batch.schema), batch, keys,
-          compareCols, createdCol, order = Some(col(orderCol)))
-      case None => Upsert.latestPerKey(batch, keys, col(orderCol))
-    }
-    // Writing .next executes the plan (including the read of the current
-    // snapshot) before the swap touches the live directory.
-    merged.write.mode("overwrite").parquet(targetPath + ".next")
-    promote(fs, targetPath)
-  }
-
   /** Partition-pruned snapshot read: only partition directories whose
     * `partitionCol` value is in `values` are listed and scanned — the
     * predicate lands in the scan's PartitionFilters, never a row-level
     * Filter over the full snapshot (PartitionedMergeSpec pins that).
-    * `schema` pins the partition column's TYPE (directory-name inference
-    * would e.g. read a yyyyMMdd string partition back as INT), and the
-    * final select pins column ORDER (a partitioned read always emits
-    * partition columns last, regardless of the user schema's order —
-    * which would break [[Upsert.upsert]]'s schema-equality contract). */
+    * Those directories' files first pass [[checkFooters]] (the partition
+    * column lives in the directory name, not the files), so the check is
+    * O(touched partitions), never O(snapshot). `schema` pins the
+    * partition column's TYPE (directory-name inference would e.g. read a
+    * yyyyMMdd string partition back as INT), and the final select pins
+    * column ORDER (a partitioned read always emits partition columns
+    * last, regardless of the user schema's order — which would break
+    * [[Upsert.upsert]]'s schema-equality contract). */
   def readTouchedPartitions(spark: SparkSession, targetPath: String,
                             schema: StructType, partitionCol: String,
                             values: Seq[Any]): DataFrame = {
+    val fs = new Path(targetPath).getFileSystem(spark.sessionState.newHadoopConf())
+    // the writer's own directory naming: the value cast to string in the
+    // session time zone, escaped, NULL as Hive's default partition
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val partType = schema(partitionCol).dataType
+    val dirs = values.map { v =>
+      val str = Cast(Literal.create(v, partType), StringType, tz).eval()
+      new Path(targetPath, ExternalCatalogUtils.getPartitionPathString(
+        partitionCol, Option(str).map(_.toString).orNull))
+    }
+    checkFooters(spark, dirs.filter(fs.exists).flatMap(dataFiles(fs, _)),
+      StructType(schema.filterNot(_.name == partitionCol)))
     // NULL partition values land in Hive's default partition; `isin`
     // would silently never match them (SQL null semantics), losing every
     // previously-stored NULL-keyed row when its partition is overwritten
@@ -173,77 +179,75 @@ object RealtimeStream {
       .select(schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** Partition-scoped S9 merge — the 100 TB shape of [[mergeBatch]]. The
-    * snapshot is stored partitioned by `partitionCol` (a KEY column, so a
-    * key can never migrate between partitions); each micro-batch
-    *   1. collects the batch's distinct partition values (bounded: a
-    *      1-minute GTFS batch spans a handful of service dates),
-    *   2. reads ONLY those partitions of the snapshot (pruned at the file
-    *      listing — [[readTouchedPartitions]]),
-    *   3. merges, keeping the newest `orderCol` row of repeated keys, and
-    *   4. dynamic-partition-overwrites exactly the touched partitions.
-    * Write amplification is O(touched partitions), not O(snapshot): a
-    * 1 GB batch against a 100 TB snapshot rewrites ~the partitions the
-    * batch touches, where [[mergeBatch]] would rewrite all 100 TB.
+  /** The S9 merge of one micro-batch into the snapshot at `targetPath`:
+    * [[Upsert.upsert]] into the current snapshot, or into none on the
+    * first batch; among repeated keys the row ranked highest by `order`
+    * wins (a stored column, or e.g. the E1 feed's within-feed position).
     *
-    * The merged rows stage through `targetPath + ".stage"` before the
-    * overwrite — Spark (correctly) refuses a write whose plan reads the
-    * output path, and the staged copy also bounds the crash window:
-    * a crash before the final overwrite leaves the live snapshot
-    * untouched; a crash DURING it can leave a touched partition
-    * half-committed (the known dynamic-overwrite granularity — a table
-    * format's metadata commit is the production fix), and the streaming
-    * checkpoint replays the batch, which heals it because the merge is
-    * idempotent (newest-per-key resolution + change-predicated upsert —
-    * RealtimeStreamSpec replays a batch twice and hashes the snapshot).
-    */
-  def mergeBatchPartitioned(batch: DataFrame, targetPath: String,
-                            keys: Seq[String], compareCols: Seq[String],
-                            orderCol: String, partitionCol: String,
-                            createdCol: Option[String] = None): Unit =
-    mergePartitioned(batch, targetPath, keys, compareCols, partitionCol,
-      createdCol, col(orderCol))
-
-  /** The partition-scoped merge core with the tie-break as a column
-    * expression — [[mergeBatchPartitioned]] for callers whose order is not
-    * a stored column (the E1 feed path orders by within-feed entity
-    * position). */
-  def mergePartitioned(updates: DataFrame, targetPath: String,
-                       keys: Seq[String], compareCols: Seq[String],
-                       partitionCol: String, createdCol: Option[String],
-                       order: Column): Unit = {
-    require(keys.contains(partitionCol),
-      s"partitionCol $partitionCol must be a key column — a non-key " +
-        "partition column could change under a key, stranding the old row " +
-        "in a partition the merge never reads")
+    * `partitionCol` None: read the snapshot through [[readSnapshot]],
+    * write the merge to `.next`, then [[promote]] it. Writing `.next`
+    * executes the plan (including the snapshot read) before the swap
+    * touches the live directory.
+    *
+    * `partitionCol` Some(p): the snapshot is stored partitioned by `p` (a
+    * KEY column, so a key can never migrate between partitions). The
+    * batch's distinct `p` values are collected (bounded: a 1-minute GTFS
+    * batch spans a handful of service dates), ONLY those partitions are
+    * read ([[readTouchedPartitions]]), and exactly they are dynamic-
+    * partition-overwritten: write amplification is O(touched partitions),
+    * not O(snapshot). The merged rows stage through `targetPath +
+    * ".stage"` — Spark (correctly) refuses a write whose plan reads the
+    * output path, and the staged copy also bounds the crash window: a
+    * crash before the final overwrite leaves the live snapshot untouched;
+    * a crash DURING it can leave a touched partition half-committed (the
+    * known dynamic-overwrite granularity — a table format's metadata
+    * commit is the production fix), and the streaming checkpoint replays
+    * the batch, which heals it because the merge is idempotent
+    * (newest-per-key resolution + change-predicated upsert —
+    * RealtimeStreamSpec replays a batch twice and hashes the snapshot). */
+  def merge(updates: DataFrame, targetPath: String, keys: Seq[String],
+            compareCols: Seq[String], createdCol: Option[String],
+            order: Column, partitionCol: Option[String]): Unit = {
     val spark = updates.sparkSession
     val fs = new Path(targetPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new Path(targetPath))) {
-      // bootstrap: first batch becomes the snapshot (idempotent on replay)
-      Upsert.latestPerKey(updates, keys, order)
-        .write.mode("overwrite").partitionBy(partitionCol)
-        .parquet(targetPath)
-      return
+    def upsertInto(target: Option[DataFrame]): DataFrame =
+      Upsert.upsert(target, updates, keys, compareCols, createdCol, Some(order))
+    partitionCol match {
+      case None =>
+        upsertInto(snapshotPath(fs, targetPath)
+            .map(readSnapshot(spark, fs, _, updates.schema)))
+          .write.mode("overwrite").parquet(targetPath + ".next")
+        promote(fs, targetPath)
+      case Some(p) =>
+        require(keys.contains(p),
+          s"partitionCol $p must be a key column — a non-key partition " +
+            "column could change under a key, stranding the old row in a " +
+            "partition the merge never reads")
+        if (!fs.exists(new Path(targetPath))) {
+          // bootstrap: first batch becomes the snapshot (idempotent on replay)
+          upsertInto(None).write.mode("overwrite").partitionBy(p)
+            .parquet(targetPath)
+        } else {
+          val touched = updates.select(col(p)).distinct()
+            .collect().map(_.get(0)).toSeq
+          if (touched.nonEmpty) { // an empty batch has nothing to merge
+            val stage = targetPath + ".stage"
+            upsertInto(Some(readTouchedPartitions(spark, targetPath,
+                updates.schema, p, touched)))
+              .write.mode("overwrite").parquet(stage)
+            spark.read.schema(updates.schema).parquet(stage)
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy(p)
+              .parquet(targetPath)
+            fs.delete(new Path(stage), true)
+          }
+        }
     }
-    val touched = updates.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    if (touched.isEmpty) return // empty batch — nothing to merge
-    val pruned = readTouchedPartitions(spark, targetPath, updates.schema,
-      partitionCol, touched)
-    val merged = Upsert.upsert(pruned, updates, keys, compareCols, createdCol,
-      Some(order))
-    val stage = targetPath + ".stage"
-    merged.write.mode("overwrite").parquet(stage)
-    spark.read.schema(updates.schema).parquet(stage)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(targetPath)
-    fs.delete(new Path(stage), true)
   }
 
-  /** Per-partition compaction for [[mergeBatchPartitioned]] snapshots —
+  /** Per-partition compaction for partitioned [[merge]] snapshots —
     * [[compactSnapshot]]'s whole-snapshot rewrite has the same O(snapshot)
     * cost ceiling the partitioned merge exists to avoid. This one lists
     * partition directories (driver-side, bounded by the partition count),
@@ -268,8 +272,7 @@ object RealtimeStream {
     val partDirs = fs.listStatus(tgt)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
     val fragmented = partDirs.flatMap { p =>
-      val files = fs.listStatus(p.getPath).filter(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      val files = dataFiles(fs, p.getPath)
       val bytes = files.map(_.getLen).sum
       val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
       if (files.length > want) Some((p.getPath, bytes)) else None
@@ -297,46 +300,17 @@ object RealtimeStream {
     fs.delete(new Path(stage), true)
   }
 
-  /** One micro-batch of RAW FEED PAYLOADS: decode + flatten + enrich into
-    * [[Realtime.observations]], read the current snapshot with that
-    * frame's schema ([[readSnapshot]]), [[Realtime.merge]] the two, then
-    * swap — E1 end to end per batch, one shuffle and the write. */
-  def feedBatch(payloads: Dataset[Array[Byte]], targetPath: String,
-                weatherJson: Option[String]): Unit = {
-    implicit val spark: SparkSession = payloads.sparkSession
-    val fs = new Path(targetPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val obs = Realtime.observations(payloads, weatherJson)
-    val target = snapshotPath(fs, targetPath)
-      .map(readSnapshot(spark, fs, _, obs.schema))
-    Realtime.merge(obs, target)
-      .write.mode("overwrite").parquet(targetPath + ".next")
-    promote(fs, targetPath)
-  }
-
-  /** E1 micro-batch against a `start_date`-PARTITIONED snapshot — the
-    * 100 TB shape of [[feedBatch]]: decode + flatten + enrich, then
-    * [[mergePartitioned]] (latest entity per key by feed order) reads and
-    * rewrites ONLY the service dates this batch touches (a 1-minute GTFS
-    * batch spans a handful). Entities whose start_date is absent land in
-    * the NULL partition, which the pruned read covers with an explicit
-    * isNull disjunct. */
-  def feedBatchPartitioned(payloads: Dataset[Array[Byte]], targetPath: String,
-                           weatherJson: Option[String]): Unit = {
-    implicit val spark: SparkSession = payloads.sparkSession
-    mergePartitioned(Realtime.observations(payloads, weatherJson), targetPath,
-      Realtime.keys, Realtime.compareCols, partitionCol = "start_date",
-      createdCol = Some("created_at"), order = monotonically_increasing_id())
-  }
-
   /** The reference's cron loop as an actual stream: watch a directory of
     * fetched `.pb` feed files (the S1 fetcher's drop zone — or any
-    * binary-file landing path) and run E1 per micro-batch. `weatherJson`
-    * is re-read per batch via the supplied thunk, matching the reference's
-    * slowly-refreshed side input (SURVEY.md §2.9). `partitionSnapshot`
-    * selects the scale path: true stores the snapshot partitioned by
-    * start_date and merges via [[feedBatchPartitioned]] (O(touched
-    * dates) per batch); false keeps the whole-snapshot swap. */
+    * binary-file landing path) and run E1 per micro-batch: decode +
+    * flatten + enrich into [[Realtime.observations]], then [[merge]] with
+    * the latest entity per key by feed order — one shuffle and the write.
+    * `weatherJson` is re-read per batch via the supplied thunk, matching
+    * the reference's slowly-refreshed side input (SURVEY.md §2.9).
+    * `partitionSnapshot` selects the layout: true stores the snapshot
+    * partitioned by start_date (O(touched dates) per batch; entities
+    * without a start_date land in the NULL partition, which the pruned
+    * read covers); false keeps the whole-snapshot swap. */
   def startFeedStream(spark: SparkSession, feedDir: String,
                       targetPath: String, checkpointDir: String,
                       weatherJson: () => Option[String],
@@ -353,24 +327,24 @@ object RealtimeStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val contents = batch.select("content").as[Array[Byte]]
-        if (partitionSnapshot)
-          feedBatchPartitioned(contents, targetPath, weatherJson())
-        else feedBatch(contents, targetPath, weatherJson())
+        implicit val s: SparkSession = batch.sparkSession
+        merge(Realtime.observations(batch.select("content").as[Array[Byte]],
+            weatherJson()), targetPath, Realtime.keys, Realtime.compareCols,
+          Realtime.createdCol, monotonically_increasing_id(),
+          if (partitionSnapshot) Some("start_date") else None)
       }
       .start()
   }
 
   /** Start the streaming upsert: every micro-batch of realtime rows is
-    * merged into the keyed parquet snapshot. `stream` must be a streaming
-    * DataFrame (e.g. rows decoded from fetched feeds). `partitionCol`
-    * selects the scale path: `Some(keyCol)` stores the snapshot
-    * partitioned by that key column and merges via
-    * [[mergeBatchPartitioned]] (O(touched partitions) per batch — the
-    * production shape; `start_date` is the natural choice for the GTFS
-    * snapshot); `None` keeps the whole-snapshot crash-atomic swap of
-    * [[mergeBatch]] (fine for small snapshots, fatal write amplification
-    * at 100 TB). */
+    * [[merge]]d into the keyed parquet snapshot, the newest `orderCol` row
+    * winning among repeated keys. `stream` must be a streaming DataFrame
+    * (e.g. rows decoded from fetched feeds). `partitionCol` selects the
+    * layout: `Some(keyCol)` partitions the snapshot by that key column
+    * (O(touched partitions) per batch — the production shape;
+    * `start_date` is the natural choice for the GTFS snapshot); `None`
+    * keeps the whole-snapshot crash-atomic swap (fine for small
+    * snapshots, fatal write amplification at 100 TB). */
   def start(stream: DataFrame, targetPath: String, checkpointDir: String,
             keys: Seq[String], compareCols: Seq[String], orderCol: String,
             createdCol: Option[String] = None,
@@ -381,12 +355,8 @@ object RealtimeStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        partitionCol match {
-          case Some(p) => mergeBatchPartitioned(batch, targetPath, keys,
-            compareCols, orderCol, p, createdCol)
-          case None => mergeBatch(batch, targetPath, keys, compareCols,
-            orderCol, createdCol)
-        }
+        merge(batch, targetPath, keys, compareCols, createdCol, col(orderCol),
+          partitionCol)
       }
       .start()
 }

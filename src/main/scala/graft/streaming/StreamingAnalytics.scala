@@ -484,10 +484,11 @@ object StreamingAnalytics {
   def replayEwmaTws(spark: org.apache.spark.sql.SparkSession, obs: DataFrame,
                     baseDir: String,
                     batchPreds: Seq[org.apache.spark.sql.Column],
-                    restartAfterBatch: Option[Int] = None,
+                    restartAfterBatches: Seq[Int] = Nil,
                     onRestartInfo: RestartInfo => Unit = _ => ()): DataFrame =
     replayStream(spark, obs, baseDir, batchPreds, useRocksDb = true,
-      restartAfterBatch = restartAfterBatch, onRestartInfo = onRestartInfo) {
+      restartAfterBatches = restartAfterBatches,
+      onRestartInfo = onRestartInfo) {
       stream =>
         import spark.implicits._
         ewmaStreamTws(stream.as[Obs]).toDF()
@@ -513,7 +514,7 @@ object StreamingAnalytics {
     * batch retry — fine here (fresh checkpoint + out dir every run, one
     * local driver, deterministic inputs), but a production update-mode
     * sink needs the batchId-keyed overwrite discipline
-    * [[RealtimeStream.mergeBatchPartitioned]] implements. */
+    * the partitioned [[RealtimeStream.merge]] implements. */
   /** What a [[replayStream]] checkpoint-restart actually did — evidence
     * for the exactly-once claim: the SAME streaming query (one `id`,
     * restored from the checkpoint) ran as TWO runs (distinct `runId`s),
@@ -529,7 +530,6 @@ object StreamingAnalytics {
                    batchPreds: Seq[org.apache.spark.sql.Column],
                    useRocksDb: Boolean = false,
                    updateMode: Boolean = false,
-                   restartAfterBatch: Option[Int] = None,
                    onRestartInfo: RestartInfo => Unit = _ => (),
                    processingTimeDrain: Boolean = false,
                    updateSink: Option[(DataFrame, Long, String) => Unit] =
@@ -539,13 +539,13 @@ object StreamingAnalytics {
                    // state (a TTL written before the kill) expire before
                    // the resumed run observes it
                    beforeRestart: () => Unit = () => (),
-                   // additional kill points (VERDICT r15 item 7): the
-                   // backlog is staged into one tranche per restart and
-                   // the query is killed+resumed at EVERY point, so a
-                   // spec can pin e.g. a timer registered in batch 0
-                   // firing exactly once through TWO successive
-                   // restores. Merged with restartAfterBatch;
-                   // onRestartInfo fires once per boundary.
+                   // kill points (VERDICT r15 item 7): the query stops
+                   // after batch N-1 for each N and resumes from its
+                   // checkpoint; the backlog is staged into one tranche
+                   // per restart, so a spec can pin e.g. a timer
+                   // registered in batch 0 firing exactly once through
+                   // TWO successive restores. onRestartInfo fires once
+                   // per boundary.
                    restartAfterBatches: Seq[Int] = Nil)
                   (build: DataFrame => DataFrame): DataFrame = {
     // Phase-wall diagnostic (optimization measurement surface): with
@@ -562,7 +562,7 @@ object StreamingAnalytics {
       }
     // `updateSink` replaces the update-mode foreachBatch body with a
     // caller-supplied idempotent sink — (batch frame, batchId, out path)
-    // — e.g. RealtimeStream.mergeBatchPartitioned, whose
+    // — e.g. the partitioned RealtimeStream.merge, whose
     // latest-per-key + change-predicated merge makes a replayed batch a
     // no-op. The default parquet append is NOT idempotent under batch
     // retry (documented below); q266 runs the funnel through the merge
@@ -583,7 +583,7 @@ object StreamingAnalytics {
     // cleanup emits nothing), and the parquet sink's metadata log hides
     // any uncommitted trailing batch — so the drained sink is exactly as
     // deterministic as the AvailableNow path. Composed with
-    // `restartAfterBatch` (q269), each run drains to ITS OWN committed-
+    // `restartAfterBatches` (q269), each run drains to ITS OWN committed-
     // row target: the first run to the rows staged in the released
     // batches (only those files exist, so it can never overshoot), the
     // second — with a fresh listener, counting only its own commits —
@@ -606,11 +606,10 @@ object StreamingAnalytics {
     // bit-identical final sink.
     val pendingDir = new Path(s"$baseDir/pending")
     fs.mkdirs(srcDir)
-    val restarts = (restartAfterBatch.toSeq ++ restartAfterBatches)
-      .distinct.sorted
+    val restarts = restartAfterBatches.distinct.sorted
     restarts.foreach { n =>
       require(n >= 1 && n < batchPreds.length,
-        s"restartAfterBatch must split the backlog: got $n of ${batchPreds.length} batches")
+        s"restartAfterBatches must split the backlog: got $n of ${batchPreds.length} batches")
     }
     // one pending tranche per restart point: batch i waits in tranche
     // k = #(restart points <= i) until the k-th resume releases it

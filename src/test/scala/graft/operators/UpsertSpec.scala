@@ -29,7 +29,7 @@ class UpsertSpec extends SparkSpec {
     (4L, "d", 20L, 20L)) // new key → insert
 
   test("S9 upsert: changed/unchanged/new/missing key resolution") {
-    val out = collect(Upsert.upsert(target, updates, Seq("k"),
+    val out = collect(Upsert.upsert(Some(target), updates, Seq("k"),
       compareCols = Seq("v"), createdCol = Some("created")))
     assert(out === Set(
       (1L, "a", 10L, 10L), // unchanged: update ignored, updated_at kept
@@ -40,9 +40,9 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("S9 upsert is idempotent: applying the same updates twice = once") {
-    val once = Upsert.upsert(target, updates, Seq("k"),
+    val once = Upsert.upsert(Some(target), updates, Seq("k"),
       Seq("v"), Some("created"))
-    val twice = Upsert.upsert(once, updates, Seq("k"),
+    val twice = Upsert.upsert(Some(once), updates, Seq("k"),
       Seq("v"), Some("created"))
     assert(collect(once) === collect(twice))
   }
@@ -55,8 +55,8 @@ class UpsertSpec extends SparkSpec {
         else None
       }: _*)
       val t0 = snap(1L); val u = snap(2L)
-      val m1 = Upsert.upsert(t0, u, Seq("k"), Seq("v"), Some("created"))
-      val m2 = Upsert.upsert(m1, u, Seq("k"), Seq("v"), Some("created"))
+      val m1 = Upsert.upsert(Some(t0), u, Seq("k"), Seq("v"), Some("created"))
+      val m2 = Upsert.upsert(Some(m1), u, Seq("k"), Seq("v"), Some("created"))
       assert(collect(m1) === collect(m2))
       val keys = m1.select("k").collect().map(_.getLong(0))
       assert(keys.length === keys.distinct.length)
@@ -74,8 +74,8 @@ class UpsertSpec extends SparkSpec {
       rows.toDF("trip", "start_date", "v", "created", "updated")
     val tgt = frame((1L, None, "a", 10L, 10L), (2L, Some("d"), "b", 10L, 10L))
     val upd = frame((1L, None, "A", 20L, 20L), (2L, None, "n", 20L, 20L))
-    val out = Upsert.upsert(tgt, upd, Seq("trip", "start_date"), Seq("v"),
-      Some("created")).collect()
+    val out = Upsert.upsert(Some(tgt), upd, Seq("trip", "start_date"),
+      Seq("v"), Some("created")).collect()
       .map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2),
         r.getLong(3), r.getLong(4))).toSet
     assert(out === Set(
@@ -91,7 +91,7 @@ class UpsertSpec extends SparkSpec {
       rows.toDF("k", "v", "created", "updated")
     val tgt = frame((1L, None, 10L, 10L), (2L, None, 10L, 10L))
     val upd = frame((1L, None, 20L, 20L), (2L, Some("x"), 20L, 20L))
-    val out = Upsert.upsert(tgt, upd, Seq("k"), Seq("v"), Some("created"))
+    val out = Upsert.upsert(Some(tgt), upd, Seq("k"), Seq("v"), Some("created"))
       .collect().map(r => (r.getLong(0), Option(r.getString(1)),
         r.getLong(2), r.getLong(3))).toSet
     assert(out === Set(
@@ -109,7 +109,7 @@ class UpsertSpec extends SparkSpec {
       (1L, "A", 3L, 20L, 20L), (1L, "stale", 2L, 20L, 20L), // newest: "A"
       (2L, "B", 2L, 20L, 20L), (2L, "b", 4L, 20L, 20L),     // newest = stored
       (3L, "old", 1L, 20L, 20L), (3L, "c", 5L, 20L, 20L))   // new key
-    val out = Upsert.upsert(tgt, upd, Seq("k"), Seq("v"), Some("created"),
+    val out = Upsert.upsert(Some(tgt), upd, Seq("k"), Seq("v"), Some("created"),
       order = Some(col("seq"))).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet

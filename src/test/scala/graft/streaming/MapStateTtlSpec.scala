@@ -114,7 +114,7 @@ class MapStateTtlSpec extends SparkSpec {
         "target/ttl_restart_spec",
         Seq(col("tse") < 1500L, col("tse") >= 1500L),
         useRocksDb = true, processingTimeDrain = true,
-        restartAfterBatch = Some(1),
+        restartAfterBatches = Seq(1),
         beforeRestart = () => Thread.sleep(28000L)) { st =>
         StreamingAnalytics.dimAggStream(
           st.as[StreamingAnalytics.DEvent],

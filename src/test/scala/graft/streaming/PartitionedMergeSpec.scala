@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   *  - replaying the same batch (checkpoint-replay after a crash between
   *    commit and checkpoint) leaves the snapshot unchanged — the
   *    exactly-once-by-idempotence argument for `startFeedStream` restarts;
+  *  - a touched partition whose files drifted from the batch schema
+  *    fails the merge instead of reading back NULLs;
+  *  - the partitioned and whole-snapshot layouts of the one merge core
+  *    agree batch for batch;
   *  - per-partition compaction rewrites only fragmented partitions.
   */
 class PartitionedMergeSpec extends SparkSpec {
@@ -33,11 +37,15 @@ class PartitionedMergeSpec extends SparkSpec {
     val snap = (for { d <- 1 to 4; k <- 1 to 2 }
       yield (s"d$d", k.toLong, s"v$d$k", d.toLong, 100L, 100L))
       .toDF("day", "k", "v", "seq", "created", "updated")
-    RealtimeStream.mergeBatchPartitioned(snap, out.getPath,
-      keys = Seq("day", "k"), compareCols = Seq("v"), orderCol = "seq",
-      partitionCol = "day", createdCol = Some("created"))
+    RealtimeStream.merge(snap, out.getPath,
+      keys = Seq("day", "k"), compareCols = Seq("v"),
+      createdCol = Some("created"), order = col("seq"),
+      partitionCol = Some("day"))
     (out.getPath, snap)
   }
+
+  // (day, k, v, seq, created, updated) with a nullable day
+  private type R = (Option[String], Long, String, Long, Long, Long)
 
   private def snapRows(path: String): Set[(String, Long, String, Long, Long)] =
     spark.read.parquet(path)
@@ -58,9 +66,10 @@ class PartitionedMergeSpec extends SparkSpec {
       ("d2", 1L, "v21", 10L, 200L, 200L),
       ("d2", 9L, "new", 10L, 200L, 200L))
       .toDF("day", "k", "v", "seq", "created", "updated")
-    RealtimeStream.mergeBatchPartitioned(batch, path,
-      keys = Seq("day", "k"), compareCols = Seq("v"), orderCol = "seq",
-      partitionCol = "day", createdCol = Some("created"))
+    RealtimeStream.merge(batch, path,
+      keys = Seq("day", "k"), compareCols = Seq("v"),
+      createdCol = Some("created"), order = col("seq"),
+      partitionCol = Some("day"))
 
     // days 3 and 4 were never opened for write
     val after = listFiles(new java.io.File(path))
@@ -104,14 +113,81 @@ class PartitionedMergeSpec extends SparkSpec {
     val (path, _) = fixture("ptm_replay")
     val batch = Seq(("d1", 1L, "V11", 10L, 200L, 200L))
       .toDF("day", "k", "v", "seq", "created", "updated")
-    def merge(): Unit = RealtimeStream.mergeBatchPartitioned(batch, path,
-      keys = Seq("day", "k"), compareCols = Seq("v"), orderCol = "seq",
-      partitionCol = "day", createdCol = Some("created"))
+    def merge(): Unit = RealtimeStream.merge(batch, path,
+      keys = Seq("day", "k"), compareCols = Seq("v"),
+      createdCol = Some("created"), order = col("seq"),
+      partitionCol = Some("day"))
     merge()
     val once = snapRows(path)
     merge() // the replay
     assert(snapRows(path) === once,
       "replaying an already-applied batch changed the snapshot")
+  }
+
+  test("a touched partition whose files drifted from the batch schema " +
+    "fails the next merge loudly; untouched partitions are not checked") {
+    import spark.implicits._
+    val (path, _) = fixture("ptm_drift")
+    // rewrite day d2 as an older writer would have left it: `v` dropped
+    val d2 = new java.io.File(s"$path/day=d2")
+    val tmp = s"$path.drifted"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    spark.read.parquet(d2.getPath).drop("v").write.parquet(tmp)
+    org.apache.commons.io.FileUtils.deleteDirectory(d2)
+    assert(new java.io.File(tmp).renameTo(d2))
+    def merge(day: String): Unit = RealtimeStream.merge(
+      Seq((day, 1L, "X", 10L, 200L, 200L))
+        .toDF("day", "k", "v", "seq", "created", "updated"), path,
+      keys = Seq("day", "k"), compareCols = Seq("v"),
+      createdCol = Some("created"), order = col("seq"),
+      partitionCol = Some("day"))
+    val e = intercept[IllegalStateException](merge("d2"))
+    assert(e.getMessage.contains("day=d2") &&
+      e.getMessage.contains("missing [v]"), e.getMessage)
+    merge("d1") // the footer check reads only the touched partitions
+    assert(snapRows(path).contains(("d1", 1L, "X", 100L, 200L)))
+  }
+
+  test("one merge core, two layouts: the same three batches merged whole-" +
+    "snapshot and day-partitioned give the same rows after every batch") {
+    import spark.implicits._
+    val batches: Seq[Seq[R]] = Seq(
+      Seq((Some("d1"), 1L, "a", 1L, 100L, 100L),
+        (Some("d1"), 1L, "a2", 2L, 100L, 100L), // repeated key: seq 2 wins
+        (None, 2L, "n", 1L, 100L, 100L),        // NULL key part
+        (Some("d2"), 3L, "c", 1L, 100L, 100L)),
+      Seq((Some("d1"), 1L, "A", 3L, 200L, 200L), // changed
+        (Some("d2"), 3L, "c", 2L, 200L, 200L),   // unchanged: row kept
+        (None, 2L, "N", 2L, 200L, 200L),         // NULL-keyed row changed
+        (Some("d3"), 4L, "x", 1L, 200L, 200L)),  // new key
+      Seq((None, 2L, "N", 3L, 300L, 300L),       // unchanged
+        (Some("d1"), 5L, "e", 1L, 300L, 300L)))  // new key
+    def run(name: String, partitionCol: Option[String]): Seq[Set[R]] = {
+      val path = s"target/$name"
+      Seq("", ".next", ".old", ".stage").foreach(sfx =>
+        org.apache.commons.io.FileUtils.deleteQuietly(
+          new java.io.File(path + sfx)))
+      batches.map { b =>
+        RealtimeStream.merge(
+          b.toDF("day", "k", "v", "seq", "created", "updated"), path,
+          keys = Seq("day", "k"), compareCols = Seq("v"),
+          createdCol = Some("created"), order = col("seq"), partitionCol)
+        spark.read.parquet(path)
+          .select("day", "k", "v", "seq", "created", "updated")
+          .as[R].collect().toSet
+      }
+    }
+    val whole = run("ptm_layout_whole", None)
+    assert(run("ptm_layout_parted", Some("day")) === whole)
+    // the first batch on an empty target: the newest row per key
+    assert(whole.head === batches.head.groupBy(r => (r._1, r._2))
+      .values.map(_.maxBy(_._4)).toSet)
+    assert(whole.last === Set[R](
+      (Some("d1"), 1L, "A", 3L, 100L, 200L), // created kept, updated stamped
+      (None, 2L, "N", 2L, 100L, 200L),
+      (Some("d2"), 3L, "c", 1L, 100L, 100L),
+      (Some("d3"), 4L, "x", 1L, 200L, 200L),
+      (Some("d1"), 5L, "e", 1L, 300L, 300L)))
   }
 
   test("streaming end-to-end: start(partitionCol=Some) maintains the " +

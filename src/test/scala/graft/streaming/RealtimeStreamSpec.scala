@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions.lit
+import graft.pipelines.Realtime
+import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
 import org.apache.spark.sql.streaming.Trigger
 
 /** §2.9 — streaming upsert over a file source: two micro-batch rounds
@@ -97,8 +98,14 @@ class RealtimeStreamSpec extends SparkSpec {
     val base = Paths.get("target", "test_drift")
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     val tgt = base.resolve("tgt").toString
-    def batch(arr: Long) = spark.createDataset(Seq(payload(1, arr)))
-    RealtimeStream.feedBatch(batch(1000L), tgt, None)
+    def feed(arr: Long): Unit = {
+      implicit val s: org.apache.spark.sql.SparkSession = spark
+      RealtimeStream.merge(Realtime.observations(
+          spark.createDataset(Seq(payload(1, arr))), None), tgt,
+        Realtime.keys, Realtime.compareCols, Realtime.createdCol,
+        monotonically_increasing_id(), partitionCol = None)
+    }
+    feed(1000L)
     // rewrite the snapshot as an older writer would have left it
     def rewrite(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
         : Unit = {
@@ -109,13 +116,13 @@ class RealtimeStreamSpec extends SparkSpec {
     }
     rewrite(_.drop("temperature"))
     val dropped = intercept[IllegalStateException](
-      RealtimeStream.feedBatch(batch(2000L), tgt, None))
+      feed(2000L))
     assert(dropped.getMessage.contains("missing [temperature]"),
       dropped.getMessage)
     rewrite(_.withColumn("temperature", lit(1.5d))
       .withColumn("stop_sequence", $"stop_sequence".cast("int")))
     val retyped = intercept[IllegalStateException](
-      RealtimeStream.feedBatch(batch(2000L), tgt, None))
+      feed(2000L))
     assert(retyped.getMessage.contains("retyped [stop_sequence: int"),
       retyped.getMessage)
     // the failed batches left the snapshot in place
@@ -131,8 +138,8 @@ class RealtimeStreamSpec extends SparkSpec {
     val tgt = base.resolve("tgt").toString
     val fs = new Path(tgt).getFileSystem(spark.sessionState.newHadoopConf())
 
-    RealtimeStream.mergeBatch(Seq((1L, "a", 1L)).toDF("k", "v", "seq"),
-      tgt, Seq("k"), Seq("v"), "seq")
+    RealtimeStream.merge(Seq((1L, "a", 1L)).toDF("k", "v", "seq"),
+      tgt, Seq("k"), Seq("v"), None, col("seq"), None)
     // Simulate the crash window: live snapshot already retired to .old,
     // .next not yet promoted (here: gone with the crashed writer).
     assert(fs.rename(new Path(tgt), new Path(tgt + ".old")))
@@ -143,8 +150,8 @@ class RealtimeStreamSpec extends SparkSpec {
     assert(spark.read.parquet(snap.get.toString).count() === 1L)
 
     // ...and the next merge builds on it, promotes, and cleans up.
-    RealtimeStream.mergeBatch(Seq((2L, "b", 1L)).toDF("k", "v", "seq"),
-      tgt, Seq("k"), Seq("v"), "seq")
+    RealtimeStream.merge(Seq((2L, "b", 1L)).toDF("k", "v", "seq"),
+      tgt, Seq("k"), Seq("v"), None, col("seq"), None)
     assert(fs.exists(new Path(tgt)) && !fs.exists(new Path(tgt + ".old")))
     assert(spark.read.parquet(tgt).select("k").as[Long].collect().toSet
       === Set(1L, 2L))
@@ -193,24 +200,24 @@ class RealtimeStreamSpec extends SparkSpec {
       spark.read.parquet(tgt).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).toSet
-    RealtimeStream.mergeBatch(
+    RealtimeStream.merge(
       Seq((1L, "a", 1L, 100L, 100L), (2L, "b", 1L, 100L, 100L))
         .toDF("k", "v", "seq", "created", "updated"),
-      tgt, Seq("k"), Seq("v"), "seq", createdCol = Some("created"))
+      tgt, Seq("k"), Seq("v"), Some("created"), col("seq"), None)
     // the batch the checkpoint will replay (key 1 changed, key 3 new,
     // key 1 also repeated in-batch — the merge must pick seq 3)
     val batch = Seq((1L, "A0", 2L, 200L, 200L), (1L, "A", 3L, 200L, 200L),
       (3L, "c", 1L, 200L, 200L))
       .toDF("k", "v", "seq", "created", "updated")
-    RealtimeStream.mergeBatch(batch, tgt, Seq("k"), Seq("v"), "seq",
-      createdCol = Some("created"))
+    RealtimeStream.merge(batch, tgt, Seq("k"), Seq("v"), Some("created"),
+      col("seq"), None)
     val afterCommit = snapshot()
     assert(afterCommit === Set((1L, "A", 3L, 100L, 200L),
       (2L, "b", 1L, 100L, 100L), (3L, "c", 1L, 200L, 200L)))
     // crash window: promote done, checkpoint not committed → the stream
     // restarts and foreachBatch runs the SAME batch again
-    RealtimeStream.mergeBatch(batch, tgt, Seq("k"), Seq("v"), "seq",
-      createdCol = Some("created"))
+    RealtimeStream.merge(batch, tgt, Seq("k"), Seq("v"), Some("created"),
+      col("seq"), None)
     assert(snapshot() === afterCommit,
       "replaying an already-committed batch changed the snapshot")
   }

@@ -25,7 +25,7 @@ class RestartSpec extends SparkSpec {
         "target/twsrestart_spec", Seq(
         col("ts") < 200L, col("ts") >= 200L && col("ts") < 300L,
         col("ts") >= 300L),
-        restartAfterBatch = Some(1), onRestartInfo = i => info = Some(i))
+        restartAfterBatches = Seq(1), onRestartInfo = i => info = Some(i))
       .collect().map(r => (r.getAs[String]("trip_id"),
         r.getAs[Long]("ts")) -> r.getAs[Double]("ewma")).toMap
     val ref = history.groupBy(_._1).flatMap { case (k, h) =>
@@ -65,7 +65,7 @@ class RestartSpec extends SparkSpec {
         col("ts") >= timestamp_seconds(lit(1200L)) &&
           col("ts") < timestamp_seconds(lit(50000L)),
         col("ts") >= timestamp_seconds(lit(50000L))),
-        restartAfterBatch = Some(1), onRestartInfo = i => info = Some(i)) {
+        restartAfterBatches = Seq(1), onRestartInfo = i => info = Some(i)) {
         st =>
           val l = st.where(col("event_type") === "click")
             .select(col("user_id"), col("ts").as("l_ts"))
@@ -119,7 +119,7 @@ class RestartSpec extends SparkSpec {
           col("event_time") < timestamp_seconds(lit(150000L)),
         col("event_time") >= timestamp_seconds(lit(150000L))),
         useRocksDb = true,
-        restartAfterBatch = Some(1), onRestartInfo = i => info = Some(i)) {
+        restartAfterBatches = Seq(1), onRestartInfo = i => info = Some(i)) {
         st =>
           StreamingAnalytics.sessionizeStreamTws(
             st.as[StreamingAnalytics.SEvent], gapSeconds = 60L).toDF()
@@ -194,7 +194,7 @@ class RestartSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       StreamingAnalytics.replayEwmaTws(spark, obs,
         "target/twsrestart_spec_bad", Seq(col("ts") < 200L),
-        restartAfterBatch = Some(1))
+        restartAfterBatches = Seq(1))
     }
   }
 }
