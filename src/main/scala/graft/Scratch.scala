@@ -27,8 +27,6 @@ object Scratch {
     if (args(0) == "multifile") {
       multiFile(spark, args(1), args(2)); spark.stop(); return
     }
-    if (args(0) == "q130phases") { q130Phases(spark, args(1)); spark.stop(); return }
-    if (args(0) == "ttlprobe") { ttlProbe(spark); spark.stop(); return }
     if (args(0) == "streamphases") {
       // streamphases <query> <sfDir> — per-micro-batch durationMs
       // breakdown for a replay row, to see where replay wall time goes
@@ -69,7 +67,7 @@ object Scratch {
       // JVM: alternate a runtime-togglable knob (A on even reps, B on odd)
       // so host-contention windows hit both arms equally; report per-query
       // medians per arm. Modes: crc (LocalFileSystem write checksums
-      // on/off), parts (replay statePartitions auto vs 4).
+      // on/off), fctx (FileContext checksum leg on/off).
       val (mode, sfDir, reps) = (args(1), args(2), args(4).toInt)
       // rep 0 is excluded and ABBA assigns r%4∈{0,3} to arm A: below 5
       // reps arm A collects zero samples and a.min throws; reps ≡ 1
@@ -91,9 +89,6 @@ object Scratch {
           if (a) hc.unset("fs.AbstractFileSystem.file.impl")
           else hc.set("fs.AbstractFileSystem.file.impl",
             "org.apache.hadoop.fs.local.RawLocalFs")
-        case "parts" =>
-          if (a) spark.conf.unset("spark.graft.replay.statePartitions")
-          else spark.conf.set("spark.graft.replay.statePartitions", "4")
         case m => sys.error(s"unknown abtest mode $m")
       }
       // warmup outside timing
@@ -462,67 +457,6 @@ object Scratch {
     * 8-file parquet directory (the driver testdata is one file per
     * table, which under-exercises scan parallelism and AQE coalescing).
     * Run Bench with SPARK_GRAFT_SF_DIR pointing at the output. */
-  /** Phase timing for q130's PPJoin: candidate generation vs exact
-    * verification (replicates Dedup.prefixJaccardPairs inline so each
-    * phase can be forced separately). */
-  private def q130Phases(spark: SparkSession, sfDir: String): Unit = {
-    import graft.text.TextAnalysis
-    val minJaccard = 0.4
-    val docs = Tables.t(spark, sfDir, "documents")
-    val sh = docs.select(col("doc_id").as("id"),
-        TextAnalysis.ngramShingles(TextAnalysis.tokens(col("text")), 2).as("sg"))
-      .where(size(col("sg")) > 0)
-    val posting = sh.select(col("id"), explode(col("sg")).as("shingle"))
-    val sizes = sh.select(col("id"), size(col("sg")).cast("long").as("n"))
-    val dfreq = posting.groupBy("shingle").agg(count(lit(1)).as("__df"))
-    val idxFrac = 2.0 * minJaccard / (1.0 + minJaccard)
-    val prefix = posting.join(dfreq, "shingle")
-      .withColumn("__r", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("id")
-          .orderBy(col("__df"), col("shingle"))))
-      .join(sizes, "id")
-      .where(col("__r") <= col("n") - ceil(lit(minJaccard) * col("n")) + 1)
-      .select(xxhash64(col("shingle")).as("__sk"), col("id"), col("n"),
-        col("__r"),
-        (col("__r") <=
-          col("n") - ceil(lit(idxFrac) * col("n")) + 1).as("__is_idx"))
-    val joined = prefix.where(col("__is_idx"))
-      .select(col("__sk"), col("id").as("id_i"), col("n").as("n_i"),
-        col("__r").as("r_i"))
-      .join(prefix.select(col("__sk"), col("id").as("id_p"),
-        col("n").as("n_p"), col("__r").as("r_p")), Seq("__sk"))
-      .where((col("n_i") < col("n_p") ||
-          (col("n_i") === col("n_p") && col("id_i") < col("id_p"))) &&
-        col("n_i") >= ceil(lit(minJaccard) * col("n_p")) &&
-        (lit(1L) + least(col("n_i") - col("r_i"), col("n_p") - col("r_p")))
-          .cast("double") >=
-          lit(minJaccard / (1.0 + minJaccard)) *
-            (col("n_i") + col("n_p")).cast("double") - lit(1e-9))
-    val cand = joined
-      .select(least(col("id_i"), col("id_p")).as("id_a"),
-        greatest(col("id_i"), col("id_p")).as("id_b"))
-      .distinct()
-    def time(label: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      println(s"PHASE $label ${(System.nanoTime() - t0) / 1e9}")
-    }
-    time("prefix_only")(println("prefix=" + prefix.count()))
-    time("join_prefilter")(println("joined=" + joined.count()))
-    time("candidates")(println("cand=" + cand.count()))
-    val full = cand
-      .join(sh.select(col("id").as("id_a"), col("sg").as("sg_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sg").as("sg_b")), "id_b")
-      .withColumn("__inter",
-        size(array_intersect(col("sg_a"), col("sg_b"))).cast("double"))
-      .select(col("id_a"), col("id_b"),
-        (col("__inter") /
-          ((size(col("sg_a")) + size(col("sg_b"))).cast("double") -
-            col("__inter"))).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
-    time("full_including_candidates")(
-      full.write.format("noop").mode("overwrite").save())
-  }
-
   private def multiFile(spark: SparkSession, sfDir: String, out: String): Unit = {
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
@@ -543,49 +477,6 @@ object Scratch {
     * AQE off, (b) AQE skew-join split, (c) graft.operators.Salt. All
     * three produce identical rows (SaltSpec pins that); this measures
     * the wall-clock shape of each on real sf data. */
-  // ttlprobe — debug driver for the MapState+TTL machine: MemoryStream
-  // feed, progress printed per batch, sink count polled.
-  private def ttlProbe(spark: SparkSession): Unit = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit =
-        println(s"STARTED run=${e.runId}")
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit =
-        println(s"PROGRESS batch=${e.progress.batchId} " +
-          s"in=${e.progress.numInputRows} " +
-          s"sink=${e.progress.sink.numOutputRows}")
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit =
-        println(s"TERMINATED ex=${e.exception}")
-    }
-    spark.streams.addListener(listener)
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.StreamingAnalytics.DEvent]
-    val q = graft.streaming.StreamingAnalytics.dimAggStream(in.toDS(),
-        org.apache.spark.sql.streaming.TTLConfig(
-          java.time.Duration.ofSeconds(5)))
-      .toDF()
-      .writeStream.format("memory").queryName("ttlprobe")
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime("250 milliseconds"))
-      .outputMode("append").start()
-    in.addData(
-      graft.streaming.StreamingAnalytics.DEvent(1L, 100L, "click", 5L),
-      graft.streaming.StreamingAnalytics.DEvent(1L, 102L, "view", 3L))
-    (1 to 20).foreach { i =>
-      Thread.sleep(500L)
-      q.exception.foreach(e => println(s"QUERY FAILED: $e"))
-      println(s"poll $i: sink=${spark.table("ttlprobe").count()}")
-    }
-    q.stop()
-  }
-
   private def skewBench(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
     val ev = Tables.t(spark, dir, "events")

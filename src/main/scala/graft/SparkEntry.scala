@@ -511,6 +511,25 @@ object SparkEntry {
       f(col("props"))))
   }
 
+  /** The replay rows' micro-batch slices over column `c`: `c < k1`,
+    * `c >= k1 && c < k2`, …, `c >= kN` — disjoint and ts-ordered, the
+    * replay harness's determinism contract. */
+  private[graft] def replaySlices(c: Column, cuts: Seq[Column]): Seq[Column] =
+    ((c < cuts.head) +: cuts.zip(cuts.tail).map { case (lo, hi) =>
+      c >= lo && c < hi }) :+ (c >= cuts.last)
+
+  /** The replay rows' cut days: two ten-day slices of the events
+    * history, then — for rows with sentinel batches — the June cut that
+    * sets the December sentinels apart and the cut between the two
+    * sentinels. Rows that slice epoch seconds use the first two. */
+  private val replayCutDays =
+    Seq("2024-01-11", "2024-01-21", "2024-06-01", "2024-12-15")
+  private[graft] val replayTsCuts: Seq[Column] =
+    replayCutDays.map(d => lit(d).cast("timestamp"))
+  private[graft] val replayEpochCuts: Seq[Column] =
+    replayCutDays.take(2).map(d =>
+      lit(java.time.Instant.parse(s"${d}T00:00:00Z").getEpochSecond))
+
   /** Naive per-lang window top-k oracle, shared by q113 (bounded
     * two-window groupTopK) and q120 (mergeable top-k aggregate) — both
     * must produce exactly this shortlist. */
@@ -1662,14 +1681,12 @@ object SparkEntry {
         .groupBy(col("user_id").cast("string").as("trip_id"),
           unix_timestamp(col("ts")).as("ts"))
         .agg(max_by(col("value"), col("event_id")).as("delay_min"))
-      val cut1 = lit(java.time.Instant.parse("2024-01-11T00:00:00Z")
-        .getEpochSecond)
-      val cut2 = lit(java.time.Instant.parse("2024-01-21T00:00:00Z")
-        .getEpochSecond)
-      graft.streaming.StreamingAnalytics.replayEwmaTws(s, obs, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2))
+      graft.streaming.StreamingAnalytics.replayStream(s, obs, base,
+          replaySlices(col("ts"), replayEpochCuts)) { st =>
+          import s.implicits._
+          graft.streaming.StreamingAnalytics.ewmaStreamTws(
+            st.as[graft.streaming.StreamingAnalytics.Obs]).toDF()
+        }
         .select(col("trip_id"), col("ts"), col("ewma"))
     }),
 
@@ -1694,12 +1711,8 @@ object SparkEntry {
       val base = s"target/sjreplay_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2)) { st =>
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayTsCuts.take(2))) { st =>
           val l = st.where(col("event_type") === "click")
             .select(col("event_id").as("l_event_id"), col("user_id"),
               col("ts").as("l_ts"))
@@ -1735,12 +1748,8 @@ object SparkEntry {
       val ev = t(s, dir, "events").select(col("event_id"), col("ts"),
         col("user_id"), col("event_type"), col("value"))
       val withDups = ev.unionAll(ev.where(col("event_id") % 10L === 0L))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      graft.streaming.StreamingAnalytics.replayStream(s, withDups, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2)) { st =>
+      graft.streaming.StreamingAnalytics.replayStream(s, withDups, base,
+          replaySlices(col("ts"), replayTsCuts.take(2))) { st =>
           st.withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1769,17 +1778,8 @@ object SparkEntry {
       val sent = Seq("2024-12-01 00:00:00", "2024-12-31 00:00:00")
         .toDF("ts_str")
         .select(to_timestamp(col("ts_str")).as("ts"), lit(0.0).as("value"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2 && col("ts") < cutS,
-          col("ts") >= cutS && col("ts") < cutB,   // sentinel A
-          col("ts") >= cutB)) { st =>              // sentinel B
+          base, replaySlices(col("ts"), replayTsCuts)) { st =>
           st.withWatermark("ts", "1 hour")
             .groupBy(window(col("ts"), "6 hours"))
             .agg(Dashboard.exactAvg(col("value")).as("avg_value"),
@@ -1809,12 +1809,8 @@ object SparkEntry {
         col("user_id"), col("event_type"))
       val seen = ev.where(col("event_id") % 3L === 0L)
         .select(col("event_id").as("seen_id"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2)) { st =>
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayTsCuts.take(2))) { st =>
           st.join(seen, col("event_id") === col("seen_id"), "left_anti")
             .select(col("event_id"), col("user_id"), col("event_type"),
               unix_timestamp(col("ts")).as("ts_epoch"))
@@ -1840,14 +1836,8 @@ object SparkEntry {
         .groupBy(col("user_id").cast("string").as("trip_id"),
           unix_timestamp(col("ts")).as("ts"))
         .agg(max_by(col("value"), col("event_id")).as("delay_min"))
-      val cut1 = lit(java.time.Instant.parse("2024-01-11T00:00:00Z")
-        .getEpochSecond)
-      val cut2 = lit(java.time.Instant.parse("2024-01-21T00:00:00Z")
-        .getEpochSecond)
-      graft.streaming.StreamingAnalytics.replayStream(s, obs, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2)) { st =>
+      graft.streaming.StreamingAnalytics.replayStream(s, obs, base,
+          replaySlices(col("ts"), replayEpochCuts)) { st =>
           graft.streaming.StreamingAnalytics.lateStreaks(
             st.as[graft.streaming.StreamingAnalytics.Obs],
             lateThreshold = 50.0).toDF()
@@ -1879,17 +1869,8 @@ object SparkEntry {
         .toDF("ts_str")
         .select(lit("zz_sentinel").as("key"),
           to_timestamp(col("ts_str")).as("event_time"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("event_time") < cut1,
-          col("event_time") >= cut1 && col("event_time") < cut2,
-          col("event_time") >= cut2 && col("event_time") < cutS,
-          col("event_time") >= cutS && col("event_time") < cutB,
-          col("event_time") >= cutB)) { st =>
+          base, replaySlices(col("event_time"), replayTsCuts)) { st =>
           graft.streaming.StreamingAnalytics.sessionizeStream(
             st.as[graft.streaming.StreamingAnalytics.SEvent],
             gapSeconds = 21600L).toDF()
@@ -1918,14 +1899,8 @@ object SparkEntry {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_timestamp(col("ts")).as("ts"))
-      val cut1 = lit(java.time.Instant.parse("2024-01-11T00:00:00Z")
-        .getEpochSecond)
-      val cut2 = lit(java.time.Instant.parse("2024-01-21T00:00:00Z")
-        .getEpochSecond)
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2), updateMode = true) { st =>
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayEpochCuts), updateMode = true) { st =>
           graft.streaming.StreamingAnalytics.funnelStagesStream(
             st.as[graft.streaming.StreamingAnalytics.FEvent],
             stages = Seq("view", "click", "purchase")).toDF()
@@ -1971,12 +1946,8 @@ object SparkEntry {
         docs.queryExecution.optimizedPlan.stats.sizeInBytes
       val stateBuckets = BigInt(1).max(
         BigInt(4096).min(corpusBytes >> 22)).toInt
-      graft.streaming.StreamingAnalytics.replayStream(s, docs, base, Seq(
-          col("doc_id") < 100L,
-          col("doc_id") >= 100L && col("doc_id") < 250L,
-          col("doc_id") >= 250L && col("doc_id") < 450L,
-          col("doc_id") >= 450L),
-          updateMode = true,
+      graft.streaming.StreamingAnalytics.replayStream(s, docs, base,
+          replaySlices(col("doc_id"), Seq(100L, 250L, 450L).map(lit(_))),
           updateSink = Some { (df, bid, out) =>
             graft.streaming.AdmissionGate.admitBatch(df, out, bid,
               docBuckets = stateBuckets, bandBuckets = stateBuckets)
@@ -2014,17 +1985,8 @@ object SparkEntry {
             to_timestamp(col("ts_str")).as("ts"), col("uid").as("user_id"),
             col("etype").as("event_type"))
       }
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2 && col("ts") < cutS,
-          col("ts") >= cutS && col("ts") < cutB,   // sentinel pair A
-          col("ts") >= cutB)) { st =>              // sentinel pair B
+          base, replaySlices(col("ts"), replayTsCuts)) { st =>
           val l = st.where(col("event_type") === "click")
             .select(col("event_id").as("l_event_id"), col("user_id"),
               col("ts").as("l_ts"))
@@ -2069,15 +2031,13 @@ object SparkEntry {
         .groupBy(col("user_id").cast("string").as("trip_id"),
           unix_timestamp(col("ts")).as("ts"))
         .agg(max_by(col("value"), col("event_id")).as("delay_min"))
-      val cut1 = lit(java.time.Instant.parse("2024-01-11T00:00:00Z")
-        .getEpochSecond)
-      val cut2 = lit(java.time.Instant.parse("2024-01-21T00:00:00Z")
-        .getEpochSecond)
-      graft.streaming.StreamingAnalytics.replayEwmaTws(s, obs, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2),
-          restartAfterBatches = Seq(1))
+      graft.streaming.StreamingAnalytics.replayStream(s, obs, base,
+          replaySlices(col("ts"), replayEpochCuts),
+          restartAfterBatches = Seq(1)) { st =>
+          import s.implicits._
+          graft.streaming.StreamingAnalytics.ewmaStreamTws(
+            st.as[graft.streaming.StreamingAnalytics.Obs]).toDF()
+        }
         .select(col("trip_id"), col("ts"), col("ewma"))
     }),
 
@@ -2108,17 +2068,9 @@ object SparkEntry {
         .toDF("ts_str", "sid")
         .select(col("sid").as("event_id"),
           to_timestamp(col("ts_str")).as("ts"), lit(0.0).as("value"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s,
-          withDups.unionAll(sent), base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2 && col("ts") < cutS,
-          col("ts") >= cutS && col("ts") < cutB,   // sentinel A
-          col("ts") >= cutB)) { st =>              // sentinel B
+          withDups.unionAll(sent), base,
+          replaySlices(col("ts"), replayTsCuts)) { st =>
           st.withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark("event_id")
             .groupBy(window(col("ts"), "6 hours"))
@@ -2171,17 +2123,8 @@ object SparkEntry {
         .toDF("ts_str")
         .select(lit("zz_sentinel").as("key"),
           to_timestamp(col("ts_str")).as("event_time"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("event_time") < cut1,
-          col("event_time") >= cut1 && col("event_time") < cut2,
-          col("event_time") >= cut2 && col("event_time") < cutS,
-          col("event_time") >= cutS && col("event_time") < cutB,
-          col("event_time") >= cutB)) { st =>
+          base, replaySlices(col("event_time"), replayTsCuts)) { st =>
           st.withWatermark("event_time", "0 seconds")
             .groupBy(col("key"),
               session_window(col("event_time"), "6 hours"))
@@ -2209,12 +2152,8 @@ object SparkEntry {
       val base = s"target/sjrestart_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2),
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayTsCuts.take(2)),
           restartAfterBatches = Seq(1)) { st =>
           val l = st.where(col("event_type") === "click")
             .select(col("event_id").as("l_event_id"), col("user_id"),
@@ -2265,17 +2204,8 @@ object SparkEntry {
             to_timestamp(col("ts_str")).as("ts"), col("uid").as("user_id"),
             col("etype").as("event_type"))
       }
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2 && col("ts") < cutS,
-          col("ts") >= cutS && col("ts") < cutB,   // sentinel pair A
-          col("ts") >= cutB)) { st =>              // sentinel pair B
+          base, replaySlices(col("ts"), replayTsCuts)) { st =>
           val l = st.where(col("event_type") === "click")
             .select(col("user_id"), col("ts").as("l_ts"))
             .withWatermark("l_ts", "1 hour")
@@ -2316,18 +2246,8 @@ object SparkEntry {
         .toDF("ts_str")
         .select(lit("zz_sentinel").as("key"),
           to_timestamp(col("ts_str")).as("event_time"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("event_time") < cut1,
-          col("event_time") >= cut1 && col("event_time") < cut2,
-          col("event_time") >= cut2 && col("event_time") < cutS,
-          col("event_time") >= cutS && col("event_time") < cutB,
-          col("event_time") >= cutB),
-          useRocksDb = true) { st =>
+          base, replaySlices(col("event_time"), replayTsCuts)) { st =>
           graft.streaming.StreamingAnalytics.sessionizeStreamTws(
             st.as[graft.streaming.StreamingAnalytics.SEvent],
             gapSeconds = 21600L).toDF()
@@ -2366,18 +2286,8 @@ object SparkEntry {
         .toDF("ts_str")
         .select(lit("zz_sentinel").as("key"),
           to_timestamp(col("ts_str")).as("event_time"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
       graft.streaming.StreamingAnalytics.replayStream(s, ev.unionAll(sent),
-          base, Seq(
-          col("event_time") < cut1,
-          col("event_time") >= cut1 && col("event_time") < cut2,
-          col("event_time") >= cut2 && col("event_time") < cutS,
-          col("event_time") >= cutS && col("event_time") < cutB,
-          col("event_time") >= cutB),
-          useRocksDb = true,
+          base, replaySlices(col("event_time"), replayTsCuts),
           restartAfterBatches = Seq(2)) { st =>
           graft.streaming.StreamingAnalytics.sessionizeStreamTws(
             st.as[graft.streaming.StreamingAnalytics.SEvent],
@@ -2412,21 +2322,8 @@ object SparkEntry {
           when(col("value").isNotNull,
             floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long"))
             .otherwise(lit(0L)).as("vu"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2 && col("ts") < cutS,
-          col("ts") >= cutS && col("ts") < cutB,
-          col("ts") >= cutB),
-          useRocksDb = true,
-          // ProcessingTime-mode tws never terminates under AvailableNow
-          // (shouldRunAnotherBatch is unconditionally true in that time
-          // mode) — the harness drains the staged rows and stops
-          processingTimeDrain = true) { st =>
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayTsCuts)) { st =>
           import s.implicits._
           graft.streaming.StreamingAnalytics.dimAggStream(
             st.select("user_id", "tse", "event_type", "vu")
@@ -2462,18 +2359,8 @@ object SparkEntry {
           when(col("value").isNotNull,
             floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long"))
             .otherwise(lit(0L)).as("vu"))
-      val cut1 = lit("2024-01-11").cast("timestamp")
-      val cut2 = lit("2024-01-21").cast("timestamp")
-      val cutS = lit("2024-06-01").cast("timestamp")
-      val cutB = lit("2024-12-15").cast("timestamp")
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2 && col("ts") < cutS,
-          col("ts") >= cutS && col("ts") < cutB,
-          col("ts") >= cutB),
-          useRocksDb = true,
-          processingTimeDrain = true,
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayTsCuts),
           restartAfterBatches = Seq(2)) { st =>
           import s.implicits._
           graft.streaming.StreamingAnalytics.dimAggStream(
@@ -2510,14 +2397,8 @@ object SparkEntry {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_timestamp(col("ts")).as("ts"))
-      val cut1 = lit(java.time.Instant.parse("2024-01-11T00:00:00Z")
-        .getEpochSecond)
-      val cut2 = lit(java.time.Instant.parse("2024-01-21T00:00:00Z")
-        .getEpochSecond)
-      graft.streaming.StreamingAnalytics.replayStream(s, ev, base, Seq(
-          col("ts") < cut1,
-          col("ts") >= cut1 && col("ts") < cut2,
-          col("ts") >= cut2), updateMode = true,
+      graft.streaming.StreamingAnalytics.replayStream(s, ev, base,
+          replaySlices(col("ts"), replayEpochCuts),
           restartAfterBatches = Seq(1),
           updateSink = Some { (df, _, out) =>
             graft.streaming.RealtimeStream.merge(

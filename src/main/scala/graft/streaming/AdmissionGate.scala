@@ -209,7 +209,10 @@ object AdmissionGate {
     // The four per-batch outputs are independent (each reads only the
     // eagerly checkpointed frames above) — submit them CONCURRENTLY
     // (guide §2.6 overlap independent jobs) so one batch pays one write
-    // latency, not four in sequence. Failures propagate: Await rethrows.
+    // latency, not four in sequence. All four are awaited before the
+    // first failure is rethrown: rethrowing at the first failed await
+    // would let the other writes run on while the batch is retried, and
+    // a retry would race a still-running overwrite of its own bid=N.
     // State grows by the batch's exact-survivors ONLY — including the
     // near-rejected ones, which still index the corpus for later probes.
     import scala.concurrent.{Await, Future}
@@ -224,7 +227,7 @@ object AdmissionGate {
         shDir, batchId, Some("ib" -> docBuckets))),
       Future(writeBid(newBands.select("band", "band_key", "doc_id", "bb"),
         bandsDir, batchId, Some("bb" -> bandBuckets))))
-    writes.foreach(Await.result(_, Duration.Inf))
+    writes.map(Await.ready(_, Duration.Inf).value.get).foreach(_.get)
   }
 
   /** Read a state directory pruned to `buckets` of `bucketCol` and to

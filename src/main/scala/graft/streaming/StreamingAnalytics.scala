@@ -241,13 +241,18 @@ object StreamingAnalytics {
     /** [[sealSplit]] + state/timer persistence: persist the still-open
       * set and keep exactly one live timer at the earliest remaining
       * deadline. Shared by both handlers — data batches and timer
-      * firings seal identically. */
+      * firings seal identically. `fired` is the timer being handled, if
+      * any: the engine removes it itself, so it is not deleted here (a
+      * second delete only logs a missing-timer warning). The new
+      * deadline lies above the watermark and so never equals it. */
     private def sealAndPersist(key: String,
                                sessions: List[OpenSession],
-                               wmMs: Long): Iterator[Session] = {
+                               wmMs: Long,
+                               fired: Option[Long]): Iterator[Session] = {
       val (sealed_, stillOpen, deadline) =
         sealSplit(sessions, gapSeconds, wmMs)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+      getHandle.listTimers().filterNot(fired.contains)
+        .foreach(getHandle.deleteTimer)
       if (stillOpen.isEmpty) open.clear()
       else {
         open.put(stillOpen.toArray)
@@ -265,7 +270,7 @@ object StreamingAnalytics {
       rows.map(_.event_time.getTime / 1000).foreach { t =>
         sessions = mergeEvent(sessions, t, gapSeconds)
       }
-      sealAndPersist(key, sessions, timers.getCurrentWatermarkInMs())
+      sealAndPersist(key, sessions, timers.getCurrentWatermarkInMs(), None)
     }
 
     override def handleExpiredTimer(key: String,
@@ -273,7 +278,7 @@ object StreamingAnalytics {
         info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
         : Iterator[Session] =
       sealAndPersist(key, open.get().toList,
-        timers.getCurrentWatermarkInMs())
+        timers.getCurrentWatermarkInMs(), Some(info.getExpiryTimeInMs()))
   }
 
   /** Keyed custom state the built-in operators cannot express: the length
@@ -461,60 +466,6 @@ object StreamingAnalytics {
     }
   }
 
-  /** Deterministic micro-batch REPLAY of [[ewmaStreamTws]] into a parquet
-    * sink — the harness that promotes the Spark-4 arbitrary-state path to
-    * a hash-checked registry row (q249). Each predicate in `batchPreds`
-    * becomes one parquet file under `baseDir/src` with its modification
-    * time pinned to replay order; the file source serves them as separate
-    * micro-batches (`maxFilesPerTrigger = 1`, oldest-modtime first) and
-    * `Trigger.AvailableNow` drains the backlog then stops — no wall-clock
-    * trigger, no flakiness. The EWMA recursion crosses every batch
-    * boundary through RocksDB `ValueState`, and the appended sink rows
-    * come back as a batch frame. Contract for oracle parity: each
-    * predicate must select a ts-ordered SLICE of every key's history
-    * (batch i's rows all precede batch i+1's per key) and `obs` must
-    * carry one row per (trip_id, ts) — then within-batch (ts)-order
-    * folding plus cross-batch state ≡ the batch recursion over the full
-    * ordered history, which a recursive CTE recomputes bit-exactly.
-    * Scale shape: the harness's one-file-per-batch staging (a hash
-    * `repartition(nBatches, batchCol)` whose partitionBy writer emits
-    * exactly one part per batch dir) is the replay determinism pin, not
-    * a production path — live ingestion enters through the connector
-    * stream, and state is one double per key in RocksDB either way. */
-  def replayEwmaTws(spark: org.apache.spark.sql.SparkSession, obs: DataFrame,
-                    baseDir: String,
-                    batchPreds: Seq[org.apache.spark.sql.Column],
-                    restartAfterBatches: Seq[Int] = Nil,
-                    onRestartInfo: RestartInfo => Unit = _ => ()): DataFrame =
-    replayStream(spark, obs, baseDir, batchPreds, useRocksDb = true,
-      restartAfterBatches = restartAfterBatches,
-      onRestartInfo = onRestartInfo) {
-      stream =>
-        import spark.implicits._
-        ewmaStreamTws(stream.as[Obs]).toDF()
-    }
-
-  /** The generic deterministic-replay harness behind [[replayEwmaTws]]
-    * (and the q250 stream-stream join row): materialize `input` into one
-    * parquet file per `batchPreds` predicate with modification times
-    * pinned to replay order, serve them as micro-batches through the
-    * file source, run `build`'s streaming transform into a parquet sink
-    * under `Trigger.AvailableNow`, and read the appended rows back as a
-    * batch frame. `useRocksDb` switches the state-store provider for the
-    * run (and restores the session conf after): transformWithState
-    * REQUIRES RocksDB, but for the other stateful operators the replay
-    * keeps the session default — at replay sizes the native store's
-    * per-partition spin-up (numShufflePartitions stores per stateful
-    * operator per micro-batch) dominates wall time, and the provider
-    * choice is deployment config, not operator semantics. `updateMode`
-    * runs the query in Update output mode through a foreachBatch
-    * parquet-append sink (the parquet sink itself is append-only), for
-    * transforms like [[funnelStagesStream]] that re-emit a key's row
-    * when it changes. The foreachBatch append is NOT idempotent under
-    * batch retry — fine here (fresh checkpoint + out dir every run, one
-    * local driver, deterministic inputs), but a production update-mode
-    * sink needs the batchId-keyed overwrite discipline
-    * the partitioned [[RealtimeStream.merge]] implements. */
   /** What a [[replayStream]] checkpoint-restart actually did — evidence
     * for the exactly-once claim: the SAME streaming query (one `id`,
     * restored from the checkpoint) ran as TWO runs (distinct `runId`s),
@@ -525,13 +476,59 @@ object StreamingAnalytics {
                                secondRunId: java.util.UUID,
                                commitsAfterFirst: Int, commitsTotal: Int)
 
+  /** Deterministic micro-batch REPLAY: the harness that promotes a
+    * streaming transform to a hash-checked registry row (q249–q269).
+    * Each predicate in `batchPreds` becomes one parquet file under
+    * `baseDir/src` with its modification time pinned to replay order;
+    * the file source serves them as separate micro-batches
+    * (`maxFilesPerTrigger = 1`, oldest-modtime first), `build`'s
+    * streaming transform runs into a parquet sink, and the appended
+    * rows come back as a batch frame. Contract for oracle parity: each
+    * predicate selects a ts-ordered SLICE of every key's history (batch
+    * i's rows all precede batch i+1's per key), so cross-batch state
+    * carries exactly what a batch computation over the full ordered
+    * history would.
+    *
+    * The stream's own logical plan decides two things, so no caller
+    * restates them:
+    *   - the state store: RocksDB iff the plan holds a
+    *     transformWithState node (the API requires it); every other
+    *     stateful operator keeps the session default — at replay sizes
+    *     the native store's per-partition spin-up dominates wall time,
+    *     and the provider is deployment config, not operator semantics.
+    *     The session conf is restored after the run.
+    *   - the drain mode: `Trigger.AvailableNow` drains the backlog and
+    *     stops — no wall-clock trigger, no flakiness — unless a
+    *     transformWithState node runs in ProcessingTime mode, on which
+    *     AvailableNow never terminates; then the harness drains and
+    *     stops (see the note in the body).
+    *
+    * `updateSink` (or `updateMode` alone, for a parquet append) runs
+    * the query in Update output mode through foreachBatch, for
+    * transforms like [[funnelStagesStream]] that re-emit a key's row
+    * when it changes. The default append is NOT idempotent under batch
+    * retry — fine here (fresh checkpoint + out dir every run, one local
+    * driver, deterministic inputs); a production update-mode sink needs
+    * the batchId-keyed overwrite discipline the partitioned
+    * [[RealtimeStream.merge]] implements.
+    *
+    * Scale shape: the one-file-per-batch staging (a hash
+    * `repartition(nBatches, batchCol)` whose partitionBy writer emits
+    * exactly one part per batch dir) is the replay determinism pin, not
+    * a production path — live ingestion enters through the connector
+    * stream. */
   def replayStream(spark: org.apache.spark.sql.SparkSession, input: DataFrame,
                    baseDir: String,
                    batchPreds: Seq[org.apache.spark.sql.Column],
-                   useRocksDb: Boolean = false,
                    updateMode: Boolean = false,
                    onRestartInfo: RestartInfo => Unit = _ => (),
-                   processingTimeDrain: Boolean = false,
+                   // a caller-supplied idempotent update-mode sink —
+                   // (batch frame, batchId, out path) — e.g. the
+                   // partitioned RealtimeStream.merge, whose change-
+                   // predicated merge makes a replayed batch a no-op;
+                   // q266 runs it ACROSS a checkpoint restart to pin the
+                   // Update-path exactly-once claim the append variant
+                   // can only scope away. Implies Update mode.
                    updateSink: Option[(DataFrame, Long, String) => Unit] =
                      None,
                    // runs between each query stop and the next pending
@@ -560,34 +557,6 @@ object StreamingAnalytics {
         Console.err.println(f"REPLAY_PHASE $name ${(now - phaseT0.get) / 1e9}%.3f")
         phaseT0.set(now)
       }
-    // `updateSink` replaces the update-mode foreachBatch body with a
-    // caller-supplied idempotent sink — (batch frame, batchId, out path)
-    // — e.g. the partitioned RealtimeStream.merge, whose
-    // latest-per-key + change-predicated merge makes a replayed batch a
-    // no-op. The default parquet append is NOT idempotent under batch
-    // retry (documented below); q266 runs the funnel through the merge
-    // sink ACROSS a checkpoint restart to pin the Update-path
-    // exactly-once claim the append variant can only scope away.
-    require(updateSink.isEmpty || updateMode,
-      "updateSink requires updateMode")
-    // ProcessingTime-mode stateful operators (the TTL-carrying ones —
-    // TTL REQUIRES TimeMode.ProcessingTime) report
-    // shouldRunAnotherBatch=true unconditionally (processing time always
-    // advances, so a timer/TTL could always fire), which means
-    // Trigger.AvailableNow NEVER terminates on them — the engine keeps
-    // scheduling no-data batches forever. `processingTimeDrain` is the
-    // replay contract for that mode: pace batches with a short
-    // ProcessingTime trigger, count COMMITTED input rows through a
-    // listener, and stop() once every staged row is committed. No-data
-    // batches emit nothing (no input rows → no handleInputRows; TTL
-    // cleanup emits nothing), and the parquet sink's metadata log hides
-    // any uncommitted trailing batch — so the drained sink is exactly as
-    // deterministic as the AvailableNow path. Composed with
-    // `restartAfterBatches` (q269), each run drains to ITS OWN committed-
-    // row target: the first run to the rows staged in the released
-    // batches (only those files exist, so it can never overshoot), the
-    // second — with a fresh listener, counting only its own commits —
-    // to the rows in the pending remainder.
     import org.apache.hadoop.fs.Path
     val fs = new Path(baseDir).getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new Path(baseDir), true) // fresh replay per run
@@ -682,6 +651,37 @@ object StreamingAnalytics {
     }
     fs.delete(new Path(stageAll), true)
     phase("stage")
+    // The stream's plan, built once before the session conf changes,
+    // decides the state store and the drain mode (see the scaladoc):
+    // RocksDB iff it holds a transformWithState node, drain-then-stop
+    // iff such a node runs in ProcessingTime mode. That mode (the
+    // TTL-carrying operators — TTL REQUIRES it) reports
+    // shouldRunAnotherBatch=true unconditionally (processing time always
+    // advances, so a timer/TTL could always fire), so
+    // Trigger.AvailableNow NEVER terminates on it — the engine keeps
+    // scheduling no-data batches forever. The drain contract: pace
+    // batches with a short ProcessingTime trigger, count COMMITTED input
+    // rows through a listener, and stop() once every staged row is
+    // committed. No-data batches emit nothing (no input rows → no
+    // handleInputRows; TTL cleanup emits nothing), and the parquet
+    // sink's metadata log hides any uncommitted trailing batch — so the
+    // drained sink is exactly as deterministic as the AvailableNow path.
+    // Composed with `restartAfterBatches` (q269), each run drains to ITS
+    // OWN committed-row target: the first run to the rows staged in the
+    // released batches (only those files exist, so it can never
+    // overshoot), the second — with a fresh listener, counting only its
+    // own commits — to the rows in the pending remainder.
+    val streamDf = build(spark.readStream
+      .schema(input.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$baseDir/src"))
+    val twsModes = streamDf.queryExecution.logical.collect {
+      case t: org.apache.spark.sql.catalyst.plans.logical.TransformWithState =>
+        t.timeMode
+    }
+    val useRocksDb = twsModes.nonEmpty
+    val processingTimeDrain = twsModes.contains(
+      org.apache.spark.sql.streaming.TimeMode.ProcessingTime())
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     // Replay inputs are KB-sized, but every stateful operator opens one
     // state store PER SHUFFLE PARTITION per micro-batch (x2 for
@@ -689,19 +689,18 @@ object StreamingAnalytics {
     // spin-up, not work, dominated the replay rows' wall time (~24% of
     // the whole r13 bench). Results are partition-count-independent
     // (hash-checked), so the replay derives its state-partition count
-    // from the STAGED BACKLOG SIZE (guide §2: partitioning sized to the
-    // data, not a constant tuned for one box) — one partition per 64 MB
-    // of staged input, floored at 1 and capped at the session's own
-    // setting — and restores the session conf after. Every bench backlog
-    // is ≤ a few MB, so replays run single-partition here (measured on
-    // the 5 heaviest replay rows: 46.2 s → 41 s vs the previous fixed 4
-    // — per-batch state-store commit/spin-up is per partition, and a
-    // 13k-row join state does not need four stores); a 10 GB backlog
-    // would get ~160 partitions up to the session cap. Production
-    // sizing is the opposite call entirely: shuffle partitions there
-    // are set to the cluster's parallelism, and state store instances
-    // amortize across long-lived micro-batches.
-    // `spark.graft.replay.statePartitions` overrides the derivation.
+    // from the STAGED BACKLOG (guide §2: partitioning sized to the
+    // data, not a constant tuned for one box), floored at 1 and capped
+    // at the session's own setting, and restores the session conf
+    // after. Every bench backlog is ≤ a few MB, so the HDFS-store
+    // replays run single-partition here (measured on the 5 heaviest
+    // replay rows: 46.2 s → 41 s vs the previous fixed 4 — per-batch
+    // state-store commit/spin-up is per partition, and a 13k-row join
+    // state does not need four stores); a 10 GB backlog would get ~160
+    // partitions up to the session cap. Production sizing is the
+    // opposite call entirely: shuffle partitions there are set to the
+    // cluster's parallelism, and state store instances amortize across
+    // long-lived micro-batches.
     val partKey = "spark.sql.shuffle.partitions"
     val savedProv = spark.conf.getOption(provKey)
     val savedPart = spark.conf.getOption(partKey)
@@ -710,38 +709,31 @@ object StreamingAnalytics {
         restarts.indices.flatMap(k =>
           fs.listStatus(new Path(pendingDir, s"t${k + 1}")).toSeq))
         .map(_.getLen).sum
-    val statePartitions = spark.conf
-      .getOption("spark.graft.replay.statePartitions").map(_.toInt)
-      .getOrElse {
-        val cap = savedPart.flatMap(_.toIntOption)
-          .getOrElse(spark.sparkContext.defaultParallelism)
-        if (useRocksDb)
-          // transformWithState rows are CPU-bound in handleInputRows
-          // (per-key JVM state machines), so parallelism tracks ROWS
-          // (~50k rows/task); measured: forcing these to 1 partition
-          // cost q263/q264/q265/q269 ~1 s each while buying nothing
-          math.max(1, math.min(cap,
-            (metrics("rows_staged").asInstanceOf[Long] / 50000L).toInt))
-        else
-          // HDFS-store operators (joins, dedup, window aggs) at replay
-          // sizes are commit-machinery-bound: per-partition store
-          // spin-up/commit dominates, so fewer stores win until the
-          // per-partition DATA reaches shuffle-sized chunks (~64 MB)
-          math.max(1, math.min(cap, (stagedBytes >> 26).toInt))
-      }
+    val cap = savedPart.flatMap(_.toIntOption)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val statePartitions =
+      if (useRocksDb)
+        // transformWithState rows are CPU-bound in handleInputRows
+        // (per-key JVM state machines), so parallelism tracks ROWS
+        // (~50k rows/task); measured: forcing these to 1 partition
+        // cost q263/q264/q265/q269 ~1 s each while buying nothing
+        math.max(1, math.min(cap,
+          (metrics("rows_staged").asInstanceOf[Long] / 50000L).toInt))
+      else
+        // HDFS-store operators (joins, dedup, window aggs) at replay
+        // sizes are commit-machinery-bound: per-partition store
+        // spin-up/commit dominates, so fewer stores win until the
+        // per-partition DATA reaches shuffle-sized chunks (~64 MB)
+        math.max(1, math.min(cap, (stagedBytes >> 26).toInt))
     if (useRocksDb)
       spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
         ".state.RocksDBStateStoreProvider")
     spark.conf.set(partKey, statePartitions.toString)
     try {
       def runOnce(drainTarget: Long): org.apache.spark.sql.streaming.StreamingQuery = {
-        val stream = spark.readStream
-          .schema(input.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$baseDir/src")
         val writer =
-          if (updateMode)
-            build(stream).writeStream
+          if (updateMode || updateSink.nonEmpty)
+            streamDf.writeStream
               .outputMode("update")
               .foreachBatch { (df: DataFrame, bid: Long) =>
                 updateSink match {
@@ -774,7 +766,7 @@ object StreamingAnalytics {
                 }
               }
           else
-            build(stream).writeStream
+            streamDf.writeStream
               .format("parquet")
               .option("path", s"$baseDir/out")
               .outputMode("append")
@@ -787,7 +779,7 @@ object StreamingAnalytics {
           q
         } else {
           // drain-then-stop: AvailableNow cannot terminate a
-          // ProcessingTime-mode stateful query (see the parameter note),
+          // ProcessingTime-mode stateful query (see the plan note above),
           // so pace batches and stop once the listener has seen every
           // staged row COMMITTED (progress events post after commit).
           // Keyed by (query id, batchId): suites share one session, so

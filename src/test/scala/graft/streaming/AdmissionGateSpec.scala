@@ -49,7 +49,6 @@ class AdmissionGateSpec extends SparkSpec {
         col("doc_id") < 10L,
         col("doc_id") >= 10L && col("doc_id") < 25L,
         col("doc_id") >= 25L),
-        updateMode = true,
         updateSink = Some { (df, bid, out) =>
           AdmissionGate.admitBatch(df, out, bid)
         })(st => st)
@@ -103,4 +102,111 @@ class AdmissionGateSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(admitted === Seq(1L, 5L, 21L, 31L))
   }
+
+  test("a failed write fails the batch only once the other writes have " +
+    "finished: no Spark job is still running when the batch throws, so a " +
+    "retry cannot race a live overwrite of its own bid=N") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val local = new java.io.File("target/aggate_fail").getAbsolutePath
+    Seq("", ".docs", ".sh", ".bands").foreach(s =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(local + s)))
+    // the admitted-ids write fails at its first look at <base>/bid=0,
+    // while the .docs state write is held inside its job
+    FailingLocalFs.reset()
+    val base = s"${FailingLocalFs.scheme}://$local"
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, e.time)
+    }
+    val implKey = s"fs.${FailingLocalFs.scheme}.impl"
+    spark.conf.set(implKey, classOf[FailingLocalFs].getName)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[java.io.IOException] {
+        AdmissionGate.admitBatch(
+          Seq((1L, A), (2L, A), (5L, D), (10L, B)).toDF("doc_id", "text"),
+          base, batchId = 0L)
+      }
+      val thrownAt = System.currentTimeMillis()
+      assert(e.getMessage.contains("injected"), e)
+      // listener events arrive asynchronously: wait until every job the
+      // batch started has reported its end (stamped when it finished)
+      def pending = started.keySet.asScala.filterNot(ended.containsKey)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (pending.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20L)
+      assert(pending.isEmpty, s"jobs never ended: $pending")
+      val late = ended.asScala.filter(_._2 > thrownAt)
+      assert(late.isEmpty, s"jobs still running when the batch threw: $late")
+      // the three state writes ran to completion
+      Seq(".docs", ".sh", ".bands").foreach(s =>
+        assert(new java.io.File(s"$local$s/bid=0/_SUCCESS").exists(), s))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(implKey)
+    }
+  }
+}
+
+/** The local filesystem under its own scheme with two injected
+  * faults: every status lookup of the admitted-ids directory
+  * `.../aggate_fail/bid=0` fails, and the first file the `.docs` state
+  * write creates is held until that failure has happened, plus one
+  * second — so a batch that rethrew the failure at once would leave
+  * that write's job running. */
+class FailingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${FailingLocalFs.scheme}:///")
+  override def getScheme: String = FailingLocalFs.scheme
+  override def exists(p: Path): Boolean = {
+    FailingLocalFs.check(p); super.exists(p)
+  }
+  override def getFileStatus(p: Path): FileStatus = {
+    FailingLocalFs.check(p); super.getFileStatus(p)
+  }
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FailingLocalFs.hold(p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FailingLocalFs.hold(p)
+    super.create(p, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
+object FailingLocalFs {
+  val scheme = "failfs"
+  private val failing = "/aggate_fail/bid=0"
+  private val held = "/aggate_fail.docs/bid=0/"
+  @volatile private var failed = new java.util.concurrent.CountDownLatch(1)
+  private val holding = new java.util.concurrent.atomic.AtomicBoolean()
+  def reset(): Unit = {
+    failed = new java.util.concurrent.CountDownLatch(1)
+    holding.set(false)
+  }
+  private def check(p: org.apache.hadoop.fs.Path): Unit =
+    if (p.toUri.getPath.endsWith(failing)) {
+      failed.countDown()
+      throw new java.io.IOException(s"injected failure at $p")
+    }
+  private def hold(p: org.apache.hadoop.fs.Path): Unit =
+    if (p.toUri.getPath.contains(held) && holding.compareAndSet(false, true)) {
+      failed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      Thread.sleep(1000L)
+    }
 }

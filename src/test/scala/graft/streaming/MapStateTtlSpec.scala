@@ -113,7 +113,6 @@ class MapStateTtlSpec extends SparkSpec {
     val out = StreamingAnalytics.replayStream(spark, obs,
         "target/ttl_restart_spec",
         Seq(col("tse") < 1500L, col("tse") >= 1500L),
-        useRocksDb = true, processingTimeDrain = true,
         restartAfterBatches = Seq(1),
         beforeRestart = () => Thread.sleep(28000L)) { st =>
         StreamingAnalytics.dimAggStream(

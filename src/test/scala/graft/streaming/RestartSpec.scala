@@ -21,11 +21,14 @@ class RestartSpec extends SparkSpec {
       ("T1", 300L, 2.2), ("T2", 310L, 8.8))   // batch 2: ts >= 300
     val obs = history.toDF("trip_id", "ts", "delay_min")
     var info: Option[StreamingAnalytics.RestartInfo] = None
-    val got = StreamingAnalytics.replayEwmaTws(spark, obs,
+    val got = StreamingAnalytics.replayStream(spark, obs,
         "target/twsrestart_spec", Seq(
         col("ts") < 200L, col("ts") >= 200L && col("ts") < 300L,
         col("ts") >= 300L),
-        restartAfterBatches = Seq(1), onRestartInfo = i => info = Some(i))
+        restartAfterBatches = Seq(1), onRestartInfo = i => info = Some(i)) {
+        st => StreamingAnalytics.ewmaStreamTws(
+          st.as[StreamingAnalytics.Obs]).toDF()
+      }
       .collect().map(r => (r.getAs[String]("trip_id"),
         r.getAs[Long]("ts")) -> r.getAs[Double]("ewma")).toMap
     val ref = history.groupBy(_._1).flatMap { case (k, h) =>
@@ -118,7 +121,6 @@ class RestartSpec extends SparkSpec {
         col("event_time") >= timestamp_seconds(lit(50000L)) &&
           col("event_time") < timestamp_seconds(lit(150000L)),
         col("event_time") >= timestamp_seconds(lit(150000L))),
-        useRocksDb = true,
         restartAfterBatches = Seq(1), onRestartInfo = i => info = Some(i)) {
         st =>
           StreamingAnalytics.sessionizeStreamTws(
@@ -164,7 +166,6 @@ class RestartSpec extends SparkSpec {
         col("event_time") >= timestamp_seconds(lit(50000L)) &&
           col("event_time") < timestamp_seconds(lit(150000L)),
         col("event_time") >= timestamp_seconds(lit(150000L))),
-        useRocksDb = true,
         restartAfterBatches = Seq(1, 2),
         onRestartInfo = i => infos = infos :+ i) {
         st =>
@@ -192,9 +193,12 @@ class RestartSpec extends SparkSpec {
     import spark.implicits._
     val obs = Seq(("T1", 100L, 1.0)).toDF("trip_id", "ts", "delay_min")
     intercept[IllegalArgumentException] {
-      StreamingAnalytics.replayEwmaTws(spark, obs,
+      StreamingAnalytics.replayStream(spark, obs,
         "target/twsrestart_spec_bad", Seq(col("ts") < 200L),
-        restartAfterBatches = Seq(1))
+        restartAfterBatches = Seq(1)) { st =>
+        StreamingAnalytics.ewmaStreamTws(
+          st.as[StreamingAnalytics.Obs]).toDF()
+      }
     }
   }
 }

@@ -551,9 +551,12 @@ class StreamingAnalyticsSpec extends SparkSpec {
       ("T1", 300L, 2.2), ("T2", 310L, 8.8))   // batch 2: ts >= 300
     val obs = history.toDF("trip_id", "ts", "delay_min")
     val base = "target/twsreplay_spec"
-    val got = StreamingAnalytics.replayEwmaTws(spark, obs, base, Seq(
+    val got = StreamingAnalytics.replayStream(spark, obs, base, Seq(
         col("ts") < 200L, col("ts") >= 200L && col("ts") < 300L,
-        col("ts") >= 300L))
+        col("ts") >= 300L)) { st =>
+        StreamingAnalytics.ewmaStreamTws(
+          st.as[StreamingAnalytics.Obs]).toDF()
+      }
       .collect().map(r => (r.getAs[String]("trip_id"),
         r.getAs[Long]("ts")) -> r.getAs[Double]("ewma")).toMap
     val ref = history.groupBy(_._1).flatMap { case (k, h) =>
@@ -563,6 +566,116 @@ class StreamingAnalyticsSpec extends SparkSpec {
       }.flatten.map { case (t, y) => (k, t) -> y }
     }
     assert(got === ref)
+  }
+
+  /** The state-operator custom-metric names reported by the one replay
+    * `body` runs — the state store's fingerprint (every RocksDB metric
+    * name starts with "rocksdb"). Listener events arrive asynchronously;
+    * a query's progress events all precede its termination event, so
+    * waiting for that one makes the set complete. */
+  private def stateMetricNames(body: => Unit): Set[String] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val names = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op =>
+          names.addAll(op.customMetrics.keySet))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      body
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the replay's termination event never arrived")
+    } finally spark.streams.removeListener(listener)
+    names.asScala.toSet
+  }
+
+  test("replayStream takes the state store from the stream's plan: a " +
+    "transformWithState replay runs on RocksDB with no flag set, a " +
+    "dropDuplicatesWithinWatermark replay stays on the session default, " +
+    "and the session conf is restored after each") {
+    import spark.implicits._
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val saved = spark.conf.getOption(provKey)
+    assert(saved.forall(!_.contains("RocksDB")),
+      s"the session default must not already be RocksDB: $saved")
+    val obs = Seq(("T1", 100L, 3.7), ("T2", 110L, 0.3), ("T1", 200L, 1.1))
+      .toDF("trip_id", "ts", "delay_min")
+    val tws = stateMetricNames {
+      StreamingAnalytics.replayStream(spark, obs, "target/provider_tws_spec",
+          Seq(col("ts") < 150L, col("ts") >= 150L)) { st =>
+          StreamingAnalytics.ewmaStreamTws(
+            st.as[StreamingAnalytics.Obs]).toDF()
+        }.collect()
+    }
+    assert(tws.exists(_.startsWith("rocksdb")), tws)
+    assert(spark.conf.getOption(provKey) === saved)
+    val ev = Seq((1L, 1000L), (1L, 1001L), (2L, 5000L), (2L, 5001L))
+      .toDF("id", "tse")
+      .select(col("id"), timestamp_seconds(col("tse")).as("ts"))
+    val cut = timestamp_seconds(lit(3000L))
+    val dedup = stateMetricNames {
+      StreamingAnalytics.replayStream(spark, ev,
+          "target/provider_dedup_spec", Seq(col("ts") < cut,
+          col("ts") >= cut)) { st =>
+          st.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("id")
+        }.collect()
+    }
+    assert(dedup.nonEmpty && !dedup.exists(_.startsWith("rocksdb")), dedup)
+    assert(spark.conf.getOption(provKey) === saved)
+  }
+
+  test("sessionizeStreamTws deletes no timer twice: a replay whose " +
+    "sessions seal through firing timers logs no TimerStateImpl warning") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // 'a' and 'b' each open one session in batch 0; the sentinel batches
+    // raise the watermark past both deadlines, so both seal in
+    // handleExpiredTimer — the path that used to re-delete the fired
+    // timer
+    val ev = Seq(("a", 1000L), ("a", 1010L), ("b", 1020L),
+        ("zz", 100000L), ("zz", 200000L))
+      .toDF("key", "tse")
+      .select(col("key"), timestamp_seconds(col("tse")).as("event_time"))
+    val cuts = Seq(50000L, 150000L).map(t => timestamp_seconds(lit(t)))
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("timer-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("TimerStateImpl") &&
+            e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    val got = try {
+      StreamingAnalytics.replayStream(spark, ev, "target/twstimer_warn_spec",
+          Seq(col("event_time") < cuts(0),
+            col("event_time") >= cuts(0) && col("event_time") < cuts(1),
+            col("event_time") >= cuts(1))) { st =>
+          StreamingAnalytics.sessionizeStreamTws(
+            st.as[StreamingAnalytics.SEvent], gapSeconds = 60L).toDF()
+        }
+        .where(col("key") =!= "zz")
+        .select("key", "start_epoch", "end_epoch", "n_events")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).sortBy(_._1).toSeq
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    assert(got === Seq(("a", 1000L, 1010L, 2L), ("b", 1020L, 1020L, 1L)))
+    assert(warnings.isEmpty, warnings)
   }
 
   test("funnelStagesStream: final stage per user equals batch staging on " +
