@@ -42,7 +42,10 @@ object SparkEntry {
     * stream. Scope note (r16 ADVICE): streaming checkpoint/WAL and
     * state-store files go through the FileContext-based
     * CheckpointFileManager, a separate object this toggle does NOT touch
-    * — those paths stay checksummed; the measured wins below come from
+    * — those paths stay checksummed (the exception: the E1 runner's
+    * offsets/commits/sources logs, which `RealtimeRunner.runOnce` writes
+    * through the FileSystem-based manager, so this toggle covers them
+    * too); the measured wins below come from
     * the FileSystem-API writes (sink parts, staging, readback). On the
     * single-node bench that integrity layer is pure overhead with no
     * consumer (production deployments run HDFS/S3, which carry their own
@@ -67,7 +70,8 @@ object SparkEntry {
       // Deliberately NOT tuned: the FileContext leg (streaming
       // checkpoint/WAL/state deltas go through the FileContext-based
       // CheckpointFileManager, whose local scheme LocalFs is
-      // ChecksumFs). Routing `file://` FileContexts to RawLocalFs was
+      // ChecksumFs — all but the E1 runner's logs, see
+      // RealtimeRunner). Routing `file://` FileContexts to RawLocalFs was
       // measured (Scratch `abtest fctx`, ABBA paired, r17): it made the
       // replay rows 15-25% SLOWER (q262 5.19→6.25 s, q257 4.09→4.72,
       // q264 4.45→5.46 min-of-2) — the checksummed stream's buffering

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Set-oriented replacements for the reference's row-at-a-time Postgres
   * sinks (SURVEY.md §2.1 S9/S10).
@@ -61,7 +62,7 @@ object Upsert {
       df.select(keys.map(col) :+ struct(dataCols.map(col): _*).as("__row") :+
         tOrd.as("__t_ord") :+ uOrd.as("__u_ord"): _*)
     val resolved = (target.map(tagged(_, lit(0), lit(null))).toSeq :+
-        tagged(updates, lit(null).cast("int"), order.getOrElse(lit(0))))
+        tagged(updates, lit(null).cast(IntegerType), order.getOrElse(lit(0))))
       .reduce(_ union _)
       .groupBy(keys.map(col): _*)
       .agg(max_by(col("__row"), col("__t_ord")).as("__t"),

@@ -5,6 +5,7 @@ import graft.gtfs.Rt
 import graft.operators.Upsert
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** E1 — the reference's realtime micro-batch
   * (`reference/scripts/realtime_extractor.py::main`): decode the fetched
@@ -48,11 +49,11 @@ object Realtime {
         obsTime("arrival_epoch").as("arrival_time"),
         obsTime("departure_epoch").as("departure_time"),
         w.map(p => WeatherOps.weatherGroup(p.getField("weather_id")))
-          .getOrElse(lit(null).cast("string")).as("weather_group"),
+          .getOrElse(lit(null).cast(StringType)).as("weather_group"),
         w.map(_.getField("weather_description"))
-          .getOrElse(lit(null).cast("string")).as("weather_description"),
+          .getOrElse(lit(null).cast(StringType)).as("weather_description"),
         w.map(_.getField("temperature"))
-          .getOrElse(lit(null).cast("double")).as("temperature"),
+          .getOrElse(lit(null).cast(DoubleType)).as("temperature"),
         stamp.as("created_at"),
         stamp.as("updated_at"))
   }

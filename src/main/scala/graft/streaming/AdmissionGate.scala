@@ -215,20 +215,38 @@ object AdmissionGate {
     // a retry would race a still-running overwrite of its own bid=N.
     // State grows by the batch's exact-survivors ONLY — including the
     // near-rejected ones, which still index the corpus for later probes.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // The writes run on a pool of their own, one thread each, so a
+    // blocking write never holds a thread of the shared global pool; the
+    // pool's threads are joined before the batch returns.
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val writes = Seq(
-      Future(writeBid(survivors.join(rejected, Seq("doc_id"), "left_anti")
-        .select(col("doc_id")), outDir, batchId, None)),
-      Future(writeBid(survivors.select("doc_id", "text", "text_fp", "tb"),
-        docsDir, batchId, Some("tb" -> docBuckets))),
-      Future(writeBid(survivors.select("doc_id", "sg", "ib"),
-        shDir, batchId, Some("ib" -> docBuckets))),
-      Future(writeBid(newBands.select("band", "band_key", "doc_id", "bb"),
-        bandsDir, batchId, Some("bb" -> bandBuckets))))
-    writes.map(Await.ready(_, Duration.Inf).value.get).foreach(_.get)
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4, { r =>
+      val t = new Thread(r, s"$WriterThreadPrefix$batchId-${threads.size}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val writes = Seq(
+        Future(writeBid(survivors.join(rejected, Seq("doc_id"), "left_anti")
+          .select(col("doc_id")), outDir, batchId, None)),
+        Future(writeBid(survivors.select("doc_id", "text", "text_fp", "tb"),
+          docsDir, batchId, Some("tb" -> docBuckets))),
+        Future(writeBid(survivors.select("doc_id", "sg", "ib"),
+          shDir, batchId, Some("ib" -> docBuckets))),
+        Future(writeBid(newBands.select("band", "band_key", "doc_id", "bb"),
+          bandsDir, batchId, Some("bb" -> bandBuckets))))
+      writes.map(Await.ready(_, Duration.Inf).value.get).foreach(_.get)
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
+
+  /** Name prefix of the threads that run a batch's four state writes. */
+  private[streaming] val WriterThreadPrefix = "graft-admission-write-"
 
   /** Read a state directory pruned to `buckets` of `bucketCol` and to
     * batches BEFORE `batchId`. The pruning IS the file listing: the

@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import graft.gtfs.{FetchLoop, Rt}
 import graft.operators.Timeout
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.Trigger
 
 import scala.concurrent.duration.{Duration, DurationInt}
@@ -28,10 +30,27 @@ import scala.concurrent.duration.{Duration, DurationInt}
   * checkpoint, throttle state, drop directory) all lives on disk, so
   * successive ticks — or a crashed one — resume exactly like the
   * reference's stateless-process-over-durable-state design.
+  *
+  * Each tick starts a stream, so two choices keep a stream start's fixed
+  * costs out of the tick:
+  *
+  *   - The merge runs on the caller's session, not on the stream's clone
+  *     ([[RealtimeStream.startFeedStream]]). Its generated classes are
+  *     compiled once and stay cached across ticks.
+  *   - A `file:` checkpoint's offsets, commits and sources logs are
+  *     written through Spark's `FileSystemBasedCheckpointFileManager`.
+  *     Spark's default for `file:` is the FileContext manager, which on a
+  *     Hadoop client without native libraries forks `readlink` and
+  *     `chmod` processes for every log entry. On a local filesystem,
+  *     rename is atomic, which is all the FileSystem manager needs. Other
+  *     schemes, and a session that names its own manager, keep theirs.
   */
 object RealtimeRunner {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Spark's (internal) conf naming the checkpoint file manager class. */
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   final case class Config(
       feedUrl: String,
@@ -54,7 +73,12 @@ object RealtimeRunner {
     * the stream execution thread under their OWN job group, where
     * `cancelJobGroup` cannot reach — the drain is bounded instead with a
     * deadline-aware `awaitTermination(remaining)` + `stop()`, which is
-    * Structured Streaming's cancellation contract. */
+    * Structured Streaming's cancellation contract.
+    *
+    * The checkpoint manager is set on the caller's session conf for the
+    * life of the query and restored only once the query has terminated:
+    * the stream thread creates its sources log after `start()` returns,
+    * so an earlier restore would race it. */
   def runOnce(spark: SparkSession, cfg: Config,
               clock: () => Long = () => System.currentTimeMillis(),
               sleep: Long => Unit = Thread.sleep): Int = {
@@ -73,14 +97,19 @@ object RealtimeRunner {
       () => cfg.weatherUrl.flatMap(u => Rt.fetch(u)
         .map(new String(_, StandardCharsets.UTF_8))),
       clock)
-    val q = RealtimeStream.startFeedStream(spark, cfg.dropDir,
-      cfg.targetPath, cfg.checkpointDir, weather, Trigger.AvailableNow())
-    val remaining = math.max(1L, deadline - clock())
-    if (!q.awaitTermination(remaining)) {
-      q.stop()
-      throw new java.util.concurrent.TimeoutException(
-        s"E1 drain exceeded ${cfg.runTimeout} and was stopped")
-    }
+    val setManager = spark.conf.getOption(ManagerKey).isEmpty &&
+      new Path(cfg.checkpointDir).getFileSystem(spark.sessionState.newHadoopConf())
+        .getUri.getScheme == "file"
+    if (setManager)
+      spark.conf.set(ManagerKey, classOf[FileSystemBasedCheckpointFileManager].getName)
+    val drained = try {
+      val q = RealtimeStream.startFeedStream(spark, cfg.dropDir,
+        cfg.targetPath, cfg.checkpointDir, weather, Trigger.AvailableNow())
+      val remaining = math.max(1L, deadline - clock())
+      try q.awaitTermination(remaining) finally if (q.isActive) q.stop()
+    } finally if (setManager) spark.conf.unset(ManagerKey)
+    if (!drained) throw new java.util.concurrent.TimeoutException(
+      s"E1 drain exceeded ${cfg.runTimeout} and was stopped")
     landed.size
   }
 }

@@ -10,8 +10,10 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType,
+  StructField, StructType, TimestampType}
 
 /** §2.9 — the reference's realtime path as Structured Streaming. The
   * reference hand-rolls a micro-batch stream: cron fires every minute,
@@ -201,10 +203,13 @@ object RealtimeStream {
     * crash before the final overwrite leaves the live snapshot untouched;
     * a crash DURING it can leave a touched partition half-committed (the
     * known dynamic-overwrite granularity — a table format's metadata
-    * commit is the production fix), and the streaming checkpoint replays
-    * the batch, which heals it because the merge is idempotent
-    * (newest-per-key resolution + change-predicated upsert —
-    * RealtimeStreamSpec replays a batch twice and hashes the snapshot). */
+    * commit is the production fix), or deleted outright. The streaming
+    * checkpoint then replays the batch, and the idempotent merge
+    * (newest-per-key resolution + change-predicated upsert) restores the
+    * rows that batch carries. It does NOT restore the partition's other
+    * stored rows: the replay reads the damaged partition as its target
+    * and overwrites `.stage`, the last copy of the merged rows (ROADMAP
+    * item 9). Only the whole-snapshot layout's promote recovers fully. */
   def merge(updates: DataFrame, targetPath: String, keys: Seq[String],
             compareCols: Seq[String], createdCol: Option[String],
             order: Column, partitionCol: Option[String]): Unit = {
@@ -318,23 +323,39 @@ object RealtimeStream {
                       partitionSnapshot: Boolean = false)
       : StreamingQuery = {
     import spark.implicits._
-    // streaming sources need the schema up front; this is binaryFile's
-    // fixed schema
+    implicit val s: SparkSession = spark
     val payloads = spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+      .schema(binaryFileSchema)
       .load(feedDir)
     payloads.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        implicit val s: SparkSession = batch.sparkSession
-        merge(Realtime.observations(batch.select("content").as[Array[Byte]],
+        merge(Realtime.observations(
+            onSession(spark, batch).select("content").as[Array[Byte]],
             weatherJson()), targetPath, Realtime.keys, Realtime.compareCols,
           Realtime.createdCol, monotonically_increasing_id(),
           if (partitionSnapshot) Some("start_date") else None)
       }
       .start()
   }
+
+  /** binaryFile's fixed schema (a streaming source needs it up front),
+    * built as a value so starting a stream parses no DDL. */
+  private val binaryFileSchema = StructType(Seq(
+    StructField("path", StringType), StructField("modificationTime", TimestampType),
+    StructField("length", LongType), StructField("content", BinaryType)))
+
+  /** `batch` — a micro-batch handed to `foreachBatch` — re-wrapped in
+    * `spark`, the session that started the stream. Each stream start
+    * clones its session, and the clone brings a new artifact class
+    * loader, which is part of `CodeGenerator`'s cache key: a merge run on
+    * the batch's own session compiles its generated classes again on
+    * every start. On the starting session they stay cached across starts.
+    * The batch's plan is a `LogicalRDD` over the already-planned source
+    * scan, so only the merge above it moves. */
+  private def onSession(spark: SparkSession, batch: DataFrame): DataFrame =
+    Bridge.dataset(spark, Bridge.logicalPlan(batch))
 
   /** Start the streaming upsert: every micro-batch of realtime rows is
     * [[merge]]d into the keyed parquet snapshot, the newest `orderCol` row
@@ -355,8 +376,8 @@ object RealtimeStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        merge(batch, targetPath, keys, compareCols, createdCol, col(orderCol),
-          partitionCol)
+        merge(onSession(stream.sparkSession, batch), targetPath, keys,
+          compareCols, createdCol, col(orderCol), partitionCol)
       }
       .start()
 }

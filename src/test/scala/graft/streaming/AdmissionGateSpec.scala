@@ -153,6 +153,66 @@ class AdmissionGateSpec extends SparkSpec {
       spark.conf.unset(implKey)
     }
   }
+
+  test("a batch runs its four state writes on a pool of its own and " +
+    "leaves none of that pool's threads alive") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val local = new java.io.File("target/aggate_pool").getAbsolutePath
+    Seq("", ".docs", ".sh", ".bands").foreach(s =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(local + s)))
+    RecordingLocalFs.writers.clear()
+    val implKey = s"fs.${RecordingLocalFs.scheme}.impl"
+    spark.conf.set(implKey, classOf[RecordingLocalFs].getName)
+    try AdmissionGate.admitBatch(
+      Seq((1L, A), (2L, A), (5L, D), (10L, B)).toDF("doc_id", "text"),
+      s"${RecordingLocalFs.scheme}://$local", batchId = 0L)
+    finally spark.conf.unset(implKey)
+    // every thread that was inside a write when a file was created
+    val writers = RecordingLocalFs.writers.asScala.toSet
+    assert(writers.size === 4 &&
+      writers.forall(_.startsWith(AdmissionGate.WriterThreadPrefix)), writers)
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(AdmissionGate.WriterThreadPrefix))
+    assert(alive.isEmpty, s"write threads outlived the batch: $alive")
+  }
+}
+
+/** The local filesystem under its own scheme. Whenever it creates a file,
+  * it records the names of the threads then running
+  * `AdmissionGate.writeBid`: the thread that started the write waits
+  * inside it while the write's tasks create their files. */
+class RecordingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  import scala.jdk.CollectionConverters._
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${RecordingLocalFs.scheme}:///")
+  override def getScheme: String = RecordingLocalFs.scheme
+  private def record(): Unit =
+    Thread.getAllStackTraces.asScala.foreach { case (t, stack) =>
+      if (stack.exists(_.getMethodName.contains("writeBid")))
+        RecordingLocalFs.writers.add(t.getName)
+    }
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    record()
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    record()
+    super.create(p, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
+object RecordingLocalFs {
+  val scheme = "recfs"
+  val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }
 
 /** The local filesystem under its own scheme with two injected

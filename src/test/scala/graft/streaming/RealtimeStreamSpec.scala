@@ -223,11 +223,26 @@ class RealtimeStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch upsert maintains the keyed snapshot across batches") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
     val base = Paths.get("target", "test_stream")
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     val src = base.resolve("src"); Files.createDirectories(src)
     val tgt = base.resolve("tgt").toString
     val chk = base.resolve("chk").toString
+    // whether each snapshot write ran on the caller's session, not on the
+    // stream's clone (whose fresh class loader would recompile the merge)
+    val onCaller = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand
+            if c.outputPath.toString.endsWith("tgt.next") =>
+          onCaller.add(qe.sparkSession eq spark)
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
 
     def runRound(): Unit = {
       val stream = spark.readStream
@@ -259,5 +274,11 @@ class RealtimeStreamSpec extends SparkSpec {
       (2L, "b", 100L, 100L), // unchanged: untouched
       (3L, "c", 200L, 200L)  // new: inserted
     ))
+    // listener events arrive asynchronously
+    val deadline = System.currentTimeMillis() + 30000L
+    while (onCaller.size < 2 && System.currentTimeMillis() < deadline)
+      Thread.sleep(20L)
+    spark.listenerManager.unregister(listener)
+    assert(onCaller.toArray.toSeq === Seq(true, true))
   }
 }
