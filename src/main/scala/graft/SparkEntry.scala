@@ -4581,12 +4581,14 @@ object SparkEntry {
       val cl = docClusters(s, dir).groupBy("cluster_id")
         .agg(count(lit(1)).as("sz"))
       val hist = cl.groupBy("sz").agg(count(lit(1)).as("n_clusters"))
-      val totals = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
-      val clustered = cl.agg(coalesce(sum(col("sz")), lit(0L)).as("n_in"))
-      hist.unionByName(
-          totals.crossJoin(broadcast(clustered))
-            .select(lit(1L).as("sz"),
-              (col("n_docs") - col("n_in")).as("n_clusters")))
+      // the size-1 row is n_docs − n_in: one sum over the two 1-row
+      // counts, so no cross join
+      val singletons = t(s, dir, "documents")
+        .agg(count(lit(1)).as("v"))
+        .unionByName(cl.agg((-coalesce(sum(col("sz")), lit(0L))).as("v")))
+        .agg(sum(col("v")).as("n_clusters"))
+        .select(lit(1L).as("sz"), col("n_clusters"))
+      hist.unionByName(singletons)
         .select(col("sz").as("cluster_size"), col("n_clusters"))
     }),
 
@@ -5583,7 +5585,7 @@ object SparkEntry {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val medianChars = grid
         .withColumn("cum", sum(col("cnt")).over(w))
-        .crossJoin(broadcast(d.agg(count(lit(1)).as("nn"))))
+        .withColumn("nn", sum(col("cnt")).over())
         .where(col("cum") >= expr("(nn + 1) DIV 2"))
         .agg(min(col("n_chars")).cast("long").as("value"))
         .select(lit("median_chars").as("metric"), col("value"))

@@ -474,19 +474,36 @@ object Dedup {
     * turns pairwise matches into keep-one-per-group decisions: every
     * document in a connected component gets the component's minimum id as
     * `cluster_id`. Returns (id, cluster_id) for every node that appears
-    * in `pairs`.
+    * in `pairs`; self-loops and pairs with a NULL endpoint add their ids
+    * as nodes but join no component (a NULL id is labelled NULL).
     *
-    * Algorithm: alternating large-star / small-star contraction (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
-    * a published algorithm, reimplemented here from the paper): each
-    * round rewires every node's strictly-larger neighbors (large-star),
-    * then its smaller-or-equal neighbors (small-star), toward the local
-    * minimum; the edge set converges to star graphs centered at each
-    * component's minimum in O(log n) rounds EVEN ON PATH GRAPHS — unlike
-    * plain min-label propagation, whose round count is the component
-    * DIAMETER (a 10k-node chain = 10k rounds; doubling via stars ≈ 14).
+    * Algorithm: the input's distinct edge set is materialized once and
+    * counted (the round-0 fingerprint). What happens next depends on that
+    * count:
     *
-    * Scale/durability contract: every round is two slim
+    *  - **Driver finish** — when `rows × (defaultSize of the two id
+    *    types)` is within the session's
+    *    `spark.sql.autoBroadcastJoinThreshold`, i.e. the edge set is one
+    *    Spark would broadcast. The edges are collected and solved by
+    *    union-find over `Int` indices into the distinct ids, sorted with
+    *    Catalyst's ordering for the id type (so string ids get exactly
+    *    the minimum Spark's `min`/`least` pick). Driver memory is a small
+    *    multiple of the threshold: one collected row per edge plus two
+    *    `Int` arrays over the ids (string ids longer than the 20-byte
+    *    default size scale it up in proportion). No star round runs and
+    *    `rounds` is 0. Set the threshold to -1 to disable it.
+    *  - **Star loop** — otherwise: alternating large-star / small-star
+    *    contraction (Kiveris et al., "Connected Components in MapReduce
+    *    and Beyond", SoCC'14 — a published algorithm, reimplemented here
+    *    from the paper). Each round rewires every node's strictly-larger
+    *    neighbors (large-star), then its smaller-or-equal neighbors
+    *    (small-star), toward the local minimum; the edge set converges to
+    *    star graphs centered at each component's minimum in O(log n)
+    *    rounds EVEN ON PATH GRAPHS — unlike plain min-label propagation,
+    *    whose round count is the component DIAMETER (a 10k-node chain =
+    *    10k rounds; doubling via stars ≈ 14).
+    *
+    * Star-loop scale/durability contract: every round is two slim
     * (groupBy-min + equi-join) passes over bare edges; exactly ONE driver
     * action per round (the convergence fingerprint — a count+hash-sum
     * aggregate whose evaluation also materializes that round's lazily
@@ -497,7 +514,13 @@ object Dedup {
     * store) that survives executor loss — the mode a 1000-executor run
     * with preemption must use. Convergence is detected by edge-set
     * fingerprint (count + XOR of xxhash64(a,b)): a false fixpoint needs
-    * a 2^-64 hash collision at equal cardinality. */
+    * a 2^-64 hash collision at equal cardinality.
+    *
+    * Both paths return the same rows with the same schema, and both
+    * report `graft_cc_summary` (rounds, ids) to QueryExecutionListeners.
+    * The driver finish releases its materialized edge set before
+    * returning; the star loop's snapshots are released by
+    * [[releaseClusterState]]. */
   def dupClusters(pairs: DataFrame, idACol: String = "id_a",
                   idBCol: String = "id_b", maxIters: Int = 30,
                   checkpointDir: Option[String] = None): DataFrame =
@@ -518,17 +541,17 @@ object Dedup {
     * snapshots are `localCheckpoint` blocks, an RDD-level persist that
     * `Dataset.unpersist` does not touch — those need the underlying
     * LogicalRDD's own unpersist. */
-  private def releaseSnapshot(df: DataFrame): Unit = {
+  private def releaseSnapshot(df: DataFrame, blocking: Boolean = false): Unit = {
     org.apache.spark.sql.graftbridge.Bridge.localCheckpointRdd(df)
-      .foreach(_.unpersist(blocking = false))
-    df.unpersist(blocking = false)
+      .foreach(_.unpersist(blocking))
+    df.unpersist(blocking)
   }
 
   /** Release the checkpoint blocks retained by a [[dupClusters]] result.
     * The labels frame must not be evaluated again afterwards. */
   def releaseClusterState(labels: DataFrame): Unit = {
     val kept = retainedByLabels.remove(labels)
-    if (kept != null) kept.foreach(releaseSnapshot)
+    if (kept != null) kept.foreach(releaseSnapshot(_))
   }
 
   /** [[dupClusters]] internals, exposing the round count for convergence
@@ -536,6 +559,7 @@ object Dedup {
   private[graft] def connectedComponents(
       edges0: DataFrame, maxIters: Int,
       checkpointDir: Option[String]): (DataFrame, Int) = {
+    import org.apache.spark.sql.graftbridge.Bridge
     val spark = edges0.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     // eager=false: the checkpoint materializes under the SAME job as the
@@ -565,21 +589,27 @@ object Dedup {
     def dropSupersededCaches(): Unit =
       while (cachedRounds.size > 1)
         releaseSnapshot(cachedRounds.dequeue())
-    // count + XOR of per-edge hashes: commutative, duplicate-free input
-    // (edges are distinct-ed), and — unlike a sum — can never hit the
-    // ANSI long-overflow error at any cardinality. The pass is routed
-    // through observe() so each round's edge cardinality reaches every
-    // registered QueryExecutionListener as a `graft_cc_round_<n>` metric
-    // (production convergence alarms read the same channel as the bucket
-    // caps' drop metrics) while Observation.get hands this loop the
-    // values synchronously.
-    def fingerprint(e: DataFrame, round: Int): (Long, Long) = {
+    // count + XOR of per-edge hashes over the rows with a != b (true, not
+    // NULL): commutative, duplicate-free input (edges are distinct-ed),
+    // and — unlike a sum — can never hit the ANSI long-overflow error at
+    // any cardinality; `rows` counts every row, self-loops and NULL
+    // endpoints included. The pass is routed through observe() so each
+    // round's edge cardinality reaches every registered
+    // QueryExecutionListener as a `graft_cc_round_<n>` metric (production
+    // convergence alarms read the same channel as the bucket caps' drop
+    // metrics) while Observation.get hands this loop the values
+    // synchronously. Returns ((edges, edge_hash), rows).
+    def fingerprint(e: DataFrame, round: Int): ((Long, Long), Long) = {
       val obs = org.apache.spark.sql.Observation(s"graft_cc_round_$round")
-      e.observe(obs, count(lit(1)).as("edges"),
-          coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("edge_hash"))
+      val edge = col("a") =!= col("b")
+      e.observe(obs, count(when(edge, 1)).as("edges"),
+          coalesce(bit_xor(when(edge, xxhash64(col("a"), col("b")))),
+            lit(0L)).as("edge_hash"),
+          count(lit(1)).as("rows"))
         .foreach((_: org.apache.spark.sql.Row) => ())
       val m = obs.get
-      (m("edges").asInstanceOf[Long], m("edge_hash").asInstanceOf[Long])
+      ((m("edges").asInstanceOf[Long], m("edge_hash").asInstanceOf[Long]),
+        m("rows").asInstanceOf[Long])
     }
     // Large-star: for each node u, connect every STRICTLY LARGER neighbor
     // to m = min(N(u) ∪ {u}). Keeps connectivity, never creates self
@@ -618,38 +648,93 @@ object Dedup {
     // nodes, which the star rounds never see — gets an output row
     val nodes = base.select(col("a").as("id"))
       .union(base.select(col("b").as("id"))).distinct()
-    var cur = base.where(col("a") =!= col("b"))
-    var fp = fingerprint(cur, 0) // materializes base's checkpoint too
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxIters) {
-      val next = truncate(smallStar(largeStar(cur)))
-      val nfp = fingerprint(next, rounds + 1) // materializes next's checkpoint
-      dropSupersededCaches()
-      converged = nfp == fp
-      cur = next
-      fp = nfp
-      rounds += 1
-    }
-    require(converged,
-      s"dupClusters did not converge in $maxIters rounds — raise maxIters " +
-        "(expected O(log n); this indicates pathological input size)")
     // at fixpoint every non-minimum node has exactly one edge, to its
     // component minimum; minima and singletons label themselves
-    val labels = nodes
-      .join(cur.select(col("a").as("id"), col("b").as("__m")), Seq("id"), "left")
+    def starLabels(star: DataFrame): DataFrame = nodes
+      .join(star.select(col("a").as("id"), col("b").as("__m")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__m"), col("id")).as("cluster_id"))
-      // every downstream action on the labels re-emits the converged
-      // round count + id cardinality to QueryExecutionListeners, so a
-      // production consumer can alarm on rounds creeping toward maxIters
-      // without threading the internal API's return value around
-      .observe("graft_cc_summary",
-        max(lit(rounds)).as("rounds"), count(lit(1)).as("ids"))
-    // base + the surviving round are what `labels` still reads; register
-    // them so a caller done with the result can release the blocks
-    // eagerly ([[releaseClusterState]]) instead of waiting for RDD GC
-    retainedByLabels.put(labels, base +: cachedRounds.toSeq)
-    (labels, rounds)
+    // every downstream action on the labels re-emits the converged round
+    // count + id cardinality to QueryExecutionListeners, so a production
+    // consumer can alarm on rounds creeping toward maxIters without
+    // threading the internal API's return value around
+    def summarized(labels: DataFrame, rounds: Int): (DataFrame, Int) = (
+      labels.observe("graft_cc_summary",
+        max(lit(rounds)).as("rounds"), count(lit(1)).as("ids")),
+      rounds)
+    var cur = base.where(col("a") =!= col("b"))
+    // round 0 reads base itself: materializes its checkpoint, and `rows`
+    // is exactly what a driver finish would collect
+    val (fp0, rows) = fingerprint(base, 0)
+    val idBytes = base.schema.fields.map(_.dataType.defaultSize.toLong).sum
+    if (rows * idBytes <= Bridge.autoBroadcastJoinThreshold(spark)) {
+      val schema = starLabels(cur).schema // analysis only: runs no job
+      val idType = schema("id").dataType
+      val edges = Bridge.collectInternal(
+        base.select(col("a").cast(idType), col("b").cast(idType)))
+      (base +: cachedRounds.toSeq).foreach(releaseSnapshot(_, blocking = true))
+      summarized(
+        Bridge.localFrame(spark, schema, driverComponents(edges, idType)), 0)
+    } else {
+      var fp = fp0
+      var rounds = 0
+      var converged = false
+      while (!converged && rounds < maxIters) {
+        val next = truncate(smallStar(largeStar(cur)))
+        val (nfp, _) = fingerprint(next, rounds + 1) // materializes next's checkpoint
+        dropSupersededCaches()
+        converged = nfp == fp
+        cur = next
+        fp = nfp
+        rounds += 1
+      }
+      require(converged,
+        s"dupClusters did not converge in $maxIters rounds — raise maxIters " +
+          "(expected O(log n); this indicates pathological input size)")
+      val labels = summarized(starLabels(cur), rounds)
+      // base + the surviving round are what `labels` still reads; register
+      // them so a caller done with the result can release the blocks
+      // eagerly ([[releaseClusterState]]) instead of waiting for RDD GC
+      retainedByLabels.put(labels._1, base +: cachedRounds.toSeq)
+      labels
+    }
+  }
+
+  /** [[connectedComponents]]' driver finish over collected (a, b) rows of
+    * id type `t`: every non-NULL id labelled with its component's minimum
+    * under Catalyst's ordering for `t` (the label the star rounds'
+    * `min`/`least` converge to). Self-loops and rows with a NULL endpoint
+    * add ids but join nothing; a NULL id labels itself NULL, as the star
+    * path's left join leaves it. Union-find over `Int` indices into the
+    * sorted distinct ids: union by smaller index keeps every root its
+    * component's minimum. */
+  private def driverComponents(
+      edges: Array[org.apache.spark.sql.catalyst.InternalRow],
+      t: org.apache.spark.sql.types.DataType)
+      : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(t)
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    edges.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.get(_, t)))
+      .sorted(ord)
+      .foreach(v => if (ids.isEmpty || ord.compare(ids.last, v) != 0) ids += v)
+    def index(v: Any): Int = ids.search(v)(ord).insertionPoint
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    edges.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val x = find(index(r.get(0, t)))
+        val y = find(index(r.get(1, t)))
+        if (x < y) parent(y) = x else if (y < x) parent(x) = y
+      }
+    }
+    val labelled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
+    if (edges.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      labelled :+ InternalRow(null, null)
+    else labelled
   }
 
   /** The near-duplicate-deduplicated corpus: every column of `docs`, with

@@ -122,8 +122,13 @@ object Compaction {
     val tmp = new Path(target, s"_temporary-$qid")
     fs.delete(tmp, true)
     data
-      // metadata-sized plan: broadcast, never a data-data shuffle join
-      .join(broadcast(binPlan), Seq(partCol, orderCol))
+      // metadata-sized plan: broadcast, never a data-data shuffle join.
+      // Null-safe keys: a NULL partition or clustering key is a planned
+      // file like any other, and a plain equi-join would drop its rows.
+      .join(broadcast(binPlan.select(col(partCol).as("__p"),
+          col(orderCol).as("__o"), col("bin"))),
+        col(partCol) <=> col("__p") && col(orderCol) <=> col("__o"))
+      .drop("__p", "__o")
       // Hash-cluster by (partition, bin) at an EXPLICIT session-width
       // partition count: every row of a bin shares the key, so each bin
       // still lands wholly in one task and the partitionBy writer still

@@ -38,6 +38,33 @@ object Bridge {
     org.apache.spark.sql.errors.QueryExecutionErrors
       .castingCauseOverflowError(value, from, to)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, parsed
+    * as the planner reads it (-1 disables broadcasting). */
+  def autoBroadcastJoinThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
+  /** A DataFrame's rows in Catalyst's internal form, collected as one
+    * tracked SQL execution: `Dataset.collect`'s path without the
+    * conversion to external rows, so values keep the representation
+    * Catalyst's orderings compare (UTF8String, not String). */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** A DataFrame over driver-held internal rows of `schema` (names,
+    * types and nullability kept). */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+                 schema: org.apache.spark.sql.types.StructType,
+                 rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    dataset(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+      rows))
+
   /** The checkpointed RDD behind a `localCheckpoint`'d Dataset, if any.
     * `Dataset.unpersist` only clears CacheManager entries; a local
     * checkpoint's blocks are an RDD-LEVEL persist on the `LogicalRDD`

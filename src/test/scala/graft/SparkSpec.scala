@@ -13,6 +13,18 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Run `body` with session conf `key` set to `value`, then put back
+    * what was set before (or unset it if nothing was). */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = session.conf.getAll.get(key)
+    session.conf.set(key, value)
+    try body
+    finally prior match {
+      case Some(v) => session.conf.set(key, v)
+      case None => session.conf.unset(key)
+    }
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -284,4 +284,57 @@ object DedupProps extends Properties("Dedup") {
           ((truth.size.toLong, cand.size.toLong,
             truth.toSet.intersect(cand.toSet).size.toLong))
     }
+
+  /** Random edge lists over up to 40 ids: self-loops, duplicate and
+    * reversed copies, in half the cases rows with a NULL endpoint, and a
+    * chain of up to 60 edges listed from its far end (several star
+    * rounds). */
+  private val genGraph: Gen[(List[(Option[Int], Option[Int])], Boolean)] = for {
+    n <- Gen.chooseNum(1, 40)
+    id = Gen.chooseNum(0, n - 1)
+    edges <- Gen.listOf(Gen.zip(id, id))
+    copies <- Gen.someOf(edges)
+    chain <- Gen.chooseNum(0, 60)
+    withNulls <- Gen.oneOf(true, false)
+    nulls <- Gen.listOf(Gen.oneOf(
+      id.map(i => (Option(i), Option.empty[Int])),
+      id.map(i => (Option.empty[Int], Option(i))),
+      Gen.const((Option.empty[Int], Option.empty[Int]))))
+  } yield {
+    val linked = (edges ++ copies.map(_.swap) ++ copies ++
+      (chain - 1 to 0 by -1).map(k => (n + k, n + k + 1)))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    (if (withNulls) linked ++ nulls.take(4) else linked, withNulls)
+  }
+
+  /** String ids whose UTF-8 byte order (Spark's) differs from Java's
+    * UTF-16 order: U+E000 sorts below U+1F600 in bytes, above it in
+    * UTF-16 code units. */
+  private val idPrefixes = Vector("", "a", "B", "\u00e9", "\ue000", "\ud83d\ude00")
+  private def stringId(i: Int): String = idPrefixes(i % idPrefixes.size) + (i / idPrefixes.size)
+
+  property("connectedComponents: the driver finish gives the star loop's " +
+    "rows and schema, for Long and String ids, NULL endpoints, self-loops, " +
+    "duplicate and reversed edges, and long chains") =
+    forAll(genGraph) { case (edges, withNulls) =>
+      import spark.implicits._
+      def both(df: org.apache.spark.sql.DataFrame): Boolean = {
+        def run(threshold: String) =
+          SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+            val (labels, rounds) = Dedup.connectedComponents(df, 30, None)
+            val rows = labels.collect().toSeq.sortBy(_.toString)
+            Dedup.releaseClusterState(labels)
+            (labels.schema, rows, rounds)
+          }
+        val (starSchema, starRows, _) = run("-1")
+        val (schema, rows, rounds) = run("10MB")
+        rounds == 0 && schema == starSchema && rows == starRows
+      }
+      val longs =
+        if (withNulls) edges.map { case (a, b) => (a.map(_.toLong), b.map(_.toLong)) }
+          .toDF("a", "b")
+        else edges.map { case (a, b) => (a.get.toLong, b.get.toLong) }.toDF("a", "b")
+      both(longs) && both(edges.map { case (a, b) =>
+        (a.map(stringId).orNull, b.map(stringId).orNull) }.toDF("a", "b"))
+    }
 }

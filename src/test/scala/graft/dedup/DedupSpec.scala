@@ -13,6 +13,12 @@ class DedupSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
+  /** The star-contraction loop for every input size: tests that assert
+    * on rounds, snapshots or checkpoints need it, since broadcast-sized
+    * edge sets otherwise take the driver finish. */
+  private def starLoop[T](body: => T): T =
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
   private val corpus = docs(
     1L -> "the quick brown fox jumps over the lazy dog",
     2L -> "the quick brown fox jumps over the lazy cat", // near-dup of 1
@@ -232,7 +238,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dupClusters: 10k-node path graph converges in O(log n) star " +
-    "rounds, not O(diameter) propagation rounds") {
+    "rounds, not O(diameter) propagation rounds") { starLoop {
     import spark.implicits._
     val n = 10000L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -243,10 +249,10 @@ class DedupSpec extends SparkSpec {
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length === n)
     assert(got.forall(_._2 == 1L))
-  }
+  }}
 
   test("dupClusters: reliable-checkpoint mode (cluster durability) " +
-    "produces identical clusters") {
+    "produces identical clusters") { starLoop {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString
     val pairs = Seq((4L, 5L), (3L, 4L), (2L, 3L), (1L, 2L), (10L, 11L),
@@ -255,11 +261,11 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 7L -> 7L))
-  }
+  }}
 
   test("local-mode round snapshots are released eagerly: persistent RDDs " +
     "do not accumulate with round count, and releaseClusterState drops " +
-    "what the labels still read") {
+    "what the labels still read") { starLoop {
     import spark.implicits._
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val before = persisted
@@ -276,10 +282,10 @@ class DedupSpec extends SparkSpec {
     Dedup.releaseClusterState(labels)
     val after = persisted -- before
     assert(after.isEmpty, s"release left ${after.size} persistent RDDs")
-  }
+  }}
 
   test("dupClusters convergence is observable: per-round edge cardinality " +
-    "and the converged summary reach QueryExecutionListeners") {
+    "and the converged summary reach QueryExecutionListeners") { starLoop {
     import spark.implicits._
     val seen = new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.Row]()
@@ -315,6 +321,69 @@ class DedupSpec extends SparkSpec {
       (1 to rounds).foreach(i =>
         assert(seen.containsKey(s"graft_cc_round_$i"), s"missing round $i"))
     } finally spark.listenerManager.unregister(listener)
+  }}
+
+  test("a broadcast-sized edge set is solved on the driver: dupClusters " +
+    "runs at most 4 jobs, leaves no persistent RDD, and reports " +
+    "graft_cc_summary with 0 rounds") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 180 edges, as many as corpus_dedup's verified pairs: 30 chains of
+    // 7 ids, each listed from its far end so the star loop needs rounds
+    val pairs = (0 until 30).flatMap(c => (6 to 1 by -1).map(i =>
+        (c * 10L + i, c * 10L + i + 1))).toDF("id_a", "id_b")
+    assert(pairs.count() === 180L)
+    // jobs started on this thread while `tag` is set, by tag value
+    val tag = "graft.test.cc"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(jobs.add)
+    }
+    val seen = new java.util.concurrent.ConcurrentHashMap[
+      String, org.apache.spark.sql.Row]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.observedMetrics.foreach { case (k, v) => seen.put(k, v) }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    def tagged[T](value: String)(body: => T): T = {
+      spark.sparkContext.setLocalProperty(tag, value)
+      try body finally spark.sparkContext.setLocalProperty(tag, null)
+    }
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      val before = persisted
+      val labels = tagged("cc")(Dedup.dupClusters(pairs))
+      val left = persisted -- before
+      assert(left.isEmpty, s"dupClusters left ${left.size} persistent RDDs")
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === (0 until 30).flatMap(c => (1 to 7).map(i =>
+        (c * 10L + i) -> (c * 10L + 1))).toMap)
+      // listener delivery is async: a sentinel job marks the bus caught up
+      tagged("sentinel")(spark.range(1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((!jobs.contains("sentinel") ||
+              !seen.containsKey("graft_cc_summary")) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      val n = jobs.toArray.count(_ == "cc")
+      assert(n <= 4, s"dupClusters ran $n jobs")
+      val summary = seen.get("graft_cc_summary")
+      assert(summary != null,
+        s"graft_cc_summary never reached the listener; saw ${seen.keySet()}")
+      assert(summary.getAs[Int]("rounds") === 0)
+      assert(summary.getAs[Long]("ids") === 210L)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
   }
 
   test("nearDupCorpus drops exactly the non-representative cluster " +

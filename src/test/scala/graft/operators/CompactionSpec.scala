@@ -151,4 +151,44 @@ class CompactionSpec extends SparkSpec {
     assert(Compaction.readCompactedRange(spark, out, "day",
       1000L, 2000L).count() === 0L)
   }
+
+  test("string partition keys that need escaping (a space, '/', '=') and " +
+    "a NULL key: every row is written, and the range sidecar records a " +
+    "range for every non-null-keyed file") {
+    import spark.implicits._
+    val out = freshDir("escaped")
+    val keys = Seq("a b", "x/y", "k=v", null)
+    val df = (for {
+      pt <- keys
+      day <- 1 to 12
+      i <- 1 to (day % 3) + 1
+    } yield (pt, day.toLong, s"$pt-$day-$i")).toDF("pt", "day", "payload")
+    Compaction.execute(df, "pt", "day", targetRows = 10L, out, "spec5")
+    val back = Compaction.readCompacted(spark, out)
+    assert(back.count() === df.count())
+    // the data's own day range per (key, bin); a NULL key reads back NULL
+    val actual = back
+      .groupBy(col("pt"), col("bin")).agg(min("day"), max("day"))
+      .collect().map(r => (Option(r.getString(0)), r.getInt(1).toLong) ->
+        s"${r.getLong(2)}\t${r.getLong(3)}").toMap
+    val stats = scala.io.Source.fromFile(s"$out/commit-spec5.stats", "UTF-8")
+    val lines = try stats.getLines().filter(_.nonEmpty).toList
+      finally stats.close()
+    val byFile = lines.map { l =>
+      val Array(rp, range) = l.split("\t", 2)
+      val Array(_, ptDir, binDir, _) = rp.split('/')
+      val key = ptDir.stripPrefix("pt=") match {
+        case "__HIVE_DEFAULT_PARTITION__" => None
+        case d => Some(org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.unescapePathName(d))
+      }
+      (key, binDir.stripPrefix("bin=").toLong) -> range
+    }
+    assert(byFile.map(_._1).toSet === actual.keySet)
+    assert(byFile.map(_._1._1).toSet === keys.map(Option(_)).toSet)
+    byFile.foreach { case (k @ (key, _), range) =>
+      if (key.isDefined)
+        assert(range === actual(k), s"file of $k records range $range")
+    }
+  }
 }
