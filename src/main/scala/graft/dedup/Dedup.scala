@@ -482,9 +482,10 @@ object Dedup {
     * count:
     *
     *  - **Driver finish** — when `rows × (defaultSize of the two id
-    *    types)` is within the session's
-    *    `spark.sql.autoBroadcastJoinThreshold`, i.e. the edge set is one
-    *    Spark would broadcast. The edges are collected and solved by
+    *    types)` passes the engine's shared driver-finish rule,
+    *    `Bridge.fitsOnDriver` (within the session's
+    *    `spark.sql.autoBroadcastJoinThreshold`, i.e. an edge set Spark
+    *    would broadcast). The edges are collected and solved by
     *    union-find over `Int` indices into the distinct ids, sorted with
     *    Catalyst's ordering for the id type (so string ids get exactly
     *    the minimum Spark's `min`/`least` pick). Driver memory is a small
@@ -666,14 +667,14 @@ object Dedup {
     // is exactly what a driver finish would collect
     val (fp0, rows) = fingerprint(base, 0)
     val idBytes = base.schema.fields.map(_.dataType.defaultSize.toLong).sum
-    if (rows * idBytes <= Bridge.autoBroadcastJoinThreshold(spark)) {
+    if (Bridge.fitsOnDriver(spark, BigInt(rows) * idBytes)) {
       val schema = starLabels(cur).schema // analysis only: runs no job
       val idType = schema("id").dataType
       val edges = Bridge.collectInternal(
         base.select(col("a").cast(idType), col("b").cast(idType)))
       (base +: cachedRounds.toSeq).foreach(releaseSnapshot(_, blocking = true))
       summarized(
-        Bridge.localFrame(spark, schema, driverComponents(edges, idType)), 0)
+        Bridge.localFrame(spark, schema, DriverFinish.components(edges, idType)), 0)
     } else {
       var fp = fp0
       var rounds = 0
@@ -697,44 +698,6 @@ object Dedup {
       retainedByLabels.put(labels._1, base +: cachedRounds.toSeq)
       labels
     }
-  }
-
-  /** [[connectedComponents]]' driver finish over collected (a, b) rows of
-    * id type `t`: every non-NULL id labelled with its component's minimum
-    * under Catalyst's ordering for `t` (the label the star rounds'
-    * `min`/`least` converge to). Self-loops and rows with a NULL endpoint
-    * add ids but join nothing; a NULL id labels itself NULL, as the star
-    * path's left join leaves it. Union-find over `Int` indices into the
-    * sorted distinct ids: union by smaller index keeps every root its
-    * component's minimum. */
-  private def driverComponents(
-      edges: Array[org.apache.spark.sql.catalyst.InternalRow],
-      t: org.apache.spark.sql.types.DataType)
-      : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(t)
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    edges.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.get(_, t)))
-      .sorted(ord)
-      .foreach(v => if (ids.isEmpty || ord.compare(ids.last, v) != 0) ids += v)
-    def index(v: Any): Int = ids.search(v)(ord).insertionPoint
-    val parent = Array.range(0, ids.length)
-    def find(i: Int): Int = {
-      var x = i
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    edges.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        val x = find(index(r.get(0, t)))
-        val y = find(index(r.get(1, t)))
-        if (x < y) parent(y) = x else if (y < x) parent(x) = y
-      }
-    }
-    val labelled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
-    if (edges.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      labelled :+ InternalRow(null, null)
-    else labelled
   }
 
   /** The near-duplicate-deduplicated corpus: every column of `docs`, with
@@ -862,25 +825,73 @@ object Dedup {
     * pass. Candidate volume is emitted as observed metric
     * "prefix_jaccard" (the q88 cap-metric discipline).
     *
-    * Scale shape: df is a map-side-combined hash-agg over slim postings;
-    * the per-doc rarity rank is a window partitioned by doc id (bounded
-    * by document length, never by a low-cardinality key); the candidate
-    * join moves (shingle, id, n) only; verification re-attaches shingle
-    * arrays by two slim id-keyed joins, linear in candidates. */
+    * Two paths, the same rows and the same schema:
+    *
+    *  - **Driver finish** — when Catalyst's size estimate for the sorted
+    *    shingle sets (id, sg) passes the engine's shared driver-finish
+    *    rule, `Bridge.fitsOnDriver` (within the session's
+    *    `spark.sql.autoBroadcastJoinThreshold`, i.e. a relation Spark
+    *    would broadcast). The sets are collected once, in Catalyst's
+    *    internal form, and joined by PPJoin on the driver: the same
+    *    global order over an `Int` dictionary, the same asymmetric index
+    *    and probe prefixes and length filter, a merge-walk
+    *    verification and the same `jaccard` double expression
+    *    (`DriverFinish.prefixJaccard`), except that the positional
+    *    filter also counts the overlap seen so far. The threshold bounds
+    *    Catalyst's estimate, not the heap: the driver holds the collected
+    *    rows plus one `Int` per shingle occurrence, and shingling expands
+    *    text while a compressed columnar source estimates below its
+    *    decoded size. On q130's sf0.1 corpus the collected rows are 23×
+    *    the estimate (6.0 MB against 0.25 MB), so at the default 10 MB
+    *    threshold the driver may hold a few hundred MB. The result is a
+    *    local relation, and "prefix_jaccard" counts the candidates the
+    *    driver verified. A NULL or repeated id sends the input to the
+    *    distributed path. Set the threshold to -1 to turn the driver
+    *    finish off.
+    *  - **Distributed** — otherwise. Scale shape: df is a
+    *    map-side-combined hash-agg over slim postings; the per-doc
+    *    rarity rank is a window partitioned by doc id (bounded by
+    *    document length, never by a low-cardinality key); the candidate
+    *    join moves (shingle, id, n) only; verification re-attaches
+    *    shingle arrays by two slim id-keyed joins, linear in candidates.
+    *    "prefix_jaccard" counts the distinct candidate pairs. */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                          minJaccard: Double, shingleN: Int = 2): DataFrame = {
     require(minJaccard > 0.0 && minJaccard < 1.0,
       "prefix filtering needs 0 < minJaccard < 1: at 0 the prefix is the " +
         "whole set, at 1 use exactDupGroups")
+    import org.apache.spark.sql.graftbridge.Bridge
     val (sh0, _) = blockedPostings(docs, idCol, textCol, Nil, shingleN)
     val spark = docs.sparkSession
+    // Sorted ONCE per document here so verification's per-PAIR
+    // intersection is the merge-walk kernel (sorting is |doc|·log cost
+    // paid |corpus| times; hashing inside array_intersect would be paid
+    // |candidates| times).
+    val sh1 = sh0.select(col("id"), array_sort(col("sg")).as("sg"))
+    val onDriver =
+      if (!Bridge.fitsOnDriver(spark, Bridge.estimatedBytes(sh1))) None
+      else {
+        val schema = verifiedJaccard( // analysis only: runs no job
+          sh1.select(col("id").as("id_a"), col("id").as("id_b")),
+          sh1.select(col("id"), col("sg").as("sgv")), minJaccard).schema
+        DriverFinish.prefixJaccard(Bridge.collectInternal(sh1),
+            sh1.schema("id").dataType, minJaccard)
+          .map { case (rows, candidates) =>
+            Bridge.localFrame(spark, schema, rows).observe("prefix_jaccard",
+              lit(candidates).as("candidate_pairs"))
+          }
+      }
+    onDriver.getOrElse(distributedPrefixJaccard(sh1, minJaccard))
+  }
+
+  /** [[prefixJaccardPairs]]' distributed path over the sorted shingle
+    * sets `sh1` (id, sg). */
+  private def distributedPrefixJaccard(sh1: DataFrame,
+                                       minJaccard: Double): DataFrame = {
+    val spark = sh1.sparkSession
     // the shingle arrays feed BOTH the prefix pipeline and the final
     // verification join — materialize them once (slim: one array per
-    // doc) instead of re-tokenizing the corpus per consumer. Sorted
-    // ONCE per document here so verification's per-PAIR intersection is
-    // the merge-walk kernel (sorting is |doc|·log cost paid |corpus|
-    // times; hashing inside array_intersect would be paid |candidates|
-    // times).
+    // doc) instead of re-tokenizing the corpus per consumer.
     // Under-parallelized-scan guard (guide §2.6 idle capacity): a small
     // single-file corpus scans as 1-2 partitions and every narrow stage
     // downstream (tokenize, shingle, sort) inherits that width while the
@@ -889,7 +900,6 @@ object Dedup {
     // partitions than cores and this branch is a no-op. Hash-partition
     // by id (deterministic), never round-robin (§2.5 retry semantics).
     val par = spark.sparkContext.defaultParallelism
-    val sh1 = sh0.select(col("id"), array_sort(col("sg")).as("sg"))
     val sh = (if (sh1.rdd.getNumPartitions < par)
         sh1.repartition(par, col("id"))
       else sh1).localCheckpoint(eager = false)
@@ -1018,6 +1028,14 @@ object Dedup {
         greatest(col("id_i"), col("id_p")).as("id_b"))
       .distinct()
       .observe("prefix_jaccard", count(lit(1)).as("candidate_pairs"))
+    verifiedJaccard(cand, shv, minJaccard)
+  }
+
+  /** Exact verification of (id_a, id_b) candidates against sorted
+    * (id, sgv) arrays: [[prefixJaccardPairs]]' output projection, whose
+    * analyzed schema the driver finish also returns. */
+  private def verifiedJaccard(cand: DataFrame, shv: DataFrame,
+                              minJaccard: Double): DataFrame =
     cand
       .join(shv.select(col("id").as("id_a"), col("sgv").as("sg_a")), "id_a")
       .join(shv.select(col("id").as("id_b"), col("sgv").as("sg_b")), "id_b")
@@ -1031,7 +1049,6 @@ object Dedup {
           ((size(col("sg_a")) + size(col("sg_b"))).cast("double") -
             col("__inter"))).as("jaccard"))
       .where(col("jaccard") >= minJaccard)
-  }
 
   /** Mergeable GROUP-level MinHash signatures: the MinHash of a UNION of
     * shingle sets is the slot-wise MIN of the member signatures, so a
@@ -1113,10 +1130,57 @@ object Dedup {
     * bound for that segment index — the observed `fuzzy_block.candidates`
     * metric makes that visible instead of silent.
     *
+    * Two paths, the same rows and the same schema:
+    *
+    *  - **Driver finish** — when Catalyst's size estimate for the
+    *    non-NULL names passes the engine's shared driver-finish rule,
+    *    `Bridge.fitsOnDriver` (within the session's
+    *    `spark.sql.autoBroadcastJoinThreshold`). The names are collected
+    *    once, in Catalyst's internal form, deduplicated, and blocked key
+    *    for key as below on the driver (`DriverFinish.fuzzyPairs`);
+    *    candidates are verified by the same banded kernel and ordered by
+    *    UTF8String binary order, as Spark's `<` orders them. The
+    *    driver holds the collected names plus d+1 index entries per
+    *    name, and the output rows. The threshold bounds Catalyst's
+    *    estimate of the names (for q110 at sf0.1, 0.72 MB estimated and
+    *    0.04 MB collected). The result is a local relation, and
+    *    `fuzzy_block.candidates` counts the candidates the driver
+    *    verified. Set the threshold to -1 to turn it off.
+    *  - **Distributed** — otherwise: the blocking join at session width,
+    *    where `fuzzy_block.candidates` counts the distinct candidate
+    *    pairs.
+    *
     * Emits (name_a, name_b, dist) with name_a < name_b, dist ≤ maxDist. */
   def fuzzyNamePairs(names: DataFrame, nameCol: String,
                      maxDist: Int = 2): DataFrame = {
     require(maxDist >= 1, "maxDist must be ≥ 1")
+    import org.apache.spark.sql.graftbridge.Bridge
+    val spark = names.sparkSession
+    val named = names.select(col(nameCol).as("name"))
+    // banded verification kernel: O(d·len) + early band exit, vs the
+    // built-in's full O(len²) table — exact for every distance the
+    // `<= maxDist` filter can keep (parity-pinned in TextKernelsSpec)
+    def verified(cand: DataFrame): DataFrame = cand
+      .select(col("name_a"), col("name_b"),
+        graft.expressions.TextKernels.boundedLevenshteinOf(
+          col("name_a"), col("name_b"), maxDist).as("dist"))
+      .where(col("dist") <= maxDist)
+    val nonNull = named.where(col("name").isNotNull)
+    if (Bridge.fitsOnDriver(spark, Bridge.estimatedBytes(nonNull))) {
+      val schema = verified( // analysis only: runs no job
+        named.select(col("name").as("name_a"), col("name").as("name_b"))).schema
+      val (rows, candidates) = DriverFinish.fuzzyPairs(
+        Bridge.collectInternal(nonNull).map(_.getUTF8String(0)).distinct,
+        maxDist)
+      Bridge.localFrame(spark, schema, rows)
+        .observe("fuzzy_block", lit(candidates).as("candidates"))
+    } else verified(blockedNamePairs(named, maxDist))
+  }
+
+  /** [[fuzzyNamePairs]]' distributed candidate generation over the
+    * `name` column: the distinct (name_a, name_b) pairs, observed as
+    * "fuzzy_block". */
+  private def blockedNamePairs(named: DataFrame, maxDist: Int): DataFrame = {
     val nSeg = maxDist + 1
     // Width discipline (guide §2.6 idle capacity): a name table is
     // BYTE-tiny but everything downstream is CPU-heavy per row (≤75
@@ -1131,8 +1195,8 @@ object Dedup {
     // stage. A repartition whose keys the child already statically
     // satisfies is elided by the planner, which is why a plain
     // repartition(name) after the distinct did nothing.
-    val par = names.sparkSession.sessionState.conf.numShufflePartitions
-    val n = names.select(col(nameCol).as("name")).distinct()
+    val par = named.sparkSession.sessionState.conf.numShufflePartitions
+    val n = named.distinct()
       .withColumn("len", length(col("name")))
     val segIdx = explode(array((0 until nSeg).map(i => lit(i)): _*))
     // build side: each name contributes its d+1 segments at their home
@@ -1175,13 +1239,6 @@ object Dedup {
       .repartition(par, col("name_a"), col("name_b"))
       .distinct()
       .observe("fuzzy_block", count(lit(1)).as("candidates"))
-      // banded verification kernel: O(d·len) + early band exit, vs the
-      // built-in's full O(len²) table — exact for every distance the
-      // `<= maxDist` filter can keep (parity-pinned in TextKernelsSpec)
-      .select(col("name_a"), col("name_b"),
-        graft.expressions.TextKernels.boundedLevenshteinOf(
-          col("name_a"), col("name_b"), maxDist).as("dist"))
-      .where(col("dist") <= maxDist)
   }
 
   /** Bag-of-words canonical dedup: two documents are duplicates when

@@ -196,9 +196,13 @@ object TextKernels {
     * DuckDB oracle) on every string whose distance is within the
     * threshold — which is the only regime a `dist <= d` filter
     * observes. */
-  def boundedLevenshtein(a: UTF8String, b: UTF8String, maxDist: Int): Long = {
-    val s = a.toString.codePoints().toArray
-    val t = b.toString.codePoints().toArray
+  def boundedLevenshtein(a: UTF8String, b: UTF8String, maxDist: Int): Long =
+    boundedLevenshtein(a.toString.codePoints().toArray,
+      b.toString.codePoints().toArray, maxDist)
+
+  /** [[boundedLevenshtein]] over code-point arrays, for callers that
+    * compare each string many times and decode it once. */
+  def boundedLevenshtein(s: Array[Int], t: Array[Int], maxDist: Int): Long = {
     val n = s.length
     val m = t.length
     val inf = maxDist + 1

@@ -38,11 +38,23 @@ object Bridge {
     org.apache.spark.sql.errors.QueryExecutionErrors
       .castingCauseOverflowError(value, from, to)
 
-  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, parsed
-    * as the planner reads it (-1 disables broadcasting). */
-  def autoBroadcastJoinThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  /** The engine's one rule for finishing a byte-tiny operator on the
+    * driver: `bytes` of driver-held data are allowed when they are
+    * within the session's `spark.sql.autoBroadcastJoinThreshold`, the
+    * same test the planner applies before broadcasting a relation. The
+    * threshold is therefore the driver memory bound, and -1 turns every
+    * driver finish off. */
+  def fitsOnDriver(spark: org.apache.spark.sql.SparkSession,
+                   bytes: BigInt): Boolean =
+    bytes >= 0 && bytes <= spark.asInstanceOf[
+      org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Catalyst's size estimate for a DataFrame's optimized plan, the
+    * number the planner's own broadcast choice reads. Planning only: it
+    * runs no job. */
+  def estimatedBytes(df: org.apache.spark.sql.DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** A DataFrame's rows in Catalyst's internal form, collected as one
     * tracked SQL execution: `Dataset.collect`'s path without the

@@ -337,4 +337,70 @@ object DedupProps extends Properties("Dedup") {
       both(longs) && both(edges.map { case (a, b) =>
         (a.map(stringId).orNull, b.map(stringId).orNull) }.toDF("a", "b"))
     }
+
+  /** Runs `build` at the default 10MB threshold and at -1: true when the
+    * first run finished on the driver (its observation reads a
+    * LocalRelation), the second did not, and both give the same schema
+    * (nullability included) and the same sorted rows. */
+  private def sameOnBothPaths(build: => org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LocalRelation}
+    def run(threshold: String) =
+      SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+        val df = build
+        val onDriver = df.queryExecution.analyzed.collectFirst {
+          case c: CollectMetrics => c.child.isInstanceOf[LocalRelation]
+        }.contains(true)
+        (onDriver, df.schema, df.collect().toSeq.sortBy(_.toString))
+      }
+    val (driver, schema, rows) = run("10MB")
+    val (distributed, distSchema, distRows) = run("-1")
+    driver && !distributed && schema == distSchema && rows == distRows
+  }
+
+  /** Corpora with NULL, empty, one-token (zero-shingle) and repeated
+    * texts, and a threshold drawn from the corpus's own pairwise Jaccard
+    * values, so some pairs sit at exactly J = τ. */
+  private val genThresholdCorpus: Gen[(List[Option[String]], Double)] = for {
+    texts <- Gen.chooseNum(2, 14).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(1 -> Gen.const(None), 6 -> genDoc.map(Some(_)))))
+    sets = texts.flatten.map(naiveShingles).filter(_.nonEmpty)
+    js = (for {
+      (a, i) <- sets.zipWithIndex; (b, k) <- sets.zipWithIndex if i < k
+      inter = a.intersect(b).size if inter > 0
+      j = inter.toDouble / (a.size + b.size - inter).toDouble if j < 1.0
+    } yield j).distinct
+    tau <- if (js.isEmpty) Gen.const(0.5) else Gen.oneOf(js)
+  } yield (texts, tau)
+
+  property("prefixJaccardPairs: the driver finish gives the distributed " +
+    "path's rows and schema, for Long and String ids, NULL, zero-shingle " +
+    "and repeated texts, and pairs at exactly J = τ") =
+    forAll(genThresholdCorpus) { case (texts, tau) =>
+      import spark.implicits._
+      val longs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+        .toDF("doc_id", "text")
+      val strings = texts.zipWithIndex.map { case (t, i) => (stringId(i), t.orNull) }
+        .toDF("doc_id", "text")
+      Seq(longs, strings).forall(docs =>
+        sameOnBothPaths(Dedup.prefixJaccardPairs(docs, "doc_id", "text", tau)))
+    }
+
+  /** Names over an alphabet with 2-, 3- and 4-byte UTF-8 characters
+    * (U+1F600 is a surrogate pair in UTF-16), so numChars ≠ numBytes,
+    * with NULLs and repeats. */
+  private val genUnicodeNames: Gen[List[Option[String]]] = {
+    val name = Gen.chooseNum(0, 6).flatMap(n => Gen.listOfN(n,
+      Gen.oneOf("a", "b", "\u00e9", "\ue000", "\ud83d\ude00")).map(_.mkString))
+    Gen.chooseNum(2, 16).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(1 -> Gen.const(None), 6 -> name.map(Some(_)))))
+  }
+
+  property("fuzzyNamePairs: the driver finish gives the distributed " +
+    "path's rows and schema on non-ASCII names with NULLs and repeats, " +
+    "for maxDist in 1..3") =
+    forAll(genUnicodeNames, Gen.chooseNum(1, 3)) { (names, d) =>
+      import spark.implicits._
+      val df = names.map(_.orNull).toDF("name")
+      sameOnBothPaths(Dedup.fuzzyNamePairs(df, "name", maxDist = d))
+    }
 }

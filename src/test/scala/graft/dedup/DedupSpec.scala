@@ -13,11 +13,70 @@ class DedupSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
-  /** The star-contraction loop for every input size: tests that assert
-    * on rounds, snapshots or checkpoints need it, since broadcast-sized
-    * edge sets otherwise take the driver finish. */
-  private def starLoop[T](body: => T): T =
+  /** Every operator's distributed path for every input size: tests that
+    * assert on its internals (star rounds, snapshots, checkpoints, the
+    * hashed verification) need it, since broadcast-sized inputs otherwise
+    * finish on the driver. */
+  private def distributed[T](body: => T): T =
     SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  /** `body` on the driver finish (the default threshold), then on the
+    * distributed path. */
+  private def bothPaths(body: => Unit): Unit = { body; distributed(body) }
+
+  /** Counts the jobs started on this thread under a tag value, and keeps
+    * the metrics QueryExecutionListeners observe, while registered. */
+  private final class JobProbe {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    private val tag = "graft.test.probe"
+    private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val seen = new java.util.concurrent.ConcurrentHashMap[
+      String, org.apache.spark.sql.Row]()
+    val jobListener: SparkListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(jobs.add)
+    }
+    val qeListener: org.apache.spark.sql.util.QueryExecutionListener =
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit =
+          qe.observedMetrics.foreach { case (k, v) => seen.put(k, v) }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      }
+    def tagged[T](value: String)(body: => T): T = {
+      spark.sparkContext.setLocalProperty(tag, value)
+      try body finally spark.sparkContext.setLocalProperty(tag, null)
+    }
+    /** Jobs tagged `value`, once the listener bus has caught up with a
+      * sentinel job and every named metric has arrived. */
+    def jobsTagged(value: String, metrics: String*): Int = {
+      tagged("sentinel")(spark.range(1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((!jobs.contains("sentinel") || !metrics.forall(seen.containsKey)) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      jobs.toArray.count(_ == value)
+    }
+    def observed(metric: String): org.apache.spark.sql.Row = {
+      val m = seen.get(metric)
+      assert(m != null, s"$metric never reached the listener; saw ${seen.keySet()}")
+      m
+    }
+  }
+
+  private def probing[T](body: JobProbe => T): T = {
+    val p = new JobProbe
+    spark.sparkContext.addSparkListener(p.jobListener)
+    spark.listenerManager.register(p.qeListener)
+    try body(p)
+    finally {
+      spark.listenerManager.unregister(p.qeListener)
+      spark.sparkContext.removeSparkListener(p.jobListener)
+    }
+  }
 
   private val corpus = docs(
     1L -> "the quick brown fox jumps over the lazy dog",
@@ -182,7 +241,7 @@ class DedupSpec extends SparkSpec {
       tk.sliding(2).filter(_.length == 2).map(_.mkString(" ")).toSet
     }
     val all = many.collect().map(r => r.getLong(0) -> r.getString(1))
-    for (tau <- Seq(0.2, 0.5, 0.8)) {
+    for (tau <- Seq(0.2, 0.5, 0.8)) bothPaths {
       val result = Dedup.prefixJaccardPairs(many, "doc_id", "text", tau)
       val got = result.collect()
         .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -203,7 +262,7 @@ class DedupSpec extends SparkSpec {
 
   test("prefixJaccardPairs: hashed and string verification paths are " +
     "byte-equal (the injectivity-guarded xxhash64 fast path vs the " +
-    "spark.graft.dedup.hashedVerify=false fallback)") {
+    "spark.graft.dedup.hashedVerify=false fallback)") { distributed {
     val many = docs((1L to 12L).map { i =>
       val t = i match {
         case 1L => "the quick brown fox jumps over the lazy dog"
@@ -223,7 +282,7 @@ class DedupSpec extends SparkSpec {
       assert(hashed === strings)
       assert(hashed.nonEmpty) // the parity must be over a non-trivial set
     } finally spark.conf.unset("spark.graft.dedup.hashedVerify")
-  }
+  }}
 
   test("dupClusters: components get their min id, chains converge, " +
     "disjoint clusters stay apart") {
@@ -238,7 +297,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dupClusters: 10k-node path graph converges in O(log n) star " +
-    "rounds, not O(diameter) propagation rounds") { starLoop {
+    "rounds, not O(diameter) propagation rounds") { distributed {
     import spark.implicits._
     val n = 10000L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -252,7 +311,7 @@ class DedupSpec extends SparkSpec {
   }}
 
   test("dupClusters: reliable-checkpoint mode (cluster durability) " +
-    "produces identical clusters") { starLoop {
+    "produces identical clusters") { distributed {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString
     val pairs = Seq((4L, 5L), (3L, 4L), (2L, 3L), (1L, 2L), (10L, 11L),
@@ -265,7 +324,7 @@ class DedupSpec extends SparkSpec {
 
   test("local-mode round snapshots are released eagerly: persistent RDDs " +
     "do not accumulate with round count, and releaseClusterState drops " +
-    "what the labels still read") { starLoop {
+    "what the labels still read") { distributed {
     import spark.implicits._
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val before = persisted
@@ -285,7 +344,7 @@ class DedupSpec extends SparkSpec {
   }}
 
   test("dupClusters convergence is observable: per-round edge cardinality " +
-    "and the converged summary reach QueryExecutionListeners") { starLoop {
+    "and the converged summary reach QueryExecutionListeners") { distributed {
     import spark.implicits._
     val seen = new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.Row]()
@@ -327,62 +386,25 @@ class DedupSpec extends SparkSpec {
     "runs at most 4 jobs, leaves no persistent RDD, and reports " +
     "graft_cc_summary with 0 rounds") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // 180 edges, as many as corpus_dedup's verified pairs: 30 chains of
     // 7 ids, each listed from its far end so the star loop needs rounds
     val pairs = (0 until 30).flatMap(c => (6 to 1 by -1).map(i =>
         (c * 10L + i, c * 10L + i + 1))).toDF("id_a", "id_b")
     assert(pairs.count() === 180L)
-    // jobs started on this thread while `tag` is set, by tag value
-    val tag = "graft.test.cc"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
-          .foreach(jobs.add)
-    }
-    val seen = new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.Row]()
-    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (k, v) => seen.put(k, v) }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    def tagged[T](value: String)(body: => T): T = {
-      spark.sparkContext.setLocalProperty(tag, value)
-      try body finally spark.sparkContext.setLocalProperty(tag, null)
-    }
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
-    try {
+    probing { p =>
       val before = persisted
-      val labels = tagged("cc")(Dedup.dupClusters(pairs))
+      val labels = p.tagged("cc")(Dedup.dupClusters(pairs))
       val left = persisted -- before
       assert(left.isEmpty, s"dupClusters left ${left.size} persistent RDDs")
       val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === (0 until 30).flatMap(c => (1 to 7).map(i =>
         (c * 10L + i) -> (c * 10L + 1))).toMap)
-      // listener delivery is async: a sentinel job marks the bus caught up
-      tagged("sentinel")(spark.range(1).count())
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while ((!jobs.contains("sentinel") ||
-              !seen.containsKey("graft_cc_summary")) &&
-             System.nanoTime() < deadline) Thread.sleep(20)
-      val n = jobs.toArray.count(_ == "cc")
+      val n = p.jobsTagged("cc", "graft_cc_summary")
       assert(n <= 4, s"dupClusters ran $n jobs")
-      val summary = seen.get("graft_cc_summary")
-      assert(summary != null,
-        s"graft_cc_summary never reached the listener; saw ${seen.keySet()}")
+      val summary = p.observed("graft_cc_summary")
       assert(summary.getAs[Int]("rounds") === 0)
       assert(summary.getAs[Long]("ids") === 210L)
-    } finally {
-      spark.listenerManager.unregister(qeListener)
-      spark.sparkContext.removeSparkListener(jobListener)
     }
   }
 
@@ -493,12 +515,66 @@ class DedupSpec extends SparkSpec {
       x <- vocab; y <- vocab if x < y
       d = lev(x, y) if d <= 2
     } yield (x, y, d.toLong)).toSet
-    val got = Dedup.fuzzyNamePairs(vocab.toDF("name"), "name", maxDist = 2)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .toSet
-    assert(got === expected,
-      s"missed: ${expected -- got}; extra: ${got -- expected}")
+    bothPaths {
+      val got = Dedup.fuzzyNamePairs(vocab.toDF("name"), "name", maxDist = 2)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .toSet
+      assert(got === expected,
+        s"missed: ${expected -- got}; extra: ${got -- expected}")
+    }
     assert(expected.nonEmpty)
+  }
+
+  test("broadcast-sized inputs finish on the driver: prefixJaccardPairs " +
+    "and fuzzyNamePairs each run at most 2 jobs, and each observation " +
+    "reaches a QueryExecutionListener with candidates >= output rows") {
+    import spark.implicits._
+    val many = docs((1L to 40L).map { i =>
+      i -> (if (i % 4 == 0) s"the quick brown fox jumps over the lazy dog $i"
+        else s"terms of service apply to item$i and variant${i % 3} here")
+    }: _*)
+    val names = (0 until 60).map(i => s"stop_${i % 25}${"x" * (i % 3)}")
+      .toDF("name")
+    probing { p =>
+      val pairs = p.tagged("near_dup")(
+        Dedup.prefixJaccardPairs(many, "doc_id", "text", 0.5).collect())
+      val fuzzy = p.tagged("fuzzy")(
+        Dedup.fuzzyNamePairs(names, "name", maxDist = 2).collect())
+      assert(pairs.nonEmpty && fuzzy.nonEmpty)
+      val nearJobs = p.jobsTagged("near_dup", "prefix_jaccard", "fuzzy_block")
+      assert(nearJobs <= 2, s"prefixJaccardPairs ran $nearJobs jobs")
+      val fuzzyJobs = p.jobsTagged("fuzzy")
+      assert(fuzzyJobs <= 2, s"fuzzyNamePairs ran $fuzzyJobs jobs")
+      assert(p.observed("prefix_jaccard").getAs[Long]("candidate_pairs") >=
+        pairs.length)
+      assert(p.observed("fuzzy_block").getAs[Long]("candidates") >=
+        fuzzy.length)
+    }
+  }
+
+  test("spark.sql.autoBroadcastJoinThreshold=-1 restores the distributed " +
+    "plans of prefixJaccardPairs, fuzzyNamePairs and dupClusters") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val names = Seq("stop_1", "stop_2").toDF("name")
+    def ops() = Seq(
+      Dedup.prefixJaccardPairs(corpus, "doc_id", "text", 0.5),
+      Dedup.fuzzyNamePairs(names, "name"),
+      Dedup.dupClusters(pairs))
+    // the driver finishes read one LocalRelation of the output's own shape
+    def finishedOnDriver(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves().exists {
+        case l: LocalRelation => l.output.map(_.name) == df.columns.toSeq
+        case _ => false
+      }
+    assert(ops().forall(finishedOnDriver))
+    distributed {
+      val plans = ops()
+      assert(!plans.exists(finishedOnDriver))
+      plans.foreach(df => assert(df.collect().nonEmpty))
+      plans.foreach(Dedup.releaseClusterState)
+    }
   }
 
   test("simhash: identical texts share a fingerprint; pairs collapse them") {
