@@ -98,7 +98,35 @@ object Dedup {
     * (e.g. templated corpora where many texts share a common prefix)
     * would otherwise put B² pair work on one reducer. The number of
     * dropped buckets/rows is emitted as the observed metric
-    * "minhash_lsh" (visible to QueryExecutionListeners and the UI). */
+    * "minhash_lsh" (visible to QueryExecutionListeners and the UI). The
+    * driver finish always reports it; the distributed plan reports it
+    * only when some bucket yields a candidate pair, because AQE replaces
+    * an empty pair join, bucket stage included, by an empty relation.
+    *
+    * Two paths, the same rows, schema and observation:
+    *
+    *  - **Driver finish** — when the per-document rows (id, text_hash,
+    *    signature, band keys) pass `Bridge.collectIfFits`: Catalyst's
+    *    estimate for them passes the engine's shared driver-finish rule,
+    *    `Bridge.fitsOnDriver` (within the session's
+    *    `spark.sql.autoBroadcastJoinThreshold`), and so do the decoded
+    *    rows as they are collected. One narrow job signs and keys every
+    *    document, exact copies included, with no shuffle; the driver
+    *    collapses exact duplicates to their minimum id, buckets by
+    *    (band, key), applies the cap, emits the distinct pairs and
+    *    scores them in the same doubles (`DriverFinish.bandedPairs`).
+    *    The driver holds the collected rows, within the threshold (about
+    *    0.7 KB per document at 64 hashes and 16 bands), plus one long per
+    *    bucket pair. Catalyst sizes an array at one element, so the
+    *    estimate sits well under those rows; a corpus whose rows pass the
+    *    threshold stops its collect there (its tasks cap what they ship
+    *    and the job is cancelled) and runs the distributed path, having
+    *    spent at most about a threshold of signed rows per core. The
+    *    result is a local relation. A NULL id, or one id on two texts,
+    *    sends the input to the distributed path. Set the threshold to -1
+    *    to turn the driver finish off.
+    *  - **Distributed** — otherwise: the scale contract above, with the
+    *    bucket counts and pairs as joins and aggregates. */
   def minhashCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 64, bands: Int = 16,
                             minEstSim: Double = 0.0,
@@ -122,8 +150,10 @@ object Dedup {
                                    maxBucketSize: Int, metricName: String,
                                    signature: Column => Column,
                                    bandKey: (Column, Int, Int) => Column): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
+    val spark = docs.sparkSession
     val shingled = docs
       .select(col(idCol).as("id"), sha2(col(textCol), 256).as("text_hash"),
         TextAnalysis.bigramShingles(TextAnalysis.tokens(col(textCol))).as("sh"))
@@ -133,38 +163,61 @@ object Dedup {
     val uniq = shingled.groupBy("text_hash")
       .agg(min(col("id")).as("id"), any_value(col("sh")).as("sh"))
     val sigs = uniq.select(col("id"), signature(col("sh")).as("sig"))
-    // Band on (band, band_key, id) ONLY — signatures ride the bucket
-    // shuffle only if the family's band key IS the slice itself.
-    val banded = sigs.select(col("id"),
-        posexplode(array((0 until bands).map(b =>
-          bandKey(col("sig"), b, rows)): _*)))
-      .select(col("pos").as("band"), col("col").as("band_key"), col("id"))
-    // Cap pathological buckets. Count via map-side-combined groupBy (never
-    // materializes a bucket's members in one task) and join back.
-    val sizes = banded.groupBy("band", "band_key")
-      .agg(count(lit(1)).as("__n"))
-      .observe(metricName,
-        sum(when(col("__n") > maxBucketSize, 1L).otherwise(0L)).as("dropped_buckets"),
-        sum(when(col("__n") > maxBucketSize, col("__n")).otherwise(0L)).as("dropped_rows"))
-    val kept = banded.join(sizes.where(col("__n") <= maxBucketSize),
-      Seq("band", "band_key"))
-    // Distinct bare id pairs first; only then re-attach the two signatures
-    // via slim id-keyed joins to score the (much smaller) candidate set.
-    // (Per-side renames do NOT hurt exchange reuse: canonicalization
-    // strips alias names, so both sides' shuffles already dedupe —
-    // verified empirically against an alias-based spelling.)
-    val a = kept.select(col("band"), col("band_key"), col("id").as("id_a"))
-    val b = kept.select(col("band"), col("band_key"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("band", "band_key"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val sigA = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-    val sigB = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    pairs.join(sigA, "id_a").join(sigB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), _ === _),
-          x => x)).cast("double") / lit(numHashes.toDouble)).as("est_jaccard"))
-      .where(col("est_jaccard") >= minEstSim)
+    val bandKeys =
+      array((0 until bands).map(b => bandKey(col("sig"), b, rows)): _*)
+    // Score distinct bare id pairs by re-attaching the two signatures via
+    // slim id-keyed joins: the distributed path's output projection,
+    // whose analyzed schema the driver finish also returns.
+    def scored(pairs: DataFrame): DataFrame = {
+      val sigA = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
+      val sigB = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
+      pairs.join(sigA, "id_a").join(sigB, "id_b")
+        .select(col("id_a"), col("id_b"),
+          (size(filter(zip_with(col("sig_a"), col("sig_b"), _ === _),
+            x => x)).cast("double") / lit(numHashes.toDouble)).as("est_jaccard"))
+        .where(col("est_jaccard") >= minEstSim)
+    }
+    // Driver finish: one narrow job signs and keys every document
+    // (duplicates included: the collapse needs no shuffle on the driver).
+    val perDoc = shingled
+      .select(col("id"), col("text_hash"), signature(col("sh")).as("sig"))
+      .select(col("id"), col("text_hash"), col("sig"), bandKeys.as("keys"))
+    val onDriver = Bridge.collectIfFits(perDoc).flatMap { collected =>
+      val keyType = perDoc.schema("keys").dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+      DriverFinish.bandedPairs(collected, perDoc.schema("id").dataType,
+        keyType, bands, numHashes, minEstSim, maxBucketSize)
+    }.map { case (out, drops) =>
+      val schema = // analysis only: runs no job
+        scored(sigs.select(col("id").as("id_a"), col("id").as("id_b"))).schema
+      Bridge.localFrame(spark, schema, out).observe(metricName,
+        lit(drops._1).as("dropped_buckets"), lit(drops._2).as("dropped_rows"))
+    }
+    onDriver.getOrElse {
+      // Band on (band, band_key, id) ONLY — signatures ride the bucket
+      // shuffle only if the family's band key IS the slice itself.
+      val banded = sigs.select(col("id"), posexplode(bandKeys))
+        .select(col("pos").as("band"), col("col").as("band_key"), col("id"))
+      // Cap pathological buckets. Count via map-side-combined groupBy
+      // (never materializes a bucket's members in one task) and join back.
+      val sizes = banded.groupBy("band", "band_key")
+        .agg(count(lit(1)).as("__n"))
+        .observe(metricName,
+          sum(when(col("__n") > maxBucketSize, 1L).otherwise(0L)).as("dropped_buckets"),
+          sum(when(col("__n") > maxBucketSize, col("__n")).otherwise(0L)).as("dropped_rows"))
+      val kept = banded.join(sizes.where(col("__n") <= maxBucketSize),
+        Seq("band", "band_key"))
+      // Distinct bare id pairs first; only then re-attach the signatures
+      // to score the (much smaller) candidate set.
+      // (Per-side renames do NOT hurt exchange reuse: canonicalization
+      // strips alias names, so both sides' shuffles already dedupe —
+      // verified empirically against an alias-based spelling.)
+      val a = kept.select(col("band"), col("band_key"), col("id").as("id_a"))
+      val b = kept.select(col("band"), col("band_key"), col("id").as("id_b"))
+      scored(a.join(b, Seq("band", "band_key"))
+        .where(col("id_a") < col("id_b"))
+        .select("id_a", "id_b").distinct())
+    }
   }
 
   /** [[minhashCandidatePairs]] over the POLYNOMIAL hash family — the
@@ -176,7 +229,9 @@ object Dedup {
     * DuckDB mirror. Same scale contract as the xxhash64 path:
     * exact-dup collapse before banding, key-only band shuffle, capped
     * buckets with the observed drop metric ("poly_minhash_lsh"),
-    * distinct-then-reattach scoring. */
+    * distinct-then-reattach scoring; and the same two paths, the driver
+    * finish comparing the array band keys by their bytes as Spark's
+    * join does. */
   def polyMinhashCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                                 numHashes: Int = 64, bands: Int = 16,
                                 minEstSim: Double = 0.0,
@@ -517,7 +572,15 @@ object Dedup {
     * fingerprint (count + XOR of xxhash64(a,b)): a false fixpoint needs
     * a 2^-64 hash collision at equal cardinality.
     *
-    * Both paths return the same rows with the same schema, and both
+    * An edge set already on the driver — a plan over local relations
+    * only, such as a driver-finished [[jaccardOnPairs]] result filtered
+    * and projected — is collected by `Bridge.collectIfFits` (Catalyst's
+    * estimate, then the rows' bytes, within the threshold) and goes to
+    * the driver finish's union-find as it stands: no checkpoint and no
+    * count, and no job when the plan optimizes to a local relation
+    * (threshold -1 turns this off too).
+    *
+    * All paths return the same rows with the same schema, and all
     * report `graft_cc_summary` (rounds, ids) to QueryExecutionListeners.
     * The driver finish releases its materialized edge set before
     * returning; the star loop's snapshots are released by
@@ -637,23 +700,15 @@ object Dedup {
         .select(col("b").as("a"), col("m").as("b"))
       rewired.union(mins.select(col("a"), col("m").as("b"))).distinct()
     }
-    // Checkpoint the RAW distinct edge set first: `nodes` and the star
-    // loop's working set both derive from it, so the (possibly expensive
-    // — q51 feeds a whole LSH candidate pipeline in here) upstream
-    // subtree is evaluated exactly ONCE, not once per consumer. In LOCAL
-    // mode base must stay untracked: its blocks ARE the data and `nodes`/
-    // `labels` read it after the loop (reliable mode re-reads the
-    // checkpoint files, so there the cache is droppable).
-    val base = truncate(edges0.distinct(), track = checkpointDir.isDefined)
     // every node that appears in the input — including self-loop-only
-    // nodes, which the star rounds never see — gets an output row
-    val nodes = base.select(col("a").as("id"))
-      .union(base.select(col("b").as("id"))).distinct()
-    // at fixpoint every non-minimum node has exactly one edge, to its
+    // nodes, which the star rounds never see — gets an output row; at
+    // fixpoint every non-minimum node has exactly one edge, to its
     // component minimum; minima and singletons label themselves
-    def starLabels(star: DataFrame): DataFrame = nodes
-      .join(star.select(col("a").as("id"), col("b").as("__m")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__m"), col("id")).as("cluster_id"))
+    def starLabels(edges: DataFrame, star: DataFrame): DataFrame =
+      edges.select(col("a").as("id")).union(edges.select(col("b").as("id")))
+        .distinct()
+        .join(star.select(col("a").as("id"), col("b").as("__m")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__m"), col("id")).as("cluster_id"))
     // every downstream action on the labels re-emits the converged round
     // count + id cardinality to QueryExecutionListeners, so a production
     // consumer can alarm on rounds creeping toward maxIters without
@@ -662,19 +717,41 @@ object Dedup {
       labels.observe("graft_cc_summary",
         max(lit(rounds)).as("rounds"), count(lit(1)).as("ids")),
       rounds)
+    // both paths' schema (analysis only: runs no job); the driver finish
+    // solves (a, b) rows cast to its id type
+    val schema = { val e = edges0.distinct(); starLabels(e, e).schema }
+    val idType = schema("id").dataType
+    def typed(e: DataFrame): DataFrame =
+      e.select(col("a").cast(idType), col("b").cast(idType))
+    def onDriver(edges: Seq[org.apache.spark.sql.catalyst.InternalRow]) =
+      summarized(Bridge.localFrame(spark, schema,
+        DriverFinish.components(edges, idType)), 0)
+    // An edge set already on the driver (an upstream driver finish's
+    // result, filtered and projected) is solved as it stands: no
+    // checkpoint and no count.
+    val local =
+      if (Bridge.logicalPlan(edges0).collectLeaves().forall(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+        Bridge.collectIfFits(typed(edges0))
+      else None
+    if (local.isDefined) return onDriver(local.get.toSeq)
+    // Checkpoint the RAW distinct edge set first: the node set and the
+    // star loop's working set both derive from it, so the (possibly
+    // expensive — q51 feeds a whole LSH candidate pipeline in here)
+    // upstream subtree is evaluated exactly ONCE, not once per consumer.
+    // In LOCAL mode base must stay untracked: its blocks ARE the data and
+    // the labels read it after the loop (reliable mode re-reads the
+    // checkpoint files, so there the cache is droppable).
+    val base = truncate(edges0.distinct(), track = checkpointDir.isDefined)
     var cur = base.where(col("a") =!= col("b"))
     // round 0 reads base itself: materializes its checkpoint, and `rows`
     // is exactly what a driver finish would collect
     val (fp0, rows) = fingerprint(base, 0)
     val idBytes = base.schema.fields.map(_.dataType.defaultSize.toLong).sum
     if (Bridge.fitsOnDriver(spark, BigInt(rows) * idBytes)) {
-      val schema = starLabels(cur).schema // analysis only: runs no job
-      val idType = schema("id").dataType
-      val edges = Bridge.collectInternal(
-        base.select(col("a").cast(idType), col("b").cast(idType)))
+      val edges = Bridge.collectInternal(typed(base))
       (base +: cachedRounds.toSeq).foreach(releaseSnapshot(_, blocking = true))
-      summarized(
-        Bridge.localFrame(spark, schema, DriverFinish.components(edges, idType)), 0)
+      onDriver(edges.toSeq)
     } else {
       var fp = fp0
       var rounds = 0
@@ -691,7 +768,7 @@ object Dedup {
       require(converged,
         s"dupClusters did not converge in $maxIters rounds — raise maxIters " +
           "(expected O(log n); this indicates pathological input size)")
-      val labels = summarized(starLabels(cur), rounds)
+      val labels = summarized(starLabels(base, cur), rounds)
       // base + the surviving round are what `labels` still reads; register
       // them so a caller done with the result can release the blocks
       // eagerly ([[releaseClusterState]]) instead of waiting for RDD GC
@@ -745,15 +822,42 @@ object Dedup {
   /** Exact Jaccard verification of externally supplied candidate pairs
     * (e.g. [[minhashCandidatePairs]] output): re-attaches shingle sets by
     * id and scores only those pairs — the LSH-gated verification path,
-    * linear in the candidate count. */
+    * linear in the candidate count. A pair naming a missing id drops
+    * out, a repeated pair is scored again, and two zero-shingle
+    * documents score NULL.
+    *
+    * Two paths, the same rows and the same schema:
+    *
+    *  - **Driver finish** — when the pairs' ids have the documents' id
+    *    type and `Bridge.collectIfFits` takes the documents' sorted
+    *    shingle sets (id, sg) and then the (id_a, id_b) pairs: Catalyst's
+    *    estimates for both together, then the decoded rows of each in
+    *    turn, must stay within `spark.sql.autoBroadcastJoinThreshold`,
+    *    which is what the driver holds. The driver runs the two id-keyed
+    *    inner joins under Catalyst's ordering and scores each pair with
+    *    `SortedIntersectCount`'s kernel and the same double expression
+    *    (`DriverFinish.verifiedPairs`). Collecting the pairs runs their
+    *    own plan, so an upstream observation (a banding's
+    *    "poly_minhash_lsh") is reported then. The sets are collected
+    *    first because they are a narrow pass over the documents: sets
+    *    over the threshold stop their collect before the pair plan ever
+    *    runs. Pairs over what the sets leave stop their collect too, and
+    *    the distributed join runs the pair plan again (an abandoned
+    *    collect reports no observation, so the upstream one is reported
+    *    once). The result is a local relation; set the threshold to -1
+    *    to turn it off.
+    *  - **Distributed** — otherwise: two slim id-keyed joins and one
+    *    merge walk per pair. */
   def jaccardOnPairs(pairs: DataFrame, docs: DataFrame,
                      idCol: String, textCol: String): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
     // sorted ONCE per document so the per-PAIR intersection below is the
     // allocation-free merge-walk kernel, not a per-row hash set
     val sh = docs.select(col(idCol).as("id"),
       array_sort(TextAnalysis.bigramShingles(
         TextAnalysis.tokens(col(textCol)))).as("sg"))
-    pairs.select(col("id_a"), col("id_b"))
+    val ids = pairs.select(col("id_a"), col("id_b"))
+    val verified = ids
       .join(sh.select(col("id").as("id_a"), col("sg").as("sg_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sg").as("sg_b")), "id_b")
       // bind the intersection size ONCE — the array intersection is the
@@ -767,6 +871,19 @@ object Dedup {
         try_divide(col("__inter"),
           (size(col("sg_a")) + size(col("sg_b"))).cast("double") - col("__inter"))
           .as("jaccard"))
+    // Driver finish: the sets, then the pairs, each within what the
+    // threshold leaves (ids of another type than the documents' would
+    // need the join's type coercion, so they stay distributed).
+    val t = sh.schema("id").dataType
+    val onDriver =
+      if (ids.schema.exists(_.dataType != t)) None
+      else for {
+        docRows <- Bridge.collectIfFits(sh, held = Bridge.estimatedBytes(ids))
+        pairRows <- Bridge.collectIfFits(ids,
+          held = docRows.map(Bridge.rowBytes).sum)
+      } yield Bridge.localFrame(docs.sparkSession, verified.schema,
+        DriverFinish.verifiedPairs(pairRows, docRows, t, sh.schema("sg").dataType))
+    onDriver.getOrElse(verified)
   }
 
   /** Asymmetric Jaccard CONTAINMENT pairs — |A∩B| / |A| and |A∩B| / |B|
@@ -831,21 +948,23 @@ object Dedup {
     *    shingle sets (id, sg) passes the engine's shared driver-finish
     *    rule, `Bridge.fitsOnDriver` (within the session's
     *    `spark.sql.autoBroadcastJoinThreshold`, i.e. a relation Spark
-    *    would broadcast). The sets are collected once, in Catalyst's
-    *    internal form, and joined by PPJoin on the driver: the same
-    *    global order over an `Int` dictionary, the same asymmetric index
-    *    and probe prefixes and length filter, a merge-walk
-    *    verification and the same `jaccard` double expression
-    *    (`DriverFinish.prefixJaccard`), except that the positional
-    *    filter also counts the overlap seen so far. The threshold bounds
-    *    Catalyst's estimate, not the heap: the driver holds the collected
-    *    rows plus one `Int` per shingle occurrence, and shingling expands
-    *    text while a compressed columnar source estimates below its
-    *    decoded size. On q130's sf0.1 corpus the collected rows are 23×
-    *    the estimate (6.0 MB against 0.25 MB), so at the default 10 MB
-    *    threshold the driver may hold a few hundred MB. The result is a
-    *    local relation, and "prefix_jaccard" counts the candidates the
-    *    driver verified. A NULL or repeated id sends the input to the
+    *    would broadcast), and so do their decoded rows. The sets are
+    *    collected once, in Catalyst's internal form, and joined by
+    *    PPJoin on the driver: the same global order over an `Int`
+    *    dictionary, the same asymmetric index and probe prefixes and
+    *    length filter, a merge-walk verification and the same `jaccard`
+    *    double expression (`DriverFinish.prefixJaccard`), except that
+    *    the positional filter also counts the overlap seen so far.
+    *    Shingling expands text and a compressed columnar source
+    *    estimates below its decoded size (on q130's sf0.1 corpus the
+    *    collected rows are 23× the estimate, 6.0 MB against 0.25 MB), so
+    *    the collect itself (`Bridge.collectIfFits`) is bounded: its
+    *    tasks stop shipping at the threshold and its job is cancelled
+    *    once the shipped rows pass it, and the distributed path runs.
+    *    The driver holds at most the threshold in rows, plus one `Int`
+    *    per shingle occurrence. The result is a local
+    *    relation, and "prefix_jaccard" counts the candidates the driver
+    *    verified. A NULL or repeated id sends the input to the
     *    distributed path. Set the threshold to -1 to turn the driver
     *    finish off.
     *  - **Distributed** — otherwise. Scale shape: df is a
@@ -868,18 +987,14 @@ object Dedup {
     // paid |corpus| times; hashing inside array_intersect would be paid
     // |candidates| times).
     val sh1 = sh0.select(col("id"), array_sort(col("sg")).as("sg"))
-    val onDriver =
-      if (!Bridge.fitsOnDriver(spark, Bridge.estimatedBytes(sh1))) None
-      else {
+    val onDriver = Bridge.collectIfFits(sh1).flatMap(collected =>
+      DriverFinish.prefixJaccard(collected, sh1.schema("id").dataType, minJaccard))
+      .map { case (rows, candidates) =>
         val schema = verifiedJaccard( // analysis only: runs no job
           sh1.select(col("id").as("id_a"), col("id").as("id_b")),
           sh1.select(col("id"), col("sg").as("sgv")), minJaccard).schema
-        DriverFinish.prefixJaccard(Bridge.collectInternal(sh1),
-            sh1.schema("id").dataType, minJaccard)
-          .map { case (rows, candidates) =>
-            Bridge.localFrame(spark, schema, rows).observe("prefix_jaccard",
-              lit(candidates).as("candidate_pairs"))
-          }
+        Bridge.localFrame(spark, schema, rows).observe("prefix_jaccard",
+          lit(candidates).as("candidate_pairs"))
       }
     onDriver.getOrElse(distributedPrefixJaccard(sh1, minJaccard))
   }
@@ -1135,17 +1250,17 @@ object Dedup {
     *  - **Driver finish** — when Catalyst's size estimate for the
     *    non-NULL names passes the engine's shared driver-finish rule,
     *    `Bridge.fitsOnDriver` (within the session's
-    *    `spark.sql.autoBroadcastJoinThreshold`). The names are collected
-    *    once, in Catalyst's internal form, deduplicated, and blocked key
-    *    for key as below on the driver (`DriverFinish.fuzzyPairs`);
+    *    `spark.sql.autoBroadcastJoinThreshold`), and so do the names as
+    *    they are decoded (`Bridge.collectIfFits`). The names are
+    *    collected once, in Catalyst's internal form, deduplicated, and
+    *    blocked key for key as below on the driver (`DriverFinish.fuzzyPairs`);
     *    candidates are verified by the same banded kernel and ordered by
     *    UTF8String binary order, as Spark's `<` orders them. The
-    *    driver holds the collected names plus d+1 index entries per
-    *    name, and the output rows. The threshold bounds Catalyst's
-    *    estimate of the names (for q110 at sf0.1, 0.72 MB estimated and
-    *    0.04 MB collected). The result is a local relation, and
-    *    `fuzzy_block.candidates` counts the candidates the driver
-    *    verified. Set the threshold to -1 to turn it off.
+    *    driver holds the collected names (at most the threshold) plus
+    *    d+1 index entries per name, and the output rows. The result is a
+    *    local relation, and `fuzzy_block.candidates` counts the
+    *    candidates the driver verified. Set the threshold to -1 to turn
+    *    it off.
     *  - **Distributed** — otherwise: the blocking join at session width,
     *    where `fuzzy_block.candidates` counts the distinct candidate
     *    pairs.
@@ -1165,16 +1280,14 @@ object Dedup {
         graft.expressions.TextKernels.boundedLevenshteinOf(
           col("name_a"), col("name_b"), maxDist).as("dist"))
       .where(col("dist") <= maxDist)
-    val nonNull = named.where(col("name").isNotNull)
-    if (Bridge.fitsOnDriver(spark, Bridge.estimatedBytes(nonNull))) {
+    Bridge.collectIfFits(named.where(col("name").isNotNull)).map { collected =>
       val schema = verified( // analysis only: runs no job
         named.select(col("name").as("name_a"), col("name").as("name_b"))).schema
       val (rows, candidates) = DriverFinish.fuzzyPairs(
-        Bridge.collectInternal(nonNull).map(_.getUTF8String(0)).distinct,
-        maxDist)
+        collected.map(_.getUTF8String(0)).distinct.toIndexedSeq, maxDist)
       Bridge.localFrame(spark, schema, rows)
         .observe("fuzzy_block", lit(candidates).as("candidates"))
-    } else verified(blockedNamePairs(named, maxDist))
+    }.getOrElse(verified(blockedNamePairs(named, maxDist)))
   }
 
   /** [[fuzzyNamePairs]]' distributed candidate generation over the

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,7 +23,7 @@ private[dedup] object DriverFinish {
     * itself NULL, as the star path's left join leaves it. Union-find
     * over `Int` indices into the sorted distinct ids: union by smaller
     * index keeps every root its component's minimum. */
-  def components(edges: Array[InternalRow], t: DataType): Seq[InternalRow] = {
+  def components(edges: Seq[InternalRow], t: DataType): Seq[InternalRow] = {
     val ord = PhysicalDataType.ordering(t)
     val ids = mutable.ArrayBuffer.empty[Any]
     edges.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.get(_, t)))
@@ -48,6 +49,106 @@ private[dedup] object DriverFinish {
     else labelled
   }
 
+  /** [[Dedup.minhashCandidatePairs]]' and
+    * [[Dedup.polyMinhashCandidatePairs]]' driver finish over collected
+    * (id, text_hash, sig, keys) rows, one per document with shingles
+    * (id of type `t`, `keys` the family's `bands` band keys of
+    * `keyType`). As the distributed path does, exact duplicates collapse
+    * to their minimum id per text_hash, a (band, key) bucket of more
+    * than `maxBucketSize` members is dropped and counted, every other
+    * bucket emits its distinct id_a < id_b pairs, and each pair scores
+    * its matching signature components over `numHashes` in doubles, kept
+    * at est_jaccard ≥ `minEstSim`. Band keys compare as Spark's join
+    * does: longs by value, arrays by their unsafe bytes. Returns the
+    * rows and the observation's (dropped_buckets, dropped_rows); None
+    * when an id is NULL or one id names two texts (the distributed
+    * path's id-keyed joins define that case). */
+  def bandedPairs(docs: Array[InternalRow], t: DataType, keyType: DataType,
+                  bands: Int, numHashes: Int, minEstSim: Double,
+                  maxBucketSize: Int)
+      : Option[(Seq[InternalRow], (Long, Long))] = {
+    val ord = PhysicalDataType.ordering(t)
+    if (docs.exists(_.isNullAt(0))) return None
+    val minByText = mutable.HashMap.empty[UTF8String, InternalRow]
+    docs.foreach { r =>
+      val h = r.getUTF8String(1)
+      if (minByText.get(h).forall(k => ord.compare(r.get(0, t), k.get(0, t)) < 0))
+        minByText(h) = r
+    }
+    val reps = minByText.values.toArray.sortBy(_.get(0, t))(ord)
+    val ids = reps.map(_.get(0, t))
+    if (repeats(ids, ord)) return None
+    // members of every kept bucket, as (i << 32 | j) over the id-sorted reps
+    val pairs = mutable.ArrayBuilder.make[Long]
+    var droppedBuckets = 0L
+    var droppedRows = 0L
+    (0 until bands).foreach { b =>
+      val byKey = mutable.HashMap.empty[Any, mutable.ArrayBuilder.ofInt]
+      reps.indices.foreach { i =>
+        byKey.getOrElseUpdate(reps(i).getArray(3).get(b, keyType),
+          new mutable.ArrayBuilder.ofInt) += i
+      }
+      byKey.valuesIterator.map(_.result()).foreach { m =>
+        if (m.length > maxBucketSize) {
+          droppedBuckets += 1
+          droppedRows += m.length
+        }
+        else for (x <- m.indices; y <- x + 1 until m.length)
+          pairs += (m(x).toLong << 32) | m(y)
+      }
+    }
+    val sigs = reps.map(_.getArray(2).toLongArray())
+    val packed = pairs.result()
+    java.util.Arrays.sort(packed)
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    packed.indices.foreach { k =>
+      if (k == 0 || packed(k) != packed(k - 1)) {
+        val (i, j) = ((packed(k) >>> 32).toInt, packed(k).toInt)
+        val est = sigs(i).indices.count(c => sigs(i)(c) == sigs(j)(c)).toDouble /
+          numHashes.toDouble
+        if (est >= minEstSim) out += InternalRow(ids(i), ids(j), est)
+      }
+    }
+    Some((out.toSeq, (droppedBuckets, droppedRows)))
+  }
+
+  /** [[Dedup.jaccardOnPairs]]' driver finish over collected (id_a, id_b)
+    * pairs and (id, sg) documents, ids of one type `t` and sg each
+    * document's sorted shingles of type `sgType`. The distributed path's
+    * two id-keyed inner joins, under Catalyst's ordering for `t`: a pair
+    * naming a NULL or missing id drops out, and a repeated pair or id
+    * repeats its rows. `jaccard` is `SortedIntersectCount`'s kernel over
+    * the two sets and the distributed double expression, NULL when a set
+    * is NULL or both are empty (`try_divide`'s 0/0). */
+  def verifiedPairs(pairs: Array[InternalRow], docs: Array[InternalRow],
+                    t: DataType, sgType: DataType): Seq[InternalRow] = {
+    val byId = new java.util.TreeMap[Any, mutable.ArrayBuffer[InternalRow]](
+      PhysicalDataType.ordering(t))
+    docs.filterNot(_.isNullAt(0)).foreach(r =>
+      byId.computeIfAbsent(r.get(0, t), _ => mutable.ArrayBuffer.empty) += r)
+    def docsOf(r: InternalRow, field: Int): Seq[InternalRow] =
+      if (r.isNullAt(field)) Nil
+      else Option(byId.get(r.get(field, t))).fold(Seq.empty[InternalRow])(_.toSeq)
+    val kernel = graft.expressions.SortedIntersectCount(
+      BoundReference(0, sgType, nullable = true),
+      BoundReference(1, sgType, nullable = true))
+    for {
+      p <- pairs.toSeq
+      x <- docsOf(p, 0)
+      y <- docsOf(p, 1)
+    } yield {
+      val jaccard =
+        if (x.isNullAt(1) || y.isNullAt(1)) null
+        else {
+          val (sa, sb) = (x.getArray(1), y.getArray(1))
+          val inter = kernel.nullSafeEval(sa, sb).asInstanceOf[Long].toDouble
+          val union = (sa.numElements() + sb.numElements()).toDouble - inter
+          if (union == 0.0) null else java.lang.Double.valueOf(inter / union)
+        }
+      InternalRow(p.get(0, t), p.get(1, t), jaccard)
+    }
+  }
+
   /** [[Dedup.prefixJaccardPairs]]' driver finish over collected
     * (id, sg) rows (id of type `t`, sg the document's distinct shingles):
     * PPJoin over the distributed path's global order — document
@@ -70,10 +171,7 @@ private[dedup] object DriverFinish {
     val ord = PhysicalDataType.ordering(t)
     if (docs.exists(_.isNullAt(0))) return None
     val ids = docs.map(_.get(0, t))
-    val sortedIds = ids.sorted(ord)
-    if (sortedIds.indices.drop(1)
-        .exists(i => ord.compare(sortedIds(i - 1), sortedIds(i)) == 0))
-      return None
+    if (repeats(ids.sorted(ord), ord)) return None
     // Int dictionary over the vocabulary, then global ranks by (df, shingle)
     val dict = new java.util.HashMap[UTF8String, Integer]()
     val words = mutable.ArrayBuffer.empty[UTF8String]
@@ -165,6 +263,10 @@ private[dedup] object DriverFinish {
     }
     Some((out.toSeq, candidates))
   }
+
+  /** Whether sorted ids hold a repeated value under `ord`. */
+  private def repeats(sorted: Array[Any], ord: Ordering[Any]): Boolean =
+    sorted.indices.drop(1).exists(i => ord.compare(sorted(i - 1), sorted(i)) == 0)
 
   /** Common elements of two ascending `Int` arrays by merge walk, or -1
     * as soon as fewer than `need` remain possible. */

@@ -41,9 +41,13 @@ import scala.concurrent.duration.{Duration, DurationInt}
   *     written through Spark's `FileSystemBasedCheckpointFileManager`.
   *     Spark's default for `file:` is the FileContext manager, which on a
   *     Hadoop client without native libraries forks `readlink` and
-  *     `chmod` processes for every log entry. On a local filesystem,
-  *     rename is atomic, which is all the FileSystem manager needs. Other
-  *     schemes, and a session that names its own manager, keep theirs.
+  *     `chmod` processes for every log entry. The FileSystem manager
+  *     forks no `readlink`, but it still forks two `chmod`s per entry:
+  *     its `createTempFile` goes through `ChecksumFileSystem.create`,
+  *     which sets the permission of the file and of its `.crc`, so the
+  *     three logs fork 6 per tick. On a local filesystem, rename is
+  *     atomic, which is all the FileSystem manager needs. Other schemes,
+  *     and a session that names its own manager, keep theirs.
   */
 object RealtimeRunner {
 

@@ -67,6 +67,91 @@ object Bridge {
       qe, Some("collect"))(qe.executedPlan.executeCollect())
   }
 
+  /** The collect behind every estimate-triggered driver finish: `df`'s
+    * rows in internal form when Catalyst's estimate plus `held` bytes
+    * already on the driver pass [[fitsOnDriver]], and the rows' decoded
+    * bytes then stay within what the same threshold leaves. An estimate
+    * can sit far below the real data (a compressed columnar source,
+    * text that expands when shingled), so the collect itself is bounded:
+    * each task ships its partition's rows only until they alone pass
+    * the budget, and the job is cancelled as soon as the shipped rows
+    * together pass it. The driver then drops what it took and returns
+    * None, and the caller runs its distributed plan; the abandoned
+    * collect ends as a failed SQL execution, so it reports no observed
+    * metrics. The driver holds at most the budget in accepted rows, plus
+    * the task results in flight when the total crosses it (each at most
+    * the budget and one row). Work spent on an abandoned collect is at
+    * most about the budget per task that ran, except the shuffle stages
+    * below the final one, which run in full; the distributed plan then
+    * computes everything again.
+    * Rows of a `LocalTableScanExec` are already on the driver and are
+    * taken without a job. -1 collects nothing. */
+  def collectIfFits(df: org.apache.spark.sql.DataFrame, held: BigInt = 0)
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+    val spark = df.sparkSession
+    if (!fitsOnDriver(spark, estimatedBytes(df) + held)) return None
+    val budget = (spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold - held).toLong
+    val qe = df.queryExecution
+    try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("collect")) {
+      qe.executedPlan match {
+        case l: org.apache.spark.sql.execution.LocalTableScanExec =>
+          val rows = l.executeCollect()
+          if (rows.map(rowBytes).sum > budget) throw OverBudget
+          Some(rows)
+        case p => Some(collectWithin(p.execute(), budget))
+      }
+    } catch { case OverBudget => None }
+  }
+
+  /** Thrown inside a bounded collect's SQL execution once its rows pass
+    * the budget, so that execution ends as failed. */
+  private object OverBudget extends RuntimeException(
+    "collect passed the driver-finish threshold", null, false, false)
+
+  /** The `UnsafeRow`s of `rdd` while their bytes stay within `budget`,
+    * else [[OverBudget]]: per-task caps and a job cancelled from the
+    * result handler, as [[collectIfFits]] describes. */
+  private def collectWithin(
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      budget: Long): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    val parts = new Array[Array[UnsafeRow]](rdd.getNumPartitions)
+    val total = new java.util.concurrent.atomic.AtomicLong
+    val job = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.SimpleFutureAction[Unit]]
+    def over(): Unit = Option(job.get).foreach(_.cancel())
+    job.set(rdd.sparkContext.submitJob(rdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val out = Array.newBuilder[UnsafeRow]
+        var bytes = 0L
+        while (bytes <= budget && it.hasNext) {
+          val r = it.next().asInstanceOf[UnsafeRow].copy()
+          bytes += r.getSizeInBytes
+          out += r
+        }
+        out.result()
+      },
+      rdd.partitions.indices,
+      (i: Int, rows: Array[UnsafeRow]) =>
+        if (total.addAndGet(rows.map(_.getSizeInBytes.toLong).sum) <= budget)
+          parts(i) = rows
+        else over(),
+      ()))
+    if (total.get > budget) over()
+    scala.concurrent.Await.ready(job.get, scala.concurrent.duration.Duration.Inf)
+    if (total.get > budget) throw OverBudget
+    job.get.get()
+    parts.flatten
+  }
+
+  /** A collected row's decoded bytes, as [[collectIfFits]] counts them
+    * (collected rows are always `UnsafeRow`s). */
+  def rowBytes(r: org.apache.spark.sql.catalyst.InternalRow): Long =
+    r.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+      .getSizeInBytes
+
   /** A DataFrame over driver-held internal rows of `schema` (names,
     * types and nullability kept). */
   def localFrame(spark: org.apache.spark.sql.SparkSession,

@@ -28,9 +28,14 @@ class PlanSpec extends SparkSpec {
   test("finalPlan cuts only the top-level initial plan: a cached AQE " +
     "artifact's nested final and initial plans stay in the text every " +
     "plan assertion reads") {
-    // q59 reads the persisted poly-LSH candidates, built under AQE
-    val lines = finalPlan(SparkEntry.queries("q59_poly_dedup_pipeline")(spark, sf))
-      .linesIterator.toSeq
+    // q59 reads the persisted poly-LSH candidates, built under AQE on the
+    // distributed path (at sf0.001 they otherwise finish on the driver as
+    // a local relation, which prints no nested AQE plan): rebuilt at -1
+    val lines = SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      SparkEntry.resetCaches()
+      finalPlan(SparkEntry.queries("q59_poly_dedup_pipeline")(spark, sf))
+    }.linesIterator.toSeq
+    SparkEntry.resetCaches()
     assert(lines.exists(_.contains("InMemoryRelation")), lines.mkString("\n"))
     assert(lines.exists(l => l.trim.startsWith("+- == Initial Plan ==") &&
       !l.startsWith("+-")), s"no nested initial plan:\n${lines.mkString("\n")}")

@@ -81,6 +81,11 @@ object DedupProps extends Properties("Dedup") {
     })
   } yield (bases ++ variants).map(_.mkString(" "))
 
+  /** `body` on the driver finishes (the default threshold), then on the
+    * distributed paths. */
+  private def onBothPaths(body: => Boolean): Boolean =
+    body && SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
   property("minhash LSH recall: with 32 bands of 2 rows, EVERY " +
     "representative pair with true bigram jaccard >= 0.5 is a candidate " +
     "with >= 90% aggregate recall (the q16 family's recall knob, pinned " +
@@ -100,12 +105,14 @@ object DedupProps extends Properties("Dedup") {
         j = sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
         if j >= 0.5
       } yield (ia, ib)).toSet
-      val got = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
-          numHashes = 64, bands = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val found = qualifying.count(got.contains)
-      qualifying.isEmpty ||
-        found.toDouble / qualifying.size >= 0.9
+      onBothPaths {
+        val got = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
+            numHashes = 64, bands = 32)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val found = qualifying.count(got.contains)
+        qualifying.isEmpty ||
+          found.toDouble / qualifying.size >= 0.9
+      }
     }
 
   property("POLY minhash LSH recall: the oracle-expressible affine family " +
@@ -125,12 +132,14 @@ object DedupProps extends Properties("Dedup") {
         j = sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
         if j >= 0.5
       } yield (ia, ib)).toSet
-      val got = Dedup.polyMinhashCandidatePairs(docs, "doc_id", "text",
-          numHashes = 64, bands = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val found = qualifying.count(got.contains)
-      qualifying.isEmpty ||
-        found.toDouble / qualifying.size >= 0.9
+      onBothPaths {
+        val got = Dedup.polyMinhashCandidatePairs(docs, "doc_id", "text",
+            numHashes = 64, bands = 32)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val found = qualifying.count(got.contains)
+        qualifying.isEmpty ||
+          found.toDouble / qualifying.size >= 0.9
+      }
     }
 
   property("the LSH-gated pipeline (q37 shape) is SOUND: every verified " +
@@ -140,15 +149,17 @@ object DedupProps extends Properties("Dedup") {
       import spark.implicits._
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "b") }
         .toDF("doc_id", "text", "b")
-      val cand = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
-        numHashes = 64, bands = 16)
-      val piped = Dedup.jaccardOnPairs(cand, docs, "doc_id", "text")
-        .where(col("jaccard") >= 0.05)
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
       val exact = Dedup.jaccardPairs(docs, "doc_id", "text", Seq("b"),
           minJaccard = 0.05)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      piped.forall { case (pair, score) => exact.get(pair).contains(score) }
+      onBothPaths {
+        val cand = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
+          numHashes = 64, bands = 16)
+        val piped = Dedup.jaccardOnPairs(cand, docs, "doc_id", "text")
+          .where(col("jaccard") >= 0.05)
+          .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+        piped.forall { case (pair, score) => exact.get(pair).contains(score) }
+      }
     }
 
   property("simhashPairs pigeonhole completeness holds for EVERY " +
@@ -319,16 +330,20 @@ object DedupProps extends Properties("Dedup") {
     forAll(genGraph) { case (edges, withNulls) =>
       import spark.implicits._
       def both(df: org.apache.spark.sql.DataFrame): Boolean = {
-        def run(threshold: String) =
+        def run(threshold: String, edges: org.apache.spark.sql.DataFrame) =
           SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
-            val (labels, rounds) = Dedup.connectedComponents(df, 30, None)
+            val (labels, rounds) = Dedup.connectedComponents(edges, 30, None)
             val rows = labels.collect().toSeq.sortBy(_.toString)
             Dedup.releaseClusterState(labels)
             (labels.schema, rows, rounds)
           }
-        val (starSchema, starRows, _) = run("-1")
-        val (schema, rows, rounds) = run("10MB")
-        rounds == 0 && schema == starSchema && rows == starRows
+        val star = run("-1", df)
+        // both driver finishes: the edge set as it stands on the driver,
+        // and a repartitioned copy, which is not local and is counted
+        Seq(df, df.repartition(2)).forall { edges =>
+          val (schema, rows, rounds) = run("10MB", edges)
+          rounds == 0 && (schema, rows) == (star._1, star._2)
+        }
       }
       val longs =
         if (withNulls) edges.map { case (a, b) => (a.map(_.toLong), b.map(_.toLong)) }
@@ -339,22 +354,33 @@ object DedupProps extends Properties("Dedup") {
     }
 
   /** Runs `build` at the default 10MB threshold and at -1: true when the
-    * first run finished on the driver (its observation reads a
-    * LocalRelation), the second did not, and both give the same schema
-    * (nullability included) and the same sorted rows. */
-  private def sameOnBothPaths(build: => org.apache.spark.sql.DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LocalRelation}
+    * first run finished on the driver (its plan reads a LocalRelation of
+    * the output's own shape), the second did not, and both give the same
+    * schema (nullability included) and the same sorted rows. With
+    * `observations`, the driver finish must report its observed metrics,
+    * equal to the distributed plan's wherever that plan reports them
+    * (it reports none when no bucket yields a pair: AQE prunes the
+    * bucket stage of an empty pair join). */
+  private def sameOnBothPaths(build: => org.apache.spark.sql.DataFrame,
+                              observations: Boolean = false): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     def run(threshold: String) =
       SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
         val df = build
-        val onDriver = df.queryExecution.analyzed.collectFirst {
-          case c: CollectMetrics => c.child.isInstanceOf[LocalRelation]
-        }.contains(true)
-        (onDriver, df.schema, df.collect().toSeq.sortBy(_.toString))
+        val onDriver = df.queryExecution.analyzed.collectLeaves().exists {
+          case l: LocalRelation => l.output.map(_.name) == df.columns.toSeq
+          case _ => false
+        }
+        val rows = df.collect().toSeq.sortBy(_.toString)
+        (onDriver, df.schema, rows,
+          if (observations) df.queryExecution.observedMetrics
+          else Map.empty[String, org.apache.spark.sql.Row])
       }
-    val (driver, schema, rows) = run("10MB")
-    val (distributed, distSchema, distRows) = run("-1")
-    driver && !distributed && schema == distSchema && rows == distRows
+    val (driver, schema, rows, observed) = run("10MB")
+    val (distributed, distSchema, distRows, distObserved) = run("-1")
+    driver && !distributed && schema == distSchema && rows == distRows &&
+      (!observations || observed.nonEmpty &&
+        (distObserved.isEmpty || observed == distObserved))
   }
 
   /** Corpora with NULL, empty, one-token (zero-shingle) and repeated
@@ -402,5 +428,58 @@ object DedupProps extends Properties("Dedup") {
       import spark.implicits._
       val df = names.map(_.orNull).toDF("name")
       sameOnBothPaths(Dedup.fuzzyNamePairs(df, "name", maxDist = d))
+    }
+
+  /** Corpora with exact copies of a text under other ids, NULL, empty and
+    * one-token texts, for LSH banding at 2-16 bands over 16 hashes with a
+    * bucket cap of 1-4 members, so buckets are dropped. */
+  private val genBandedCorpus: Gen[(List[Option[String]], Int, Int, Double)] = for {
+    texts <- Gen.chooseNum(2, 14).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency(1 -> Gen.const(None), 6 -> genDoc.map(Some(_)))))
+    copies <- Gen.someOf(texts)
+    bands <- Gen.oneOf(2, 4, 8, 16)
+    cap <- Gen.chooseNum(1, 4)
+    minEstSim <- Gen.oneOf(0.0, 0.5)
+  } yield (texts ++ copies, bands, cap, minEstSim)
+
+  property("minhashCandidatePairs and polyMinhashCandidatePairs: the driver " +
+    "finish gives the distributed path's rows, schema and observation, with " +
+    "exact copies, NULL, empty and one-token texts and dropped buckets") =
+    forAll(genBandedCorpus) { case (texts, bands, cap, minEstSim) =>
+      import spark.implicits._
+      val longs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+        .toDF("doc_id", "text")
+      val strings = texts.zipWithIndex.map { case (t, i) => (stringId(i), t.orNull) }
+        .toDF("doc_id", "text")
+      Seq(longs, strings).forall(docs =>
+        sameOnBothPaths(Dedup.minhashCandidatePairs(docs, "doc_id", "text",
+          numHashes = 16, bands = bands, minEstSim = minEstSim,
+          maxBucketSize = cap), observations = true) &&
+        sameOnBothPaths(Dedup.polyMinhashCandidatePairs(docs, "doc_id", "text",
+          numHashes = 16, bands = bands, minEstSim = minEstSim,
+          maxBucketSize = cap), observations = true))
+    }
+
+  property("jaccardOnPairs: the driver finish gives the distributed path's " +
+    "rows and schema, for Long and String ids, pairs naming missing and " +
+    "NULL ids, repeated pairs, and NULL, zero-shingle and repeated texts") =
+    forAll(Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n,
+        Gen.frequency(1 -> Gen.const(None), 6 -> genDoc.map(Some(_))))),
+      Gen.listOf(Gen.zip(Gen.option(Gen.chooseNum(0, 12)),
+        Gen.option(Gen.chooseNum(0, 12))))) { (texts, pairs0) =>
+      import spark.implicits._
+      // ids 0..n-1 name documents, larger ones are missing; every pair
+      // also appears twice
+      val pairs = pairs0 ++ pairs0.take(3)
+      val longDocs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
+        .toDF("doc_id", "text")
+      val longPairs = pairs.map { case (a, b) => (a.map(_.toLong), b.map(_.toLong)) }
+        .toDF("id_a", "id_b")
+      val stringDocs = texts.zipWithIndex.map { case (t, i) => (stringId(i), t.orNull) }
+        .toDF("doc_id", "text")
+      val stringPairs = pairs.map { case (a, b) =>
+        (a.map(stringId).orNull, b.map(stringId).orNull) }.toDF("id_a", "id_b")
+      sameOnBothPaths(Dedup.jaccardOnPairs(longPairs, longDocs, "doc_id", "text")) &&
+        sameOnBothPaths(Dedup.jaccardOnPairs(stringPairs, stringDocs, "doc_id", "text"))
     }
 }

@@ -78,6 +78,15 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Whether `df`'s plan reads one LocalRelation of its own output's
+    * shape, as every driver finish's result does. */
+  private def finishedOnDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().exists {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.output.map(_.name) == df.columns.toSeq
+      case _ => false
+    }
+
   private val corpus = docs(
     1L -> "the quick brown fox jumps over the lazy dog",
     2L -> "the quick brown fox jumps over the lazy cat", // near-dup of 1
@@ -387,9 +396,11 @@ class DedupSpec extends SparkSpec {
     "graft_cc_summary with 0 rounds") {
     import spark.implicits._
     // 180 edges, as many as corpus_dedup's verified pairs: 30 chains of
-    // 7 ids, each listed from its far end so the star loop needs rounds
+    // 7 ids, each listed from its far end so the star loop needs rounds;
+    // repartitioned, so they are not a local relation and are counted
+    // (an edge set already on the driver is solved as it stands, below)
     val pairs = (0 until 30).flatMap(c => (6 to 1 by -1).map(i =>
-        (c * 10L + i, c * 10L + i + 1))).toDF("id_a", "id_b")
+        (c * 10L + i, c * 10L + i + 1))).toDF("id_a", "id_b").repartition(2)
     assert(pairs.count() === 180L)
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     probing { p =>
@@ -555,25 +566,209 @@ class DedupSpec extends SparkSpec {
   test("spark.sql.autoBroadcastJoinThreshold=-1 restores the distributed " +
     "plans of prefixJaccardPairs, fuzzyNamePairs and dupClusters") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val names = Seq("stop_1", "stop_2").toDF("name")
     def ops() = Seq(
       Dedup.prefixJaccardPairs(corpus, "doc_id", "text", 0.5),
       Dedup.fuzzyNamePairs(names, "name"),
       Dedup.dupClusters(pairs))
-    // the driver finishes read one LocalRelation of the output's own shape
-    def finishedOnDriver(df: DataFrame): Boolean =
-      df.queryExecution.analyzed.collectLeaves().exists {
-        case l: LocalRelation => l.output.map(_.name) == df.columns.toSeq
-        case _ => false
-      }
     assert(ops().forall(finishedOnDriver))
     distributed {
       val plans = ops()
       assert(!plans.exists(finishedOnDriver))
       plans.foreach(df => assert(df.collect().nonEmpty))
       plans.foreach(Dedup.releaseClusterState)
+    }
+  }
+
+  /** A corpus whose near-duplicates every LSH banding finds. */
+  private lazy val lshCorpus = docs((1L to 40L).map { i =>
+    i -> (if (i % 4 == 0) s"the quick brown fox jumps over the lazy dog ${i % 8}"
+      else s"terms of service apply to item$i and variant${i % 3} here")
+  }: _*)
+
+  test("broadcast-sized LSH inputs finish on the driver: each banding and " +
+    "jaccardOnPairs runs at most 2 jobs with its collect, an edge set " +
+    "already on the driver clusters with no job, the whole pipeline runs " +
+    "at most 4, and each banding's observation reaches a " +
+    "QueryExecutionListener") {
+    def lshClusters(candidates: DataFrame): DataFrame =
+      Dedup.dupClusters(Dedup.jaccardOnPairs(candidates, lshCorpus, "doc_id", "text")
+        .where(col("jaccard") >= 0.5))
+    probing { p =>
+      val xx = p.tagged("minhash")(
+        Dedup.minhashCandidatePairs(lshCorpus, "doc_id", "text").collect())
+      val cands = p.tagged("poly")(Dedup.polyMinhashCandidatePairs(
+        lshCorpus, "doc_id", "text", bands = 32))
+      val verified = p.tagged("poly")(
+        Dedup.jaccardOnPairs(cands, lshCorpus, "doc_id", "text"))
+      val labels = p.tagged("cc")(
+        Dedup.dupClusters(verified.where(col("jaccard") >= 0.5)))
+      val clusters = p.tagged("cc_collect")(labels.collect())
+      val pipeline = p.tagged("pipeline")(lshClusters(
+        Dedup.polyMinhashCandidatePairs(lshCorpus, "doc_id", "text", bands = 32))
+        .collect())
+      assert(xx.nonEmpty)
+      assert(pipeline.toSet === clusters.toSet)
+      // the two "quick brown fox" texts, each copy collapsed to its min id
+      assert(clusters.filter(_.getLong(1) == 4L).map(_.getLong(0)).toSet ===
+        Set(4L, 8L), clusters.mkString(", "))
+      val minhashJobs = p.jobsTagged("minhash", "minhash_lsh",
+        "poly_minhash_lsh", "graft_cc_summary")
+      assert(minhashJobs <= 2, s"minhashCandidatePairs ran $minhashJobs jobs")
+      val polyJobs = p.jobsTagged("poly")
+      assert(polyJobs <= 3, s"banding and verification ran $polyJobs jobs")
+      assert(p.jobsTagged("cc") === 0, "a local edge set ran jobs")
+      assert(p.jobsTagged("cc_collect") <= 1)
+      val pipelineJobs = p.jobsTagged("pipeline")
+      assert(pipelineJobs <= 4, s"the clusters pipeline ran $pipelineJobs jobs")
+      Seq("minhash_lsh", "poly_minhash_lsh").foreach { m =>
+        assert(p.observed(m).getAs[Long]("dropped_buckets") === 0L)
+        assert(p.observed(m).getAs[Long]("dropped_rows") === 0L)
+      }
+      assert(p.observed("graft_cc_summary").getAs[Int]("rounds") === 0)
+    }
+  }
+
+  test("warm session: an LSH clusters pass over a JSON corpus compiles no " +
+    "generated class once two passes have run (the distributed pipeline " +
+    "compiles about 160 per pass)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-codegen").toString + "/docs"
+    lshCorpus.write.json(dir)
+    def pass(): Unit = {
+      val docs = spark.read.schema("doc_id long, text string").json(dir)
+      val labels = Dedup.dupClusters(Dedup.jaccardOnPairs(
+          Dedup.polyMinhashCandidatePairs(docs, "doc_id", "text", bands = 32),
+          docs, "doc_id", "text")
+        .where(col("jaccard") >= 0.5))
+      assert(labels.collect().nonEmpty)
+      Dedup.releaseClusterState(labels)
+    }
+    pass(); pass()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass(); pass()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles === 0L, s"two warm passes compiled $compiles classes")
+  }
+
+  test("spark.sql.autoBroadcastJoinThreshold=-1 restores the distributed " +
+    "plans of both bandings, jaccardOnPairs and dupClusters over a local " +
+    "edge set, with the same rows") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    def ops() = Seq(
+      Dedup.minhashCandidatePairs(corpus, "doc_id", "text"),
+      Dedup.polyMinhashCandidatePairs(corpus, "doc_id", "text", bands = 32),
+      Dedup.jaccardOnPairs(pairs, corpus, "doc_id", "text"),
+      Dedup.dupClusters(edges))
+    val onDriver = ops()
+    assert(onDriver.forall(finishedOnDriver))
+    distributed {
+      val plans = ops()
+      assert(!plans.exists(finishedOnDriver))
+      plans.zip(onDriver).foreach { case (df, local) =>
+        assert(df.collect().nonEmpty)
+        assert(df.collect().toSet === local.collect().toSet)
+      }
+      plans.foreach(Dedup.releaseClusterState)
+    }
+  }
+
+  test("an estimate-triggered driver finish stops collecting at the " +
+    "threshold: parquet inputs estimated under it but decoded over it run " +
+    "the distributed plans of all four estimate-triggered operators, with " +
+    "the same rows") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bound").toString
+    // 600 documents over 10 distinct 300-token texts (near-duplicates:
+    // each rewrites its own 30-token block of one base text) and 6000
+    // names over 50 distinct ones: parquet's dictionary pages keep the
+    // files, and so Catalyst's estimates, small, while every document
+    // read back expands to its own hundreds of shingles and its 64-long
+    // signature
+    val rnd = new scala.util.Random(7)
+    def tokens(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(200)}")
+    val base = tokens(300)
+    val texts = Vector.tabulate(10)(k => base.patch(k * 30, tokens(30), 30).mkString(" "))
+    (1L to 600L).map(i => (i, texts((i % 10).toInt))).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/docs")
+    (1 to 6000).map(i => s"${"stop name " * 9}${i % 50}").toDF("name")
+      .coalesce(1).write.parquet(s"$dir/names")
+    val corpus = spark.read.parquet(s"$dir/docs")
+    val names = spark.read.parquet(s"$dir/names")
+    val threshold = 128L * 1024
+    assert(Bridge.estimatedBytes(corpus) < threshold / 2 &&
+      Bridge.estimatedBytes(names) < threshold / 2)
+    val pairs = (1L to 599L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def ops() = Seq(
+      Dedup.prefixJaccardPairs(corpus, "doc_id", "text", 0.5),
+      Dedup.fuzzyNamePairs(names, "name"),
+      Dedup.polyMinhashCandidatePairs(corpus, "doc_id", "text"),
+      Dedup.jaccardOnPairs(pairs, corpus, "doc_id", "text"))
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    // unbounded by the decoded bytes, the same inputs finish on the driver
+    val unbounded = ops()
+    assert(unbounded.forall(finishedOnDriver))
+    val want = unbounded.map(rows)
+    assert(want.forall(_.nonEmpty))
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", threshold.toString) {
+      val bounded = ops()
+      bounded.foreach(df => assert(!finishedOnDriver(df), df.columns.mkString(",")))
+      assert(bounded.map(rows) === want)
+    }
+  }
+
+  test("a collect over the threshold stops its own job: each task ships " +
+    "at most the threshold, the job is cancelled once the shipped rows pass " +
+    "it, and the abandoned collect reports as a failed execution") {
+    import org.apache.spark.scheduler.{JobFailed, SparkListener,
+      SparkListenerJobEnd, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graftbridge.Bridge
+    // 200 partitions of 8 rows of 16 KB: Catalyst sizes the string at 20
+    // bytes, so the estimate is about 45 KB; the rows decode to 26 MB
+    val df = spark.range(0, 1600, 1, 200)
+      .select(col("id"), repeat(lit("x"), 16384).as("s"))
+    val threshold = 64L * 1024
+    val succeeded = new java.util.concurrent.atomic.AtomicInteger
+    val failedJobs = new java.util.concurrent.atomic.AtomicInteger
+    val failedQueries = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason == org.apache.spark.Success) succeeded.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobResult.isInstanceOf[JobFailed]) failedJobs.incrementAndGet()
+    }
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    d: Long): Unit = ()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = failedQueries.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    try {
+      SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", threshold.toString) {
+        assert(Bridge.estimatedBytes(df) < threshold)
+        assert(Bridge.collectIfFits(df).isEmpty)
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while ((failedJobs.get == 0 || failedQueries.get == 0) &&
+               System.nanoTime() < deadline) Thread.sleep(20)
+        assert(failedJobs.get === 1)
+        assert(failedQueries.get === 1)
+        // the 4 cores' first tasks, and the few launched before the
+        // cancel reached the scheduler, of the 200 a whole collect runs
+        assert(succeeded.get < 100, s"${succeeded.get} tasks succeeded")
+        // a part that fits is collected whole through the same path
+        val part = df.where(col("id") < 3)
+        assert(Bridge.collectIfFits(part).map(_.map(_.getLong(0)).toSet)
+          .contains(Set(0L, 1L, 2L)))
+      }
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
