@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE keyed trained-artifact cache (r10 review dedup of what had
-  * grown into three hand-rolled copies in SparkEntry): weak-session
+/** The ONE keyed artifact cache — trained values and persisted
+  * DataFrames alike; every memoized artifact of the query registry
+  * (`graft.registry.Shared`) is one of these: weak-session
   * keying (a dead session's entries collect — an identityHashCode key
   * could be reused by a NEW session after the old one is GC'd),
   * SoftReference values (an artifact references nothing the session
@@ -17,9 +18,11 @@ import org.apache.spark.sql.SparkSession
   * duration); a benign race builds twice and the FIRST published
   * artifact wins for both callers. `onRelease` runs before reset drops
   * an entry, for artifacts that retain off-heap state (checkpoint
-  * blocks). Semantics pinned in SessionKeyedCacheSpec. */
+  * blocks); `onDiscard` (default: `onRelease`) runs on a losing build.
+  * Semantics pinned in SessionKeyedCacheSpec. */
 private[graft] final class SessionKeyedCache[V <: AnyRef](
-    onRelease: V => Unit = (_: V) => ()) {
+    onRelease: V => Unit = (_: V) => (),
+    onDiscard: Option[V => Unit] = None) {
   private val bySession = new java.util.WeakHashMap[SparkSession,
     scala.collection.mutable.HashMap[
       String, java.lang.ref.SoftReference[V]]]()
@@ -44,7 +47,7 @@ private[graft] final class SessionKeyedCache[V <: AnyRef](
       // an artifact type that retains off-heap state (checkpoint blocks,
       // the documented reason onRelease exists) is freed now rather than
       // whenever ContextCleaner catches up
-      if (lost) onRelease(v)
+      if (lost) onDiscard.getOrElse(onRelease)(v)
       result
     }
   }
@@ -56,4 +59,15 @@ private[graft] final class SessionKeyedCache[V <: AnyRef](
     })
     bySession.clear()
   }
+}
+
+private[graft] object SessionKeyedCache {
+  /** A cache of persisted DataFrames (callers build `….persist()`):
+    * reset runs `release`, then unpersists. A losing build only runs
+    * `release`: it is plan-equal to the winner, so its persist found the
+    * winner's CacheManager entry, and unpersisting it would drop that
+    * shared entry under the winner. */
+  def persisted(release: DataFrame => Unit = _ => ()): SessionKeyedCache[DataFrame] =
+    new SessionKeyedCache[DataFrame](
+      df => { release(df); df.unpersist(blocking = false) }, Some(release))
 }

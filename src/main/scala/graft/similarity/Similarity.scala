@@ -1053,7 +1053,7 @@ object Similarity {
 
   /** Seed + `iters` Lloyd rounds on the FULL corpus: the trained coarse
     * quantizer as plain driver values — the TRAINED-ARTIFACT entry
-    * (SparkEntry memoizes one per (session, dir, knobs), the PQ-codebook
+    * (`registry.Shared` memoizes one per (session, dir, knobs), the PQ-codebook
     * pattern: q32's search and the whole q149 family share one training
     * instead of six). Deterministic, so a cached result is
     * value-identical to retraining. */
@@ -1310,7 +1310,7 @@ object Similarity {
       s"trainFraction must be in (0, 1], got $trainFraction")
     val cq = withQuantized(corpus, idCol, embCol, "cv", "cn").drop(embCol)
     // trainedCents: a caller-supplied pre-trained quantizer — the shared-
-    // artifact path (SparkEntry memoizes one [[trainCentroids]] per
+    // artifact path (`registry.Shared` memoizes one [[trainCentroids]] per
     // (session, dir, knobs); q32 and the q149 family train once between
     // them). MUST equal what this function would train itself for the
     // oracle mirror to hold, which the deterministic trainer guarantees

@@ -733,7 +733,7 @@ object CorpusOps {
     * shingle) — the shared front half of [[charDupSpans]] and
     * [[charContamination]]: in a production corpus pipeline the char
     * posting table is materialized once and fanned out to every
-    * char-grain consumer (SparkEntry caches one per (session, dir, k),
+    * char-grain consumer (`registry.Shared` caches one per (session, dir, k),
     * the truth-pair/cluster artifact discipline). */
   def charPostings(docs: DataFrame, idCol: String, textCol: String,
                    k: Int): DataFrame =
@@ -942,7 +942,7 @@ object CorpusOps {
 
   /** [[tfidfCosinePairs]] over an already-built [[TfidfStages]] — the
     * entry for callers that share ONE staged build across several
-    * consumers (SparkEntry memoizes the stages per (session, dir), the
+    * consumers (`registry.Shared` memoizes the stages per (session, dir), the
     * mart/cluster artifact pattern: q158 and its three bisection
     * diagnostics all read the same weighted-postings checkpoint instead
     * of re-running tokenize→tf→join each). */

@@ -1,7 +1,8 @@
 package graft
 
-/** Pins the trained-artifact cache semantics every memoized artifact
-  * (PQ codebooks, IVF centroids, tf-idf stages) relies on: build-once
+/** Pins the cache semantics every memoized artifact (PQ codebooks, IVF
+  * centroids, tf-idf stages, and the persisted mart, cluster, candidate,
+  * truth-pair and posting frames) relies on: build-once
   * per (session, key), first-published-wins under a racing build,
   * release hooks on reset, and key isolation. */
 class SessionKeyedCacheSpec extends SparkSpec {
@@ -59,5 +60,66 @@ class SessionKeyedCacheSpec extends SparkSpec {
     var rebuilt = false
     cache.getOrBuild(spark, "x") { rebuilt = true; "vx2" }
     assert(rebuilt)
+  }
+
+  test("persisted frames: a losing build leaves the plan-equal winner " +
+    "persisted, and only the loser is released") {
+    val released = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val cache = SessionKeyedCache.persisted(df => released.add(df))
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val threads = (1 to 2).map { _ =>
+      new Thread(() => {
+        val df = cache.getOrBuild(spark, "race") {
+          barrier.await() // both threads pass the empty-cache check
+          val d = spark.range(50).selectExpr("id * 7 AS v").persist()
+          built.add(d)
+          d
+        }
+        results.add(df)
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val winner = results.peek()
+    assert(results.toArray.forall(_ eq winner))
+    assert(built.size == 2)
+    assert(winner.asInstanceOf[org.apache.spark.sql.DataFrame]
+      .storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "discarding the losing build unpersisted the winner")
+    assert(released.size == 1 && !(released.peek() eq winner))
+    cache.reset()
+  }
+
+  test("persisted frames: reset releases each frame while it is still " +
+    "persisted, then unpersists it") {
+    import org.apache.spark.storage.StorageLevel
+    val levelAtRelease = scala.collection.mutable.ArrayBuffer.empty[StorageLevel]
+    val cache = SessionKeyedCache.persisted(df => levelAtRelease += df.storageLevel)
+    val df = cache.getOrBuild(spark, "k")(
+      spark.range(20).selectExpr("id + 1 AS w").persist())
+    assert(df.count() == 20L)
+    cache.reset()
+    assert(levelAtRelease.size == 1 && levelAtRelease.head != StorageLevel.NONE)
+    assert(df.storageLevel == StorageLevel.NONE)
+  }
+
+  test("the cluster-label artifact: reset runs dupClusters' " +
+    "releaseClusterState, dropping the snapshots the labels still read") {
+    SparkSpec.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      import spark.implicits._
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val before = persisted
+      val cache = SessionKeyedCache.persisted(
+        graft.dedup.Dedup.releaseClusterState)
+      val pairs = (1L until 400L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val labels = cache.getOrBuild(spark, "clusters")(
+        graft.dedup.Dedup.dupClusters(pairs).persist())
+      assert(labels.count() == 400L)
+      assert((persisted -- before).nonEmpty)
+      cache.reset()
+      assert((persisted -- before).isEmpty,
+        "reset left the cluster state's persistent RDDs behind")
+    }
   }
 }
